@@ -20,13 +20,17 @@ default) has two methods:
 
 - ``count_method="observe"`` (default): every stage output gets a
   ``df.observe(count(*))`` node and the counts are harvested as a side
-  effect of the batch's **single** action (the loader's write) — one
-  Spark job per batch, exact counts. A DataFrame branch the action
-  never executed (e.g. a packets side the loader ignores) is backfilled
-  with one bounded ``count()`` job per dead side by default
-  (``observe_dead_branch="count"``); set it to ``"unknown"`` to keep
-  ``-1`` with zero extra jobs (logged once per run). Batches aborted
-  before any action ran always read ``-1``.
+  effect of the batch's **single** action (the loader's write). The
+  shipped loaders count the rows they write with an observation too,
+  so a batch through them runs one Spark job and reads its input once,
+  with exact counts. A side a transformer passes through unchanged
+  (``out.packets is batch.packets``) shares the observation of the
+  stage that first observed it. Only a side that no action reads (e.g.
+  a packets side the loader ignores and no params were derived from)
+  is backfilled, with one bounded ``count()`` job per dead side by
+  default (``observe_dead_branch="count"``); set it to ``"unknown"`` to
+  keep ``-1`` with zero extra jobs (logged once per run). Batches
+  aborted before any action ran always read ``-1``.
   Because counts only exist after the action, ``batch.extracted`` /
   ``batch.transformed`` hooks fire with ``records=-1`` in this mode;
   StageResult / metrics are backfilled post-action.
@@ -231,7 +235,7 @@ class Pipeline:
             if exc is None:
                 if observing:
                     g = ObservationGroup(f"b{result.batches_processed}:{tname}")
-                    out = g.attach(out)
+                    out = g.attach(out, upstream=groups[-1])
                     groups.append(g)
                     sr = StageResult(tname, StageStatus.SUCCESS, elapsed, -1, -1)
                     result.stage_results.append(sr)

@@ -71,8 +71,9 @@ def write_hdf5(
     mode: str = "a",
     chunk_rows: int = 500_000,
     _h5: Any = None,
-) -> None:
-    """Export tidy samples to one HDF5 file on the driver.
+) -> int:
+    """Export tidy samples to one HDF5 file on the driver; returns the
+    number of rows written.
 
     ``mode="a"`` appends into existing resizable datasets (the
     reference's cross-batch append, ``hdf5.py:111-126``); ``mode="w"``
@@ -145,3 +146,4 @@ def write_hdf5(
             if n % chunk_rows == 0:
                 flush()
         flush()
+    return n

@@ -22,7 +22,14 @@ A task parses from its first locked boundary through the first packet
 that *starts* at or beyond ``range_end`` (reading into the next range's
 bytes for the tail packet) — the same overlap convention that makes
 line-based text splitting exact. Every packet is therefore emitted
-exactly once, by exactly one task.
+exactly once, by exactly one task — **provided the stream's sequence
+counters count per APID**, as CCSDS 133.0-B-2 §4.1.3.4 requires. The
+resync locks only on a header chain whose same-APID sequence counts
+step by exactly 1, so in a stream with one counter shared by all APIDs
+a range start can fail to lock at the true boundary, and the packets
+before its first lock are lost without an error. Scan such a stream
+with one range per file (a ``split_size`` at least the file size) or
+with ``frame_sync``.
 
 At 100 TB this is the right shape: no driver-side parse, no shuffle —
 the scan is embarrassingly parallel over ranges, and the APID filter is
@@ -379,6 +386,12 @@ def _gathered_binary(a, starts, ends):
 
     lens = ends - starts
     total = int(lens.sum())
+    if total >= 2**31:
+        raise ValueError(
+            f"binary scan: one range's column holds {total} bytes, past the "
+            "2 GiB limit of Arrow binary offsets (int32); use a smaller "
+            "split_size"
+        )
     # concatenated gather indices: for each packet i, the range
     # [starts[i], ends[i]) — built with repeat/arange, no Python loop
     pos = np.cumsum(lens) - lens
@@ -546,6 +559,13 @@ def read_packets(
     ceil(size / split_size) ranges, one Spark task each. The default
     128 MiB matches ``spark.sql.files.maxPartitionBytes``.
 
+    Precondition for files split into more than one range: sequence
+    counters count per APID (CCSDS 133.0-B-2 §4.1.3.4). Only then is
+    every packet emitted exactly once at any ``split_size``; a stream
+    with one counter shared by all APIDs can silently lose packets at
+    range starts (module docstring). Without ``frame_sync``, read such
+    a stream with one range per file.
+
     ``apid_filter`` is pushed into the range parser (packets are dropped
     before they ever materialize as rows — reference behavior
     ``binary.py:103-104``).
@@ -571,10 +591,12 @@ def read_packets(
     )
     if not ranges:  # all files empty
         return spark.createDataFrame([], schema=PACKET_SCHEMA)
-    ranges_df = spark.createDataFrame(ranges, schema=_RANGE_SCHEMA)
-    # One task per range: repartition to the number of ranges so no two
-    # ranges serialize behind each other on one core.
-    ranges_df = ranges_df.repartition(len(ranges))
+    # One task per range, so no two ranges serialize behind each other
+    # on one core: one slice per range. A repartition would give the same
+    # tasks through a shuffle that runs as a job of its own before the scan.
+    ranges_df = spark.createDataFrame(
+        spark.sparkContext.parallelize(ranges, len(ranges)), schema=_RANGE_SCHEMA
+    )
     # mapInArrow, not mapInPandas: packet columns are built as Arrow
     # arrays directly (vectorized binary gathers, zero-copy ints) —
     # pandas object columns for 200k binary cells cost more than the

@@ -31,6 +31,7 @@ from mission_data_pipeline_spark.core.base import (
     TelemetryBatch,
     Transformer,
 )
+from mission_data_pipeline_spark.core.observe import observe_rows, observed_rows
 from mission_data_pipeline_spark.core.registry import registry
 from mission_data_pipeline_spark.operators import (
     Calibration,
@@ -273,23 +274,23 @@ class ParquetLoader(Loader):
         # Across batches of one run, only the first write may truncate.
         overwrite = cfg.overwrite and self._batches_seen == 0
         self._batches_seen += 1
-        n = batch.params.count()
+        params, obs = observe_rows(batch.params, "parquet-loader")
         if cfg.layout == "wide":
             write_parquet_wide(
-                batch.params,
+                params,
                 cfg.output_dir,
                 compression=cfg.compression,
                 overwrite=overwrite,
             )
         else:
             write_parquet_per_parameter(
-                batch.params,
+                params,
                 cfg.output_dir,
                 compression=cfg.compression,
                 partition_by_apid=cfg.partition_by_apid,
                 overwrite=overwrite,
             )
-        return n
+        return observed_rows(params, obs)
 
 
 class CsvLoaderConfig(StageConfig):
@@ -320,15 +321,15 @@ class CsvLoader(Loader):
             raise ValueError("csv loader requires a params DataFrame")
         overwrite = cfg.overwrite and self._batches_seen == 0
         self._batches_seen += 1
-        n = batch.params.count()
+        params, obs = observe_rows(batch.params, "csv-loader")
         writer = write_csv_wide if cfg.layout == "wide" else write_csv_per_parameter
         writer(
-            batch.params,
+            params,
             cfg.output_dir,
             overwrite=overwrite,
             float_digits=cfg.float_digits,
         )
-        return n
+        return observed_rows(params, obs)
 
 
 class Hdf5LoaderConfig(StageConfig):
@@ -354,6 +355,4 @@ class Hdf5Loader(Loader):
             raise ValueError("hdf5 loader requires a params DataFrame")
         mode = "w" if (cfg.overwrite and self._batches_seen == 0) else "a"
         self._batches_seen += 1
-        n = batch.params.count()
-        write_hdf5(batch.params, cfg.output_path, mode=mode)
-        return n
+        return write_hdf5(batch.params, cfg.output_path, mode=mode)

@@ -323,3 +323,52 @@ def test_ccsds_stream_reader_byte_budget_and_stuck_tail(tmp_path):
     assert o["files"][f"{src}/a.bin"] == size
     it, o = skip.read(o)
     assert list(it) == []        # clean: nothing re-read afterwards
+
+
+def test_per_apid_counted_stream_identical_offsets_across_splits(spark, tmp_root):
+    """A mixed-length, mixed-APID stream whose sequence counters count
+    per APID (CCSDS 133.0-B-2) yields the same file_offset set at 4 KiB,
+    64 KiB and default splits, with one scan task per range and no
+    shuffle in the plan."""
+    import random
+
+    from mission_data_pipeline_spark.models.ccsds import build_packet
+    from mission_data_pipeline_spark.sources.binary import plan_ranges
+
+    rng = random.Random(7)
+    user_len = {0x100: 12, 0x200: 8, 0x300: 10}
+    seq = dict.fromkeys(user_len, 0)
+    out, offsets = bytearray(), set()
+    for _ in range(8_000):
+        apid = rng.choices(list(user_len), weights=[5, 3, 2])[0]
+        offsets.add(len(out))
+        user = bytes(rng.getrandbits(8) for _ in range(user_len[apid]))
+        out += build_packet(apid, seq[apid], user, sec_hdr=len(out).to_bytes(4, "big"))
+        seq[apid] += 1
+    p = tmp_root / "per_apid.bin"
+    p.write_bytes(bytes(out))
+
+    for split in (4 * 1024, 64 * 1024, None):
+        kw = {"split_size": split} if split else {}
+        df = read_packets(spark, str(p), sec_hdr_length=4, **kw)
+        n_ranges = len(plan_ranges(str(p), **kw))
+        assert df.rdd.getNumPartitions() == n_ranges
+        assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+        got = [r["file_offset"] for r in df.select("file_offset").collect()]
+        assert len(got) == len(offsets), f"split {split}"
+        assert set(got) == offsets, f"split {split}"
+
+
+def test_gathered_binary_refuses_offsets_past_2gib():
+    """Arrow binary offsets are int32: a range whose column reaches
+    2 GiB must fail loudly, not wrap into corrupt offsets."""
+    import numpy as np
+
+    from mission_data_pipeline_spark.sources.binary import _gathered_binary
+
+    a = np.zeros(16, dtype=np.uint8)
+    starts = np.zeros(2, dtype=np.int64)
+    with pytest.raises(ValueError, match="2 GiB"):
+        _gathered_binary(a, starts, np.array([2**30, 2**30], dtype=np.int64))
+    small = _gathered_binary(a, starts, np.array([3, 5], dtype=np.int64))
+    assert [len(v) for v in small.to_pylist()] == [3, 5]

@@ -96,8 +96,8 @@ def test_hdf5_write_and_readback_real_bytes(spark, params_df, tmp_path):
     from mission_data_pipeline_spark.sinks import hdf5_pure
 
     out = str(tmp_path / "t.h5")
-    write_hdf5(params_df, out, mode="w")
-    write_hdf5(params_df.filter("name = 'volt'"), out)  # append
+    assert write_hdf5(params_df, out, mode="w") == 5  # rows written
+    assert write_hdf5(params_df.filter("name = 'volt'"), out) == 2  # append
     assert open(out, "rb").read(8) == b"\x89HDF\r\n\x1a\n"
     backend = h5py if h5py is not None else hdf5_pure
     with backend.File(out, "r") as f:

@@ -605,9 +605,10 @@ def test_heldout_backoff_branches(spark):
 
 
 def test_heldout_backoff_single_pass_train_identical(spark):
-    """single_pass_train=True (one (gh,hh) pair-count table deriving
-    cb/ch, ctot from cf — the corpus-scale shape) must produce exactly
-    the default two-pass form's rows, all three branches included."""
+    """single_pass_train=True (the default: one (gh,hh) pair-count table
+    deriving cb/ch, ctot from cf — the corpus-scale shape) must produce
+    exactly the two-pass form's rows (single_pass_train=False), all
+    three branches included."""
     from mission_data_pipeline_spark.operators.text import (
         heldout_backoff_logprob,
     )
@@ -621,7 +622,12 @@ def test_heldout_backoff_single_pass_train_identical(spark):
         "doc_id long, text string",
     )
     two = sorted(
-        map(tuple, heldout_backoff_logprob(train, score).collect())
+        map(
+            tuple,
+            heldout_backoff_logprob(
+                train, score, single_pass_train=False
+            ).collect(),
+        )
     )
     one = sorted(
         map(
