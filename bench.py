@@ -413,6 +413,8 @@ def main() -> None:
         "queries_noop": {},
         "sf": sf_label,
         "layout": layout,
+        # the tripwire compares only runs on the same core count
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     total = 0.0
     shuffle_bytes: dict = {}
@@ -577,7 +579,8 @@ def main() -> None:
 
 def _regressions(out: dict) -> list[dict]:
     """Tripwire: flag any per-query noop time >2x its value in the most
-    recent recorded BENCH_r{N}.json at the same sf and layout mode, so a
+    recent recorded BENCH_r{N}.json at the same sf, layout mode and
+    ``cpus`` (a baseline without ``cpus`` is skipped), so a
     regression surfaces in the driver's own run without a judge diff.
     Informational — this host's co-tenant noise (16x swings recorded in
     BASELINE.md round 3) means a flag is a prompt to re-measure, not
@@ -634,6 +637,8 @@ def _regressions(out: dict) -> list[dict]:
             else ref_layout
         )
         if ref_mode != out["layout"]["mode"]:
+            continue
+        if ref.get("cpus") != out["cpus"]:
             continue
         flags = []
         for series in ("queries_noop", "extended_queries", "capstone_queries"):

@@ -50,29 +50,34 @@ def __getattr__(name):
     return getattr(_core, name)
 
 
-# Driver-check ordering (STALEST-FIRST, regenerated per round from the
-# CORRECTNESS_r0*.json history). The driver verifies the first ~50
-# QUERIES entries per round. Round 15 = optimization round 2: every
-# query whose PHYSICAL PLAN or Python internals this round's commits
-# touched sits inside the 50-query window (slots 1-17 — the Q3
-# build-side CTE pair, the substring-dedup default revert, the two
-# read_packets consumers of the mapInArrow scan, the eight jpeg/flac-
-# consuming media queries after the batched IDCT, and the heldout LM
-# scorer whose train side gained the opt-in single-pass form). Slots
-# 16-42 retire the ENTIRE remaining r09-stale overflow (the queries
-# the r14 cut displaced — after this round no driver check is older
-# than r10, VERDICT r14 item 9). The cut at 50 keeps the FIVE
-# designated STATIC PURE-SQL roll-overs (oracle+lint+perturb-swept
-# locally at sf0.01 AND sfx1 every round by scripts/round_gate.sh)
-# placed AT the cut so the r13 slot-51 staleness failure mode cannot
-# recur; the three alphabetically-first r10-stale queries fill slots 43-45.
+# Check ordering (STALEST-FIRST, regenerated per round from the
+# CORRECTNESS_r*.json history). The per-round correctness check verifies
+# the first ~50 QUERIES entries. Slots 1-2 hold the two queries that run
+# the ccsds Data Source readers, whose packet builder changed after the
+# r15 check; the ETL slice, which runs the read_packets scan, is at slot
+# 6. Slots 3-17 keep r15's plan-changed / Python-internals-changed block
+# (the Q3 build-side CTE pair, the substring-dedup BPE variant, the two
+# read_packets consumers of the mapInArrow scan, the eight
+# jpeg/flac-consuming media queries after the batched IDCT, the heldout
+# LM scorer, and curation_html_extract); x2_substring_dedup and
+# curation_shard_build_e2e yielded their slots to the two ccsds queries,
+# being the least stale in the window (also checked in r14). Slots 18-44
+# retire the ENTIRE remaining r09-stale overflow (the queries the r14
+# cut displaced — no check is older than r10, VERDICT r14 item 9). Slot
+# 45 is the alphabetically-first r10-stale query. The cut at 50 keeps
+# the FIVE designated STATIC PURE-SQL roll-overs
+# (oracle+lint+perturb-swept locally at sf0.01 AND sfx1 every round by
+# scripts/round_gate.sh) in slots 46-50, AT the cut, so the r13 slot-51
+# staleness failure mode cannot recur.
 # ---------------------------------------------------------------------------
 
 _CHECK_FIRST = [
-    # --- r15 plan-changed / Python-internals-changed (slots 1-15) ---
+    # --- ccsds Data Source readers changed since r15 (slots 1-2) ---
+    "s1_ccsds_datasource_scan",
+    "s1_ccsds_streaming_tail",
+    # --- r15 plan-changed / Python-internals-changed (slots 3-17) ---
     "q3_shipping_priority",
     "q3_bucketed_colocated",
-    "x2_substring_dedup",
     "x2_substring_dedup_bpe",
     "etl_binary_decom_calibrate_e2e",
     "frames_to_packets_roundtrip",
@@ -85,7 +90,6 @@ _CHECK_FIRST = [
     "x5_image_dhash_near_dup",
     "x5_multimodal_features",
     "x4_heldout_backoff_logprob",
-    "curation_shard_build_e2e",
     "curation_html_extract",
     # --- the r09-stale overflow, retired in full (slots 18-44) ---
     "decode_golden_matrix",
@@ -115,10 +119,7 @@ _CHECK_FIRST = [
     "x3_prototype_prune",
     "x4_token_count_bpe",
     "x5_frame_sample",
-    # --- stalest remaining (r10) filler, alphabetical (slot 45;
-    # agg_salted_avg and agg_having yielded their slots to the capstone
-    # and html_extract, whose plans changed this round and MUST be in
-    # the window) ---
+    # --- stalest remaining (r10) filler, alphabetical (slot 45) ---
     "agg_global_stats",
     # --- the designated static pure-SQL roll-overs AT the cut ---
     "set_except",

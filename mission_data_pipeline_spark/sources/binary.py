@@ -40,10 +40,12 @@ from __future__ import annotations
 
 import logging
 import os
-from collections.abc import Iterator
 from glob import glob
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from mission_data_pipeline_spark.models.ccsds import (
     CCSDS_SYNC_MARKER,
@@ -55,8 +57,13 @@ _RANGE_SCHEMA = (
     "path string, range_start long, range_end long, file_size long, "
     "sec_hdr_length int, frame_sync boolean, source_id string, "
     "ground_receipt_time double, max_packet_len int, resync_chain int, "
-    "weak_resync boolean, apid_filter array<int>"
+    "apid_filter array<int>"
 )
+
+#: The Arrow form of PACKET_SCHEMA, nullability included. Every packet
+#: batch is built against it: the streaming source runner rejects a
+#: batch whose schema differs from the declared one in any field flag.
+_PACKET_ARROW_SCHEMA = to_arrow_schema(PACKET_SCHEMA)
 
 
 logger = logging.getLogger(__name__)
@@ -73,7 +80,6 @@ def _chain_locks(
     max_packet_len: int,
     chain: int,
     eof_in_buf: bool,
-    weak: bool = False,
 ) -> bool:
     """Does a validated header chain lock at ``pos``?
 
@@ -110,14 +116,6 @@ def _chain_locks(
     - ``chain == 0`` — explicit weak mode (first plausible header wins),
       the escape hatch for streams whose APIDs never repeat within a
       range (then run with a single range or frame_sync instead).
-
-    ``weak=True`` lowers the bar to ``chain`` *plausible complete*
-    packets with no observed seq violation (the pre-confirmation rule).
-    It exists solely as the fallback for ranges where the strict rule can
-    never confirm — many distinct APIDs, none repeating within the tail
-    window — where the strict-only behavior is silent loss of the whole
-    range. Callers use it only after a full strict pass found nothing,
-    and log a warning when they do.
     """
     n = len(buf)
     p = pos
@@ -151,8 +149,6 @@ def _chain_locks(
         if p + plen > n:
             return False  # claims bytes beyond the buffer before confirming
         complete += 1
-        if weak and complete >= chain:
-            return True
         p += plen
     # Ran out of header-sized bytes without a violation: only an exact
     # landing on true EOF is acceptable below the confirmation bar — and
@@ -169,38 +165,14 @@ def _resync_heuristic(
     max_packet_len: int,
     chain: int,
     eof_in_buf: bool = False,
-    allow_weak_fallback: bool = False,
 ) -> int:
     """First offset in [start, limit) where a validated header chain locks
-    (see ``_chain_locks`` for the acceptance rule).
-
-    With ``allow_weak_fallback``, a range where the strict rule confirms
-    *nowhere* is rescanned under the weak complete-count rule instead of
-    silently emitting zero packets — the legitimate case is a stream
-    whose APIDs never repeat inside one range/tail window, where strict
-    confirmation is unattainable by construction. The fallback is logged:
-    a weak lock on genuinely corrupt bytes can admit phantom packets, so
-    operators should prefer frame_sync or larger ranges for such streams.
-    """
+    (see ``_chain_locks`` for the acceptance rule)."""
     pos = start
     while pos < limit:
         if _chain_locks(buf, pos, max_packet_len, chain, eof_in_buf):
             return pos
         pos += 1
-    if allow_weak_fallback and chain > 0 and limit > start:
-        pos = start
-        while pos < limit:
-            if _chain_locks(buf, pos, max_packet_len, chain, eof_in_buf, weak=True):
-                logger.warning(
-                    "binary scan: strict resync confirmed nowhere in a "
-                    "%d-byte range; locked at +%d under the weak "
-                    "complete-count rule (APIDs may never repeat in-range "
-                    "— consider frame_sync or larger split_size)",
-                    limit - start,
-                    pos - start,
-                )
-                return pos
-            pos += 1
     return -1
 
 
@@ -228,15 +200,13 @@ def _walk_offsets(buf: bytes, row: dict, *, eof_in_buf: bool) -> list[int]:
         if frame_sync:
             pos = _find_sync(buf, 0)
         else:
-            # Weak fallback only when the caller opted in: a range that is
-            # entirely the interior of one huge packet legitimately owns
-            # zero packets, and a weak lock there would emit phantom rows
-            # duplicating bytes the previous range already consumed. The
-            # default is strict + a loud warning so silent-loss streams
-            # (APIDs never repeating in-range) are at least diagnosable.
+            # Strict lock only: a range that is entirely the interior of
+            # one huge packet legitimately owns zero packets, and any
+            # looser rule would emit phantom rows from bytes the previous
+            # range already consumed. A range that locks nowhere is
+            # logged so silent-loss streams are at least diagnosable.
             pos = _resync_heuristic(
-                buf, 0, local_end, max_packet_len, chain, eof_in_buf,
-                allow_weak_fallback=bool(row.get("weak_resync")),
+                buf, 0, local_end, max_packet_len, chain, eof_in_buf
             )
             if pos < 0 and local_end > 0:
                 logger.warning(
@@ -244,8 +214,7 @@ def _walk_offsets(buf: bytes, row: dict, *, eof_in_buf: bool) -> list[int]:
                     "in a %d-byte range starting at file offset %d — range "
                     "emits zero packets (interior of a larger packet, or a "
                     "stream whose APIDs never repeat in-range; for the "
-                    "latter pass weak_resync=True, frame_sync, or a larger "
-                    "split_size)",
+                    "latter use frame_sync or a larger split_size)",
                     local_end,
                     range_start,
                 )
@@ -280,76 +249,6 @@ def _walk_offsets(buf: bytes, row: dict, *, eof_in_buf: bool) -> list[int]:
     return offs
 
 
-def _header_fields(buf: bytes, offs: list[int], row: dict) -> tuple:
-    """Shared vectorized header-field extraction (APID pushdown applied).
-
-    Returns ``(a, o, w0, w1, w2, apid, sec_hdr_flag, data_start,
-    user_start, data_end)`` — consumed by both the row-dict builder
-    (:func:`_columns_from_offsets`) and the Arrow-batch builder
-    (:func:`_arrow_batch_from_offsets`)."""
-    import numpy as np
-
-    sec_hdr_length = int(row["sec_hdr_length"])
-    apids = row["apid_filter"]
-
-    a = np.frombuffer(buf, dtype=np.uint8)
-    o = np.asarray(offs, dtype=np.int64)
-    w0 = (a[o].astype(np.int32) << 8) | a[o + 1]
-    w1 = (a[o + 2].astype(np.int32) << 8) | a[o + 3]
-    w2 = (a[o + 4].astype(np.int32) << 8) | a[o + 5]
-    apid = w0 & 0x7FF
-    if apids is not None and len(apids):
-        keep = np.isin(apid, np.asarray(list(apids), dtype=np.int32))
-        o, w0, w1, w2, apid = o[keep], w0[keep], w1[keep], w2[keep], apid[keep]
-
-    sec_hdr_flag = (w0 >> 11) & 0x1
-    data_start = o + PRIMARY_HEADER_LEN
-    data_end = data_start + w2 + 1
-    n_sec = np.where(sec_hdr_flag == 1, sec_hdr_length, 0)
-    # Clamp to the packet's own data field: a malformed packet whose data
-    # field is shorter than sec_hdr_length must truncate its sec_hdr at
-    # the packet boundary, never leak the next packet's header bytes.
-    user_start = np.minimum(data_start + n_sec, data_end)
-    return (a, o, w0, w1, w2, apid, sec_hdr_flag, data_start, user_start,
-            data_end)
-
-
-def _columns_from_offsets(buf: bytes, offs: list[int], row: dict) -> dict:
-    """Vectorized header-field extraction → column dict (PACKET_SCHEMA order)."""
-    range_start = int(row["range_start"])
-    sec_hdr_length = int(row["sec_hdr_length"])
-    (a, o, w0, w1, w2, apid, sec_hdr_flag, data_start, user_start,
-     data_end) = _header_fields(buf, offs, row)
-    # Binary columns need one Python bytes object per packet regardless;
-    # this zip loop is the only remaining per-packet work.
-    if sec_hdr_length:
-        sec_hdr = [
-            buf[s:u] if u > s else None
-            for s, u in zip(data_start.tolist(), user_start.tolist())
-        ]
-    else:
-        sec_hdr = [None] * len(o)
-    user_data = [buf[u:e] for u, e in zip(user_start.tolist(), data_end.tolist())]
-
-    k = len(o)
-    return {
-        "apid": apid,
-        "version": (w0 >> 13) & 0x7,
-        "packet_type": (w0 >> 12) & 0x1,
-        "sec_hdr_flag": sec_hdr_flag,
-        "seq_flags": (w1 >> 14) & 0x3,
-        "seq_count": w1 & 0x3FFF,
-        "data_length": w2,
-        "sec_hdr": sec_hdr,
-        "user_data": user_data,
-        "source_time_tai": [None] * k,
-        "ground_receipt_time": [row["ground_receipt_time"]] * k,
-        "source_id": [row["source_id"]] * k,
-        "file_path": [row["path"]] * k,
-        "file_offset": o + range_start,
-    }
-
-
 def _read_range_buffer(row: dict) -> tuple[bytes, bool]:
     """Read one scan range plus the tail overlap (so the packet
     straddling range_end can be completed by *this* task). Returns
@@ -369,21 +268,12 @@ def _read_range_buffer(row: dict) -> tuple[bytes, bool]:
     return buf, read_end >= file_size
 
 
-def _parse_range(row: dict) -> dict:
-    """Parse one byte range of one file into a packet column dict."""
-    buf, eof = _read_range_buffer(row)
-    return _columns_from_offsets(buf, _walk_offsets(buf, row, eof_in_buf=eof), row)
-
-
 def _gathered_binary(a, starts, ends):
     """Arrow binary array of ``buf[starts[i]:ends[i]]`` slices, built by
     ONE vectorized gather over the range buffer instead of one Python
     bytes object per packet (guide §4.2: re-slicing bytes is an offsets
     computation, not a copy loop). ``a`` is the uint8 view of the
     buffer."""
-    import numpy as np
-    import pyarrow as pa
-
     lens = ends - starts
     total = int(lens.sum())
     if total >= 2**31:
@@ -406,25 +296,43 @@ def _gathered_binary(a, starts, ends):
     )
 
 
-def _arrow_batch_from_offsets(buf: bytes, offs: list[int], row: dict):
-    """PACKET_SCHEMA Arrow record batch for one parsed range.
+def _arrow_batch_from_offsets(
+    buf: bytes, offs: list[int], row: dict
+) -> pa.RecordBatch:
+    """PACKET_SCHEMA Arrow record batch of the packets starting at
+    ``offs`` in ``buf`` — the one builder of packet rows, shared by
+    :func:`read_packets` and both ``ccsds`` Data Source readers.
 
-    The batch path of :func:`read_packets`: header fields become
-    zero-copy int arrays and the binary payload columns are built by one
-    vectorized gather each — no per-packet Python objects, no pandas
-    object columns. The row-dict builder (:func:`_columns_from_offsets`)
-    stays for the streaming/datasource consumers."""
-    import numpy as np
-    import pyarrow as pa
-
+    Header fields become zero-copy int arrays (APID pushdown applied
+    here) and the binary payload columns are built by one vectorized
+    gather each — no per-packet Python objects."""
     range_start = int(row["range_start"])
-    (a, o, w0, w1, w2, apid, sec_hdr_flag, data_start, user_start,
-     data_end) = _header_fields(buf, offs, row)
+    sec_hdr_length = int(row["sec_hdr_length"])
+    apids = row["apid_filter"]
+
+    a = np.frombuffer(buf, dtype=np.uint8)
+    o = np.asarray(offs, dtype=np.int64)
+    w0 = (a[o].astype(np.int32) << 8) | a[o + 1]
+    w1 = (a[o + 2].astype(np.int32) << 8) | a[o + 3]
+    w2 = (a[o + 4].astype(np.int32) << 8) | a[o + 5]
+    apid = w0 & 0x7FF
+    if apids is not None and len(apids):
+        keep = np.isin(apid, np.asarray(list(apids), dtype=np.int32))
+        o, w0, w1, w2, apid = o[keep], w0[keep], w1[keep], w2[keep], apid[keep]
     k = len(o)
 
+    sec_hdr_flag = (w0 >> 11) & 0x1
+    data_start = o + PRIMARY_HEADER_LEN
+    data_end = data_start + w2 + 1
+    n_sec = np.where(sec_hdr_flag == 1, sec_hdr_length, 0)
+    # Clamp to the packet's own data field: a malformed packet whose data
+    # field is shorter than sec_hdr_length must truncate its sec_hdr at
+    # the packet boundary, never leak the next packet's header bytes.
+    user_start = np.minimum(data_start + n_sec, data_end)
+
     sec_hdr = _gathered_binary(a, data_start, user_start)
-    if int(row["sec_hdr_length"]):
-        # zero-length sec_hdr is NULL (row-dict builder parity)
+    if sec_hdr_length:
+        # a zero-length sec_hdr is NULL, not b""
         valid = user_start > data_start
         if not valid.all():
             sec_hdr = pa.Array.from_buffers(
@@ -460,32 +368,23 @@ def _arrow_batch_from_offsets(buf: bytes, offs: list[int], row: dict):
         const(row["path"], pa.string()),
         pa.array(o + range_start, pa.int64()),
     ]
-    return pa.RecordBatch.from_arrays(
-        arrays, [f.name for f in PACKET_SCHEMA.fields]
+    return pa.RecordBatch.from_arrays(arrays, schema=_PACKET_ARROW_SCHEMA)
+
+
+def _scan_range(row: dict) -> pa.RecordBatch:
+    """Read, walk and build one scan range (a :func:`plan_ranges`
+    descriptor) into its packet batch."""
+    buf, eof = _read_range_buffer(row)
+    return _arrow_batch_from_offsets(
+        buf, _walk_offsets(buf, row, eof_in_buf=eof), row
     )
-
-
-def _parse_buffer(buf: bytes, row: dict, *, eof_in_buf: bool) -> Iterator[dict]:
-    """Parse packets out of one in-memory buffer as row dicts (streaming path)."""
-    cols = _columns_from_offsets(
-        buf, _walk_offsets(buf, row, eof_in_buf=eof_in_buf), row
-    )
-    names = list(cols)
-    for i in range(len(cols["apid"])):
-        yield {name: _py(cols[name][i]) for name in names}
-
-
-def _py(v):  # numpy scalar → python scalar for row-dict consumers
-    return v.item() if hasattr(v, "item") else v
 
 
 def _split_ranges_arrow(batches):
     """mapInArrow body: range-descriptor batches in, packet batches out."""
     for b in batches:
         for row in b.to_pylist():
-            buf, eof = _read_range_buffer(row)
-            offs = _walk_offsets(buf, row, eof_in_buf=eof)
-            yield _arrow_batch_from_offsets(buf, offs, row)
+            yield _scan_range(row)
 
 
 def plan_ranges(
@@ -499,7 +398,6 @@ def plan_ranges(
     split_size: int = 128 * 1024 * 1024,
     max_packet_len: int = 65542,
     resync_chain: int = 2,
-    weak_resync: bool = False,
 ) -> list[dict]:
     """Resolve paths/globs and carve them into scan-range descriptors
     (one per future task) — shared by :func:`read_packets` and the
@@ -531,7 +429,6 @@ def plan_ranges(
                     "ground_receipt_time": ground_receipt_time,
                     "max_packet_len": max_packet_len,
                     "resync_chain": resync_chain,
-                    "weak_resync": weak_resync,
                     "apid_filter": apid_filter,
                 }
             )
@@ -551,7 +448,6 @@ def read_packets(
     split_size: int = 128 * 1024 * 1024,
     max_packet_len: int = 65542,
     resync_chain: int = 2,
-    weak_resync: bool = False,
 ) -> DataFrame:
     """Scan CCSDS binary file(s) into a ``packets_df`` (PACKET_SCHEMA).
 
@@ -569,13 +465,6 @@ def read_packets(
     ``apid_filter`` is pushed into the range parser (packets are dropped
     before they ever materialize as rows — reference behavior
     ``binary.py:103-104``).
-
-    ``weak_resync=True`` lets a range where the strict chain-confirmation
-    rule locks nowhere fall back to the weaker complete-count rule
-    (logged). Off by default: the fallback can emit phantom packets from
-    payload bytes of a packet owned by the previous range, breaking the
-    multi-range exactly-once invariant — enable it only for streams whose
-    APIDs genuinely never repeat within a split.
     """
     ranges = plan_ranges(
         path,
@@ -587,7 +476,6 @@ def read_packets(
         split_size=split_size,
         max_packet_len=max_packet_len,
         resync_chain=resync_chain,
-        weak_resync=weak_resync,
     )
     if not ranges:  # all files empty
         return spark.createDataFrame([], schema=PACKET_SCHEMA)

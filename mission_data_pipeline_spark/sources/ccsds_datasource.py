@@ -1,13 +1,14 @@
 """``spark.read.format("ccsds")`` — Python Data Source (V2) wrapper
 around the split-range CCSDS binary scan.
 
-The engine's native entry point is :func:`sources.binary.read_packets`
-(ranges DataFrame + ``mapInPandas``); this module packages the SAME
-range planner and range parser as a PySpark 4 ``DataSource`` so the
+The engine's batch scan is :func:`sources.binary.read_packets`
+(ranges DataFrame + ``mapInArrow``); this module packages the SAME
+range planner and packet builder as a PySpark 4 ``DataSource`` so the
 scan gets first-class reader ergonomics: a registered format name,
 options through ``.option(...)``, a real scan node in the plan (with
 scan metrics), and composability with ``.schema()``-less loading.
-SURVEY §4.2 option (b).
+SURVEY §4.2 option (b). ``spark.readStream.format("ccsds")`` is the
+engine's one streaming packet source.
 
     from mission_data_pipeline_spark.sources import register_ccsds_source
     register_ccsds_source(spark)
@@ -21,7 +22,9 @@ Scale shape is identical to ``read_packets``: ``partitions()`` plans one
 no data is read), ``read()`` parses its range on the executor and
 emits one Arrow ``RecordBatch`` (zero row-by-row Python), with the
 APID pushdown applied inside the range parser. Exactly-once across
-ranges comes from the same resync + tail-overlap convention.
+ranges comes from the same resync + tail-overlap convention. Both
+readers build every packet row with the batch scan's
+``_arrow_batch_from_offsets``.
 """
 
 from __future__ import annotations
@@ -43,39 +46,35 @@ from pyspark.sql.types import StructType
 
 from mission_data_pipeline_spark.models.schemas import PACKET_SCHEMA
 from mission_data_pipeline_spark.sources.binary import (
-    _columns_from_offsets,
-    _parse_buffer,
-    _parse_range,
-    _py as _py_scalar,
+    _arrow_batch_from_offsets,
+    _scan_range,
     _walk_offsets,
     plan_ranges,
-)
-
-#: Arrow schema mirroring PACKET_SCHEMA (names/types must match what the
-#: reader yields; Spark maps arrow int32/int64/float64/binary/string back
-#: to the declared source schema).
-_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("apid", pa.int32()),
-        pa.field("version", pa.int32()),
-        pa.field("packet_type", pa.int32()),
-        pa.field("sec_hdr_flag", pa.int32()),
-        pa.field("seq_flags", pa.int32()),
-        pa.field("seq_count", pa.int32()),
-        pa.field("data_length", pa.int32()),
-        pa.field("sec_hdr", pa.binary()),
-        pa.field("user_data", pa.binary()),
-        pa.field("source_time_tai", pa.float64()),
-        pa.field("ground_receipt_time", pa.float64()),
-        pa.field("source_id", pa.string()),
-        pa.field("file_path", pa.string()),
-        pa.field("file_offset", pa.int64()),
-    ]
 )
 
 _TRUE = {"true", "1", "yes"}
 
 log = logging.getLogger("mission_data_pipeline_spark.sources.ccsds")
+
+
+def _scan_options(options: dict) -> dict:
+    """The ``ccsds`` options both readers share, parsed from their
+    string form into :func:`plan_ranges` keyword arguments."""
+    apids = options.get("apid_filter")
+    grt = options.get("ground_receipt_time")
+    return {
+        "apid_filter": (
+            [int(a) for a in str(apids).split(",") if a.strip()]
+            if apids
+            else None
+        ),
+        "sec_hdr_length": int(options.get("sec_hdr_length", 0)),
+        "frame_sync": str(options.get("frame_sync", "false")).lower() in _TRUE,
+        "source_id": options.get("source_id"),
+        "ground_receipt_time": float(grt) if grt is not None else None,
+        "max_packet_len": int(options.get("max_packet_len", 65542)),
+        "resync_chain": int(options.get("resync_chain", 2)),
+    }
 
 
 class CcsdsDataSource(DataSource):
@@ -103,27 +102,10 @@ class CcsdsReader(DataSourceReader):
                 "ccsds source needs a path: spark.read.format('ccsds')"
                 ".load('/data/*.bin') or .option('path', ...)"
             )
-        apids = options.get("apid_filter")
         self._ranges = plan_ranges(
             path,
-            apid_filter=(
-                [int(a) for a in str(apids).split(",") if a.strip()]
-                if apids
-                else None
-            ),
-            sec_hdr_length=int(options.get("sec_hdr_length", 0)),
-            frame_sync=str(options.get("frame_sync", "false")).lower() in _TRUE,
-            source_id=options.get("source_id"),
-            ground_receipt_time=(
-                float(options["ground_receipt_time"])
-                if options.get("ground_receipt_time") is not None
-                else None
-            ),
             split_size=int(options.get("split_size", 128 * 1024 * 1024)),
-            max_packet_len=int(options.get("max_packet_len", 65542)),
-            resync_chain=int(options.get("resync_chain", 2)),
-            weak_resync=str(options.get("weak_resync", "false")).lower()
-            in _TRUE,
+            **_scan_options(options),
         )
 
     def partitions(self) -> list[InputPartition]:
@@ -137,11 +119,7 @@ class CcsdsReader(DataSourceReader):
     def read(self, partition: InputPartition) -> Iterator[pa.RecordBatch]:
         if partition.value is None:
             return
-        cols = _parse_range(partition.value)
-        yield pa.RecordBatch.from_pydict(
-            {f.name: list(cols[f.name]) for f in _ARROW_SCHEMA},
-            schema=_ARROW_SCHEMA,
-        )
+        yield _scan_range(partition.value)
 
 
 class CcsdsStreamReader(SimpleDataSourceStreamReader):
@@ -167,7 +145,11 @@ class CcsdsStreamReader(SimpleDataSourceStreamReader):
       start against months of recordings) drains over several batches
       instead of one driver-memory spike. Splitting mid-file is safe by
       construction: the walk consumes only complete packets inside the
-      window and the offset stays on a packet boundary.
+      window and the offset stays on a packet boundary. An
+      ``availableNow`` run drains at most ONE such window: Spark asks
+      for the latest offset once per run, so the rest of a backlog
+      waits for the next run, which continues from the committed
+      offset.
     - ``skip_stuck_tail_after`` (default 0 = off): a *garbage* tail
       after the last complete packet can never parse, so the offset
       would re-read and re-parse it every micro-batch forever. When set
@@ -192,30 +174,7 @@ class CcsdsStreamReader(SimpleDataSourceStreamReader):
         self._skip_stuck_after = int(options.get("skip_stuck_tail_after", 0))
         #: path -> [(offset, size), consecutive_no_progress_batches]
         self._stall: dict[str, list] = {}
-        self._opts = {
-            "sec_hdr_length": int(options.get("sec_hdr_length", 0)),
-            "frame_sync": str(options.get("frame_sync", "false")).lower()
-            in _TRUE,
-            "source_id": options.get("source_id"),
-            "ground_receipt_time": (
-                float(options["ground_receipt_time"])
-                if options.get("ground_receipt_time") is not None
-                else None
-            ),
-            "max_packet_len": int(options.get("max_packet_len", 65542)),
-            "resync_chain": int(options.get("resync_chain", 2)),
-            "weak_resync": str(options.get("weak_resync", "false")).lower()
-            in _TRUE,
-            "apid_filter": (
-                [
-                    int(a)
-                    for a in str(options["apid_filter"]).split(",")
-                    if a.strip()
-                ]
-                if options.get("apid_filter")
-                else None
-            ),
-        }
+        self._opts = _scan_options(options)
 
     def _files(self) -> list[str]:
         p = self._path
@@ -234,8 +193,7 @@ class CcsdsStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start: dict):
         consumed = dict(start.get("files", {}))
-        rows: list[tuple] = []
-        names = [f.name for f in PACKET_SCHEMA.fields]
+        batches: list[pa.RecordBatch] = []
         budget = self._max_bytes
         for path in self._files():
             if budget <= 0:
@@ -296,36 +254,35 @@ class CcsdsStreamReader(SimpleDataSourceStreamReader):
                         self._stall[path] = [key, 1]
                 else:
                     self._stall.pop(path, None)
-            cols = _columns_from_offsets(buf, offs, row)
-            for i in range(len(cols["apid"])):
-                rows.append(
-                    tuple(_py_scalar(cols[n][i]) for n in names)
-                )
-        return iter(rows), {"files": consumed}
+            batch = _arrow_batch_from_offsets(buf, offs, row)
+            # Keep only batches with rows: when no offset moves (a stuck
+            # tail), Spark refuses a read that yields anything at all,
+            # an empty batch included.
+            if batch.num_rows:
+                batches.append(batch)
+        return iter(batches), {"files": consumed}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         # Replay for recovery: re-read exactly [start, end) per file.
-        rows: list[tuple] = []
-        names = [f.name for f in PACKET_SCHEMA.fields]
+        batches: list[pa.RecordBatch] = []
         for path, end_off in end.get("files", {}).items():
             done = int(start.get("files", {}).get(path, 0))
             end_off = int(end_off)
             if end_off <= done or not os.path.exists(path):
                 continue
-            with open(path, "rb") as f:
-                f.seek(done)
-                buf = f.read(end_off - done)
-            row = {
-                "path": os.path.abspath(path),
-                "range_start": done,
-                "range_end": end_off,
-                "file_size": end_off,
-                "trusted_start": True,
-                **self._opts,
-            }
-            for r in _parse_buffer(buf, row, eof_in_buf=True):
-                rows.append(tuple(r[n] for n in names))
-        return iter(rows)
+            batch = _scan_range(
+                {
+                    "path": os.path.abspath(path),
+                    "range_start": done,
+                    "range_end": end_off,
+                    "file_size": end_off,
+                    "trusted_start": True,
+                    **self._opts,
+                }
+            )
+            if batch.num_rows:
+                batches.append(batch)
+        return iter(batches)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are file positions; nothing to clean up

@@ -15,10 +15,7 @@ from mission_data_pipeline_spark.streaming.ingest import (
     near_dedup_ingest_stream,
 )
 from mission_data_pipeline_spark.streaming.pipeline import StreamingPipeline
-from mission_data_pipeline_spark.streaming.sources import (
-    stream_csv_telemetry,
-    stream_packets,
-)
+from mission_data_pipeline_spark.streaming.sources import stream_csv_telemetry
 from mission_data_pipeline_spark.streaming.stateful import (
     seq_gaps,
     seq_gaps_batch,
@@ -42,6 +39,5 @@ __all__ = [
     "seq_gaps_batch",
     "seq_gaps_stream",
     "stream_csv_telemetry",
-    "stream_packets",
     "windowed_stats",
 ]

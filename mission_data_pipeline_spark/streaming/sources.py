@@ -2,22 +2,18 @@
 
 ``stream_csv_telemetry`` — incremental discovery of wide telemetry CSVs
 (readStream.csv needs an explicit schema; melt shared with the batch
-reader). ``stream_packets`` — incremental CCSDS binary ingest: each
-newly-arrived file streams through ``binaryFile`` and is split by the
-same validated parser the batch scan uses (whole-file buffers: a
-streaming file arrives atomically, so no resync is needed at offset 0).
+reader). CCSDS binary packets stream through the ``ccsds`` Data Source
+instead: ``spark.readStream.format("ccsds")`` after
+:func:`~mission_data_pipeline_spark.sources.register_ccsds_source`
+(``sources/ccsds_datasource.py``) live-tails growing or arriving files
+with packet-boundary offsets.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from mission_data_pipeline_spark.models.schemas import PACKET_SCHEMA
-from mission_data_pipeline_spark.sources.binary import _parse_buffer
 from mission_data_pipeline_spark.sources.csv import melt_telemetry
 
 
@@ -48,53 +44,4 @@ def stream_csv_telemetry(
         apid_column=apid_column,
         seq_count_column=seq_count_column,
         parameter_columns=parameter_columns,
-    )
-
-
-def stream_packets(
-    spark: SparkSession,
-    path: str,
-    *,
-    apid_filter: list[int] | None = None,
-    sec_hdr_length: int = 0,
-    frame_sync: bool = False,
-    source_id: str | None = None,
-    max_files_per_trigger: int | None = None,
-    max_packet_len: int = 65542,
-) -> DataFrame:
-    """Streaming packets_df: new binary files → parsed CCSDS packets."""
-    reader = spark.readStream.format("binaryFile").schema(
-        "path string, modificationTime timestamp, length long, content binary"
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path)
-
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                content = bytes(r["content"])
-                row = {
-                    "path": r["path"],
-                    "range_start": 0,
-                    "range_end": len(content),
-                    "file_size": len(content),
-                    "sec_hdr_length": sec_hdr_length,
-                    "frame_sync": frame_sync,
-                    "source_id": source_id,
-                    "ground_receipt_time": r["modificationTime"].timestamp()
-                    if r["modificationTime"] is not None
-                    else None,
-                    "max_packet_len": max_packet_len,
-                    "resync_chain": 2,
-                    "apid_filter": apid_filter,
-                }
-                rows.extend(_parse_buffer(content, row, eof_in_buf=True))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PACKET_SCHEMA.fields]
-            ) if rows else pd.DataFrame({f.name: [] for f in PACKET_SCHEMA.fields})
-
-    return files.select("path", "modificationTime", "content").mapInPandas(
-        split, schema=PACKET_SCHEMA
     )

@@ -47,8 +47,6 @@ import os
 
 import duckdb
 
-FIXED = ["region", "nation"]
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()

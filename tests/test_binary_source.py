@@ -151,8 +151,11 @@ def test_sec_hdr_clamped_to_packet_boundary(spark, tmp_root):
 
 def test_weak_fallback_recovers_nonrepeating_apid_stream(spark, tmp_root):
     """A split range whose APIDs never repeat can't satisfy the strict
-    confirmation rule; the weak complete-count fallback must still lock
-    (previously: the range silently emitted zero packets)."""
+    same-APID confirmation rule; it must still lock through the exact-EOF
+    landing rule of ``_chain_locks`` — each range's tail overlap reaches
+    the end of this small file, and a header chain that lands exactly on
+    EOF is accepted (previously: the range silently emitted zero
+    packets)."""
     from mission_data_pipeline_spark.models.ccsds import build_packet
 
     stream = b"".join(
@@ -163,7 +166,7 @@ def test_weak_fallback_recovers_nonrepeating_apid_stream(spark, tmp_root):
     whole = read_packets(spark, str(p))
     assert whole.count() == 300
     split = read_packets(spark, str(p), split_size=1000)
-    # exactly-once across ranges, via the weak fallback lock
+    # exactly-once across ranges, via the exact-EOF landing lock
     assert split.count() == 300
     assert split.select("file_offset").distinct().count() == 300
 
@@ -296,9 +299,9 @@ def test_ccsds_stream_reader_byte_budget_and_stuck_tail(tmp_path):
     seen = []
     for _ in range(6):
         it, off = r.read(off)
-        batch = list(it)
-        assert len(batch) <= 10
-        seen += [row[5] for row in batch]  # seq_count field
+        seq = [s for b in it for s in b.column("seq_count").to_pylist()]
+        assert len(seq) <= 10
+        seen += seq
         assert off["files"][f"{src}/a.bin"] % plen == 0
     assert seen == list(range(50))
 

@@ -290,7 +290,7 @@ def test_binary_scan_soundness_properties(
 
     from mission_data_pipeline_spark.models.ccsds import build_packet
     from mission_data_pipeline_spark.sources.binary import (
-        _parse_range,
+        _scan_range,
         plan_ranges,
     )
 
@@ -318,20 +318,20 @@ def test_binary_scan_soundness_properties(
         path = os.path.join(d, "s.bin")
         with open(path, "wb") as f:
             f.write(stream)
-        seen = []
-        for r in plan_ranges(path, split_size=split_size):
-            cols = _parse_range(r)
-            for i in range(len(cols["apid"])):
-                hdr_off = int(cols["file_offset"][i])
-                dl = int(cols["data_length"][i])
-                seen.append(stream[hdr_off : hdr_off + 6 + dl + 1])
-        single = []
-        for r in plan_ranges(path, split_size=10**9):
-            cols = _parse_range(r)
-            for i in range(len(cols["apid"])):
-                hdr_off = int(cols["file_offset"][i])
-                dl = int(cols["data_length"][i])
-                single.append(stream[hdr_off : hdr_off + 6 + dl + 1])
+
+        def packets(split):
+            out = []
+            for r in plan_ranges(path, split_size=split):
+                b = _scan_range(r)
+                for hdr_off, dl in zip(
+                    b.column("file_offset").to_pylist(),
+                    b.column("data_length").to_pylist(),
+                ):
+                    out.append(stream[hdr_off : hdr_off + 6 + dl + 1])
+            return out
+
+        seen = packets(split_size)
+        single = packets(10**9)
     assert len(seen) == len(set(seen))  # never emitted twice
     if not corrupt_at:
         assert sorted(seen) == sorted(valid)  # exactly-once complete

@@ -12,7 +12,6 @@ from mission_data_pipeline_spark.streaming import (
     StreamingPipeline,
     dedup_late_samples,
     stream_csv_telemetry,
-    stream_packets,
     windowed_stats,
 )
 
@@ -58,11 +57,18 @@ def test_stream_csv_telemetry(spark, tmp_path):
 
 
 def test_stream_packets_with_decom(spark, tmp_path):
+    from mission_data_pipeline_spark.sources import register_ccsds_source
+
     src = tmp_path / "bins"
     src.mkdir()
     for f in range(2):
         (src / f"f{f}.bin").write_bytes(generate_housekeeping_stream(50))
-    stream = stream_packets(spark, str(src), sec_hdr_length=4)
+    register_ccsds_source(spark)
+    stream = (
+        spark.readStream.format("ccsds")
+        .option("sec_hdr_length", 4)
+        .load(str(src))
+    )
     loader = MemLoader()
     decom = DecomTransformer(
         {
@@ -156,26 +162,34 @@ def test_seq_gaps_batch(spark, tmp_path):
 
 def test_seq_gaps_stream_state_across_batches(spark, tmp_path):
     """A gap straddling two micro-batches is caught only because the
-    state store carries last_seq across them."""
-    from mission_data_pipeline_spark.streaming import seq_gaps, stream_packets
+    state store carries last_seq across them. Two availableNow runs share
+    one checkpoint, and b.bin arrives between them, so each file is its
+    own micro-batch."""
+    from mission_data_pipeline_spark.sources import register_ccsds_source
+    from mission_data_pipeline_spark.streaming import seq_gaps
 
     d = tmp_path / "in"
     d.mkdir()
-    out_rows = []
+    got = []
+    register_ccsds_source(spark)
+
+    def run_once():
+        pk = spark.readStream.format("ccsds").load(str(d))
+        q = (
+            seq_gaps(pk)
+            .writeStream.outputMode("append")
+            .foreachBatch(lambda df, eid: got.extend(df.collect()))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
     # file 1 ends at seq 4; file 2 starts at seq 9 → gap of 4 across batches
     (d / "a.bin").write_bytes(_gapped_stream([0, 1, 2, 3, 4]))
+    run_once()
     (d / "b.bin").write_bytes(_gapped_stream([9, 10, 11]))
-    pk = stream_packets(spark, str(d), max_files_per_trigger=1)
-    q = (
-        seq_gaps(pk)
-        .writeStream.format("memory")
-        .queryName("gaps")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM gaps").collect()
+    run_once()
     assert len(got) == 1
     r = got[0]
     assert (r["prev_seq"], r["seq_count"], r["missing"]) == (4, 9, 4)
