@@ -44,8 +44,9 @@ class TelemetryBatch:
     metadata: dict[str, Any] = field(default_factory=dict)
 
     def row_count(self) -> int:
-        """Rows across both sides — forces an action; used only when the
-        pipeline is configured to account per-stage record counts."""
+        """Rows across both sides — forces an action; used only by a
+        ``dry_run`` pipeline, which runs no loader but still forces the
+        plan so transform errors surface."""
         n = 0
         if self.packets is not None:
             n += self.packets.count()

@@ -21,9 +21,10 @@ derived from it) is backfilled, with one ``count()`` job.
 Harvest is **non-blocking**: :meth:`pyspark.sql.Observation.get` blocks
 forever on a DataFrame branch the action never executed, so we go
 through the JVM ``Observation.getRowOrEmpty`` (an ``Option[Row]``)
-instead and report ``-1`` (unknown) for branches that saw no action.
-A bounded poll loop absorbs the listener-bus notification delay, which
-is normally sub-millisecond after the action returns.
+instead. A poll loop bounded by :data:`HARVEST_TIMEOUT_S` absorbs the
+listener-bus notification delay, which is normally sub-millisecond
+after the action returns; a side still unresolved after it is a branch
+the action never executed, and is backfilled.
 """
 
 from __future__ import annotations
@@ -40,6 +41,10 @@ from mission_data_pipeline_spark.core.base import TelemetryBatch
 log = logging.getLogger("mission_data_pipeline_spark.observe")
 
 _warned_private_api = False
+
+#: Upper bound on waiting for the listener bus to deliver the counts of
+#: an action that has returned (normally none is needed).
+HARVEST_TIMEOUT_S = 1.0
 
 
 def observe_rows(df: DataFrame, tag: str) -> tuple[DataFrame, Observation]:
@@ -62,8 +67,8 @@ def _row_or_none(obs: Observation) -> dict | None:
 
     Uses the JVM ``getRowOrEmpty`` bridge (same decode path as PySpark's
     own blocking ``Observation.get``). If a future PySpark reshuffles the
-    private surface we degrade to "unknown" rather than blocking a
-    pipeline on a dead branch.
+    private surface we return None (the caller counts the side
+    directly) rather than blocking a pipeline on a dead branch.
     """
     global _warned_private_api
     try:
@@ -87,8 +92,8 @@ def _row_or_none(obs: Observation) -> dict | None:
             _warned_private_api = True
             log.warning(
                 "Observation.getRowOrEmpty bridge unavailable; "
-                "observe-mode record counts will read as -1 (unknown). "
-                "Set count_method='count' for exact legacy accounting."
+                "record counts fall back to one count() job per "
+                "observed DataFrame."
             )
         return None
 
@@ -171,19 +176,21 @@ class ObservationGroup:
         return -1
 
 
-def harvest_groups(groups: list[ObservationGroup], timeout_s: float) -> None:
-    """Resolve as many groups as possible within ``timeout_s``.
+def harvest_groups(groups: list[ObservationGroup]) -> None:
+    """Resolve every group after the batch's action has run.
 
     The listener bus normally delivers metrics before the action call
     returns, so the fast path is a single zero-sleep sweep. Every sweep
-    polls every group, so one group with a dead side (never executed,
-    stays unresolved and reads -1) does not hide the live counts of the
-    groups after it.
+    polls every group, so one group with a dead side does not hide the
+    live counts of the groups after it. A side still unresolved after
+    :data:`HARVEST_TIMEOUT_S` was never executed by the action; it is
+    backfilled with one ``count()`` job.
     """
-    deadline = time.monotonic() + timeout_s
-    while True:
-        if all([g.try_resolve() for g in groups]):
-            return
+    deadline = time.monotonic() + HARVEST_TIMEOUT_S
+    while not all([g.try_resolve() for g in groups]):
         if time.monotonic() >= deadline:
+            for g in groups:
+                if g.unresolved_sides:
+                    g.resolve_by_counting()
             return
         time.sleep(0.02)

@@ -1,17 +1,19 @@
 """Streaming pipeline runner.
 
 W1: the reference's generator micro-batching (``binary.py:115-123``)
-restated as Structured Streaming + ``foreachBatch``: the SAME
-Transformer stages and Loader used in batch mode run against every
-micro-batch, with the same hooks/metrics accounting. Exactly-once is
-inherited from the sink's idempotence + checkpointing (file sources
-track progress in the checkpoint dir).
+restated as Structured Streaming + ``foreachBatch``: every micro-batch
+runs through the batch Pipeline's own per-batch body
+(:meth:`~mission_data_pipeline_spark.core.pipeline.BatchRunner.run_batch`),
+so the SAME Transformer stages and Loader, hooks, per-stage record
+counts and error handling apply to an epoch as to a batch. A stage
+error fails the epoch before it commits, so a restart replays it.
+Exactly-once is inherited from the sink's idempotence + checkpointing
+(file sources track progress in the checkpoint dir).
 """
 
 from __future__ import annotations
 
 import logging
-import time
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -21,13 +23,15 @@ from mission_data_pipeline_spark.core.base import (
     TelemetryBatch,
     Transformer,
 )
+from mission_data_pipeline_spark.core.pipeline import BatchRunner
+from mission_data_pipeline_spark.core.results import PipelineResult, StageStatus
 from mission_data_pipeline_spark.observability.hooks import HookManager
 from mission_data_pipeline_spark.observability.metrics import PipelineMetrics
 
 log = logging.getLogger("mission_data_pipeline_spark.streaming")
 
 
-class StreamingPipeline:
+class StreamingPipeline(BatchRunner):
     """Apply Transformer stages + a Loader to each streaming micro-batch."""
 
     def __init__(
@@ -37,68 +41,22 @@ class StreamingPipeline:
         loader: Loader | None = None,
         hooks: HookManager | None = None,
         metrics: PipelineMetrics | None = None,
-        stream_is_params: bool = True,
     ) -> None:
-        self.transformers = list(transformers or [])
-        self.loader = loader
-        self.hooks = hooks or HookManager()
-        self.metrics = metrics or PipelineMetrics()
-        self.stream_is_params = stream_is_params
+        super().__init__(
+            transformers=transformers, loader=loader, hooks=hooks, metrics=metrics
+        )
 
     def _process_batch(self, df: DataFrame, epoch_id: int) -> None:
-        # Input-count accounting via df.observe (core/observe.py), the
-        # same one-action-per-batch discipline as the batch Pipeline:
-        # an eager df.count() here would re-execute the micro-batch's
-        # source read once per epoch just for the metric. The count
-        # resolves as a side effect of the loader's action; with no
-        # loader, a count() IS the only action, so it is used directly.
-        from mission_data_pipeline_spark.core.observe import (
-            ObservationGroup,
-            harvest_groups,
-        )
-
-        group = ObservationGroup(f"stream-epoch{epoch_id}")
-        batch = group.attach(
-            TelemetryBatch(params=df, metadata={"epoch": epoch_id})
-            if self.stream_is_params
-            else TelemetryBatch(packets=df, metadata={"epoch": epoch_id})
-        )
-        self.hooks.fire("batch.extracted", batch=epoch_id, records=-1)
-        stage_elapsed: list[tuple[str, float]] = []
-        for tr in self.transformers:
-            t0 = time.perf_counter()
-            batch = tr.transform(batch)
-            stage_elapsed.append((type(tr).__name__, time.perf_counter() - t0))
-        self.hooks.fire("batch.transformed", batch=epoch_id, records=-1)
-        written = None
-        load_elapsed = 0.0
-        if self.loader is not None:
-            t0 = time.perf_counter()
-            written = self.loader.load(batch)
-            load_elapsed = time.perf_counter() - t0
-            harvest_groups([group], timeout_s=1.0)
-            n = group.rows
-        else:
-            n = batch.row_count()  # no loader: this IS the only action
-        if n >= 0:
-            # Only record resolved counts: an unresolved observe harvest
-            # (timeout / dead branch → -1) must not masquerade as a
-            # genuinely-empty batch.  Hooks keep the -1 convention.
-            self.metrics.record_batch(n)
-            for name, elapsed in stage_elapsed:
-                self.metrics.record_stage(
-                    name, elapsed_s=elapsed, records_in=n
-                )
-        if self.loader is not None:
-            n_loaded = written if isinstance(written, int) else max(n, 0)
-            if n >= 0 or isinstance(written, int):
-                self.metrics.record_stage(
-                    type(self.loader).__name__,
-                    elapsed_s=load_elapsed,
-                    records_in=max(n, 0),
-                    records_out=n_loaded,
-                )
-            self.hooks.fire("batch.loaded", batch=epoch_id, records=n_loaded)
+        # A packet stream (``readStream.format("ccsds")``) carries the raw
+        # packet bytes; anything else is a params stream.
+        side = "packets" if "user_data" in df.columns else "params"
+        batch = TelemetryBatch(**{side: df}, metadata={"epoch": epoch_id})
+        result = PipelineResult(pipeline_name="stream", status=StageStatus.SUCCESS)
+        self.run_batch(batch, epoch_id, result)
+        if result.errors:
+            raise RuntimeError(
+                f"epoch {epoch_id} failed: " + "; ".join(result.errors)
+            )
 
     def start(
         self,

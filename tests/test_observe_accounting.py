@@ -1,15 +1,19 @@
-"""R3 observe-mode accounting: exact per-stage counts from ONE job/batch.
+"""R3 record accounting: exact per-stage counts from ONE job/batch.
 
-The scale contract (VERDICT r05 #1): with ``count_method="observe"``
-(the default), per-stage ``records_in/out`` come from
-``df.observe(count(*))`` harvested after the batch's single action —
-the legacy ``count_method="count"`` path re-executes the plan once per
-stage. Reference semantics matched: ``src/mdp/observability/metrics.py
-:60-77`` (record_stage fed with real counts).
+The scale contract (VERDICT r05 #1): per-stage ``records_in/out`` come
+from ``df.observe(count(*))`` harvested after the batch's single action;
+a side no action read is backfilled with one ``count()``. This is the
+only accounting mode: configs that still set the removed
+``count_records`` / ``count_method`` / ``observe_timeout_s`` /
+``observe_dead_branch`` keys fail validation. Reference semantics
+matched: ``src/mdp/observability/metrics.py:60-77`` (record_stage fed
+with real counts).
 """
 
 from collections.abc import Iterator
 
+import pytest
+from pydantic import ValidationError
 from pyspark.sql import functions as F
 
 from mission_data_pipeline_spark.core import (
@@ -98,18 +102,22 @@ def test_observe_mode_counts_and_single_job(spark):
 
 
 def test_count_mode_still_exact_but_multi_job(spark):
-    p = Pipeline(
-        {"name": "cntjob", "count_method": "count"},
+    """The eager ``count_method="count"`` mode is gone: the key fails
+    validation, and the one mode gives the same exact counts from a
+    single job."""
+    stages = dict(
         extractor=RangeExtractor(n_batches=1, rows=10),
         transformers=[HalvingFilter()],
         loader=NoopLoader(),
     )
-    r = p.run(spark)
+    with pytest.raises(ValidationError, match="count_method"):
+        Pipeline({"name": "cntjob", "count_method": "count"}, **stages)
+    r = Pipeline({"name": "cntjob"}, **stages).run(spark)
     assert r.ok
     halv = next(s for s in r.stage_results if s.stage_name == "HalvingFilter")
     assert (halv.records_in, halv.records_out) == (10, 5)
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("mdps:cntjob:batch1")
-    assert len(jobs) > 1  # the legacy path pays one action per stage
+    assert len(jobs) == 1
 
 
 class _TwoSidedExtractor(Extractor):
@@ -124,11 +132,10 @@ class _TwoSidedExtractor(Extractor):
 
 
 def test_observe_dead_branch_default_backfills_count(spark):
-    """Default policy: a side the action never executes is backfilled
-    with a bounded count() — accounting never silently reads -1 after
-    an action ran."""
+    """A side the action never executes is backfilled with a bounded
+    count() — accounting never silently reads -1 after an action ran."""
     p = Pipeline(
-        {"name": "deadfill", "observe_timeout_s": 0.3},
+        {"name": "deadfill"},
         extractor=_TwoSidedExtractor(),
         loader=NoopLoader(),  # writes params only; packets side never runs
     )
@@ -140,34 +147,47 @@ def test_observe_dead_branch_default_backfills_count(spark):
 
 
 def test_observe_dead_branch_unknown_reads_minus_one(spark):
-    """observe_dead_branch='unknown': the dead side stays -1 (no extra
-    jobs), not a hang, and not a silent 0."""
+    """The ``observe_dead_branch="unknown"`` policy is gone: the key
+    fails validation, and the dead side is always backfilled, at the
+    cost of a count() job beyond the loader's write."""
+    for key, value in (("observe_dead_branch", "unknown"), ("observe_timeout_s", 0.3)):
+        with pytest.raises(ValidationError, match=key):
+            Pipeline(
+                {"name": "dead", key: value},
+                extractor=_TwoSidedExtractor(),
+                loader=NoopLoader(),
+            )
     p = Pipeline(
-        {
-            "name": "dead",
-            "observe_timeout_s": 0.3,
-            "observe_dead_branch": "unknown",
-        },
+        {"name": "dead"},
         extractor=_TwoSidedExtractor(),
         loader=NoopLoader(),
     )
     r = p.run(spark)
     assert r.ok
-    # the packets observation is unresolvable → the group reads unknown
-    assert r.total_packets == 0
+    assert r.total_packets == 10
     load = next(s for s in r.stage_results if s.stage_name == "NoopLoader")
-    assert load.records_in == -1
+    assert load.records_in == 10
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("mdps:dead:batch1")
+    assert len(jobs) > 1  # the write plus the backfill count
 
 
 def test_observe_counts_off(spark):
+    """Accounting can no longer be turned off (``count_records`` fails
+    validation); it costs no job beyond the loader's write."""
+    with pytest.raises(ValidationError, match="count_records"):
+        Pipeline(
+            {"name": "off", "count_records": False},
+            extractor=RangeExtractor(n_batches=1, rows=4),
+            loader=NoopLoader(),
+        )
     p = Pipeline(
-        {"name": "off", "count_records": False},
+        {"name": "off"},
         extractor=RangeExtractor(n_batches=1, rows=4),
         loader=NoopLoader(),
     )
     r = p.run(spark)
     assert r.ok
-    assert r.total_packets == 0
+    assert r.total_packets == 4
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("mdps:off:batch1")
     assert len(jobs) == 1
 

@@ -78,16 +78,50 @@ def test_stream_packets_with_decom(spark, tmp_path):
             ]
         }
     )
-    pipe = StreamingPipeline(
-        transformers=[decom], loader=loader, stream_is_params=False
-    )
+    pipe = StreamingPipeline(transformers=[decom], loader=loader)
     q = pipe.start(
         stream, checkpoint_dir=str(tmp_path / "ckpt2"), available_now=True
     )
     q.awaitTermination(180)
     assert len(loader.rows) == 100
     assert {r["name"] for r in loader.rows} == {"obc_temp_dn"}
-    assert pipe.metrics.snapshot()["total_packets"] == 100
+    snap = pipe.metrics.snapshot()
+    assert snap["total_packets"] == 100
+    # per-stage counts as in a batch Pipeline: decom passes the 100
+    # packets through and adds 100 params; the loader writes the params
+    decom_m, load_m = snap["stages"]["DecomTransformer"], snap["stages"]["MemLoader"]
+    assert (decom_m["records_in"], decom_m["records_out"]) == (100, 200)
+    assert (load_m["records_in"], load_m["records_out"]) == (200, 100)
+
+
+def test_stream_stage_error_fails_epoch(spark, tmp_path):
+    """A transformer that raises in an epoch fires ``stage.error`` once,
+    skips the loader and fails the query with the stage's error, so the
+    epoch never commits."""
+    from pyspark.errors import StreamingQueryException
+
+    from mission_data_pipeline_spark.core.base import Transformer
+
+    class Exploding(Transformer):
+        def transform(self, batch):
+            raise ValueError("calibration table missing")
+
+    src = tmp_path / "csvs"
+    _write_csvs(src, n_files=1)
+    stream = stream_csv_telemetry(
+        spark, str(src), "time double, apid int, seq_count int, temp double"
+    )
+    loader = MemLoader()
+    pipe = StreamingPipeline(transformers=[Exploding()], loader=loader)
+    errors = []
+    pipe.hooks.on("stage.error")(lambda **kw: errors.append(kw["stage"]))
+    q = pipe.start(
+        stream, checkpoint_dir=str(tmp_path / "ckpt"), available_now=True
+    )
+    with pytest.raises(StreamingQueryException, match="calibration table missing"):
+        q.awaitTermination(120)
+    assert errors == ["Exploding"]
+    assert loader.rows == []
 
 
 def test_windowed_stats_streaming(spark, tmp_path):
