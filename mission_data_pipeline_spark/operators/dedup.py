@@ -345,8 +345,6 @@ def near_dedup_minhash(
     id_col: str = "doc_id",
     max_bucket: "int | None" = None,
     hash_grams: bool = False,
-    checkpoint: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end near-dup removal: keep docs minus verified duplicates.
 
@@ -365,24 +363,22 @@ def near_dedup_minhash(
     the distinct + verify exchanges; Jaccard unchanged up to 64-bit
     collisions).
 
-    The featurized gram table is materialized once (``checkpoint``;
-    reliable ``checkpoint_dir`` on a cluster — the
-    :func:`operators.lineage.make_truncator` contract): it feeds the
+    The featurized gram table is materialized once
+    (:func:`operators.lineage.query_truncator`): it feeds the
     signature pass AND three sides of the Jaccard verify, whose join
     keys differ (doc_a, (doc_b, gram), doc_id), so exchange reuse
     cannot deduplicate them and an unmaterialized plan re-runs the
     corpus tokenize+hash featurization per reference — measured 7
     parquet scans of the doc table in the executed survivors plan at
-    bench scale, 1 after truncation. ``checkpoint=False`` keeps full
-    lineage (tests only).
+    bench scale, 1 after truncation.
     """
-    from mission_data_pipeline_spark.operators.lineage import make_truncator
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
 
-    g = shingles(
-        docs, n=n, text_col=text_col, id_col=id_col, hash_grams=hash_grams
+    g = query_truncator()(
+        shingles(
+            docs, n=n, text_col=text_col, id_col=id_col, hash_grams=hash_grams
+        )
     )
-    if checkpoint:
-        g = make_truncator(checkpoint_dir)(g)
     sig = minhash_signatures(g, num_hashes=num_hashes)
     cand = lsh_candidate_pairs(sig, bands=bands, max_bucket=max_bucket)
     dups = (
@@ -402,7 +398,6 @@ def connected_components(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
     """Duplicate clusters from candidate pairs: (node, component_id).
@@ -427,20 +422,20 @@ def connected_components(
     exits on the converged-round check almost immediately; ``max_iter``
     bounds adversarial chains.
 
-    ``checkpoint_dir=None`` truncates via ``localCheckpoint`` (executor-
-    local blocks — right for local mode, NOT fault-tolerant). On a real
-    cluster pass a reliable ``checkpoint_dir`` (HDFS/S3A): executor loss
-    mid-fixpoint then recovers from the checkpoint files instead of
-    killing the job (see ``operators/lineage.py``).
+    Truncation goes through :func:`operators.lineage.query_truncator`:
+    ``localCheckpoint`` (executor-local blocks — right for local mode,
+    NOT fault-tolerant) unless ``$SPARK_GRAFT_CHECKPOINT_DIR`` names a
+    reliable dir (HDFS/S3A), in which case executor loss mid-fixpoint
+    recovers from the checkpoint files instead of killing the job.
 
     ``stats``: pass a dict to receive ``{"rounds": k}`` — the number of
     propagation rounds actually run (including the final zero-change
     verification round). The giant-component probe uses this to pin
     that a power-law crawl graph converges in O(log diameter) rounds.
     """
-    from mission_data_pipeline_spark.operators.lineage import make_truncator
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
 
-    trunc = make_truncator(checkpoint_dir)
+    trunc = query_truncator()
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     # Checkpoint the symmetrized edge list: it joins against labels in
     # EVERY round, and without a checkpoint each round re-executes the
@@ -580,8 +575,6 @@ def duplicate_span_fraction(
     n: int = 20,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact substring duplication per document (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): the
@@ -600,13 +593,10 @@ def duplicate_span_fraction(
     span as duplicated, never lose one, and the oracle's exact
     string-grouped twin would surface it.
 
-    ``checkpoint=True`` (default) makes the call EAGER — the hashed gram
-    table materializes via ``localCheckpoint`` at call time (a Spark job
-    runs before any action on the result, and the blocks are executor-
-    local, not fault-tolerant). Library callers that need a fully lazy
-    plan pass ``checkpoint=False``; cluster runs that need executor-loss
-    safety pass a reliable ``checkpoint_dir`` — the same tradeoff as
-    ``exact_substring_dedup_tokens``.
+    The call is EAGER — the hashed gram table is truncated through
+    :func:`operators.lineage.query_truncator` at call time (a Spark job
+    runs before any action on the result; the blocks are executor-local
+    unless ``$SPARK_GRAFT_CHECKPOINT_DIR`` names a reliable dir).
     """
     if n < 2:
         raise ValueError(f"n must be >= 2, got {n}")
@@ -628,18 +618,13 @@ def duplicate_span_fraction(
     grams = staged.select(
         "doc_id", F.explode(gram_list).alias("gram")
     ).select("doc_id", F.xxhash64("gram").alias("__gh"))
-    if checkpoint:
-        # The hashed gram table feeds THREE subtrees (per-doc totals,
-        # cross-doc occurrence counts, the dup tag-back join); without
-        # truncation each consumer re-runs the n-token concat_ws
-        # explode — the most expensive projection in the operator
-        # (round-14 duplicate-subtree pattern, same as
-        # exact_substring_dedup's gram table).
-        from mission_data_pipeline_spark.operators.lineage import (
-            make_truncator,
-        )
+    # The hashed gram table feeds THREE subtrees (per-doc totals,
+    # cross-doc occurrence counts, the dup tag-back join); without
+    # truncation each consumer re-runs the n-token concat_ws explode —
+    # the most expensive projection in the operator.
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
 
-        grams = make_truncator(checkpoint_dir)(grams)
+    grams = query_truncator()(grams)
     per_doc = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     cross = grams.groupBy("__gh").agg(
         F.count_distinct("doc_id").alias("__nd")
@@ -883,8 +868,6 @@ def exact_substring_dedup_tokens(
     k: int = 12,
     tokens_col: str = "toks",
     id_col: str = "doc_id",
-    checkpoint: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Core ExactSubstr span surgery over pre-tokenized documents
     (``tokens_col``: ``array<string>``). Every ``k``-token span that
@@ -928,21 +911,13 @@ def exact_substring_dedup_tokens(
     occurrences through DIFFERENT subtrees (one has a partial agg below
     its exchange), so exchange reuse cannot deduplicate them —
     unmaterialized, the token explode and the per-doc sort/lead window
-    run twice per action. ``checkpoint=True`` materializes it once
-    instead (``localCheckpoint``, or reliable ``checkpoint_dir`` on a
-    cluster). The DEFAULT is ``False`` — recompute-twice — because the
+    run twice per action. It is deliberately NOT truncated: the
     duplicated subtree is pure whole-stage-codegen expression work over
     a compressed columnar scan, and the block-manager round trip LOSES
-    to recomputation as the corpus grows: interleaved calm-box A/B
-    (r15) measured checkpoint 1.2x FASTER at sf0.1 (med 2.28 vs 2.80 s,
-    fixed costs dominate) but 1.5x SLOWER at sfx10 (med 6.39 vs 4.30 s;
-    ``persist(MEMORY_AND_DISK)`` also slower at 4.69) — the scale
-    direction, which is what matters at 100 TB, favors lineage. Pass
-    ``checkpoint=True`` only for small corpora with expensive
-    tokenization upstream.
+    to recomputation as the corpus grows (interleaved A/B, r15:
+    truncating was 1.2x faster at sf0.1 but 1.5x slower at sfx10, med
+    6.39 vs 4.30 s; ``persist(MEMORY_AND_DISK)`` also slower at 4.69).
     """
-    from mission_data_pipeline_spark.operators.lineage import make_truncator
-
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     staged = docs.select(
@@ -963,8 +938,8 @@ def exact_substring_dedup_tokens(
         .filter(F.col("__end").isNotNull())  # full-length grams only
         .drop("__end")
     )
-    if checkpoint:
-        grams = make_truncator(checkpoint_dir)(grams)
+    # Not truncated: recomputing this gram table twice beats a
+    # checkpoint at scale (r15 A/B: 1.5x slower with it at sfx10).
     # One gram-keyed partial-agg shuffle yields both the corpus count
     # and the canonical first occurrence (min struct = lexicographic
     # (doc_id, pos) — the survivor Lee et al. keep).
@@ -1085,7 +1060,6 @@ def quality_dedup(
     id_col: str = "doc_id",
     id_a: str = "doc_a",
     id_b: str = "doc_b",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Quality-aware near-dedup: close the verified near-dup ``pairs``
     into clusters (:func:`connected_components` to the fixpoint) and
@@ -1113,9 +1087,7 @@ def quality_dedup(
     reproducible across partitionings (integer counts or a rounded
     score — same contract as every other accumulator in this repo).
     """
-    comp = connected_components(
-        pairs, id_a=id_a, id_b=id_b, checkpoint_dir=checkpoint_dir
-    )
+    comp = connected_components(pairs, id_a=id_a, id_b=id_b)
     q = docs.select(
         F.col(id_col).alias("node"), F.col(quality_col).alias("__q")
     )
@@ -1417,8 +1389,6 @@ def incremental_near_dedup(
     batch_bands: DataFrame | None = None,
     max_bucket: "int | None" = None,
     hash_grams: bool = True,
-    checkpoint: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Incremental ingest near-dedup: keep only the rows of ``batch``
     that are NOT near-duplicates of the existing ``corpus`` — the
@@ -1501,14 +1471,13 @@ def incremental_near_dedup(
     # subtrees (band signatures, the intersection join, the size agg)
     # that exchange reuse cannot deduplicate — unmaterialized, the
     # regex/shingle featurization runs three times per action.
-    # ``checkpoint`` (default) truncates lineage at each self-computed
-    # gram table (make_truncator contract; reliable ``checkpoint_dir``
-    # on a cluster). SUPPLIED frames (batch_grams / the stored index)
-    # are the caller's to materialize — the streaming gate persists its
-    # batch features, the stored index IS parquet.
-    from mission_data_pipeline_spark.operators.lineage import make_truncator
+    # Lineage is truncated at each self-computed gram table
+    # (query_truncator). SUPPLIED frames (batch_grams / the stored
+    # index) are the caller's to materialize — the streaming gate
+    # persists its batch features, the stored index IS parquet.
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
 
-    trunc = make_truncator(checkpoint_dir) if checkpoint else (lambda d: d)
+    trunc = query_truncator()
     gb = (
         batch_grams.select("doc_id", "gram")
         if batch_grams is not None

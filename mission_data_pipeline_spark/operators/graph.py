@@ -15,8 +15,9 @@ one broadcast one-row frame for the dangling-mass total — the classic
 join-agg PageRank, O(edges) shuffle per iteration, no driver-side graph.
 Lineage is truncated each round (same discipline as connected_components;
 an unflattened 10-iteration plan re-executes the whole chain at every
-action) — ``localCheckpoint`` locally, reliable ``checkpoint_dir`` on a
-cluster (``operators/lineage.py``).
+action) through ``operators/lineage.py:query_truncator`` —
+``localCheckpoint`` by default, reliable checkpoint files when
+``$SPARK_GRAFT_CHECKPOINT_DIR`` is set.
 
 Determinism: per-edge contributions are rounded to 12 decimals and
 summed as DECIMAL(30,12) — float addition order across partitions would
@@ -37,8 +38,6 @@ def pagerank(
     damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank. Returns ``(node, rank)`` for every node
     appearing as source or destination; ranks sum to ~1.
@@ -47,16 +46,18 @@ def pagerank(
     the standard stochastic-matrix completion, without which total rank
     leaks every iteration. Duplicate edges count once per occurrence
     (a multigraph; pre-``distinct`` the edges for simple-graph
-    semantics). ``checkpoint=False`` keeps full lineage (tests only).
+    semantics).
 
-    ``checkpoint_dir=None`` truncates lineage via ``localCheckpoint``
-    (executor-local, NOT fault-tolerant); on a real cluster pass a
-    reliable dir (HDFS/S3A) so executor loss mid-iteration recovers
-    from checkpoint files (see ``operators/lineage.py``).
+    Lineage is truncated every iteration through
+    :func:`operators.lineage.query_truncator`: ``localCheckpoint``
+    (executor-local, NOT fault-tolerant) unless
+    ``$SPARK_GRAFT_CHECKPOINT_DIR`` names a reliable dir (HDFS/S3A), in
+    which case executor loss mid-iteration recovers from checkpoint
+    files.
     """
-    from mission_data_pipeline_spark.operators.lineage import make_truncator
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
 
-    trunc = make_truncator(checkpoint_dir)
+    trunc = query_truncator()
     if n_iter < 1:
         raise ValueError("pagerank needs n_iter >= 1")
     if not (0.0 < damping < 1.0):
@@ -64,28 +65,25 @@ def pagerank(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
-    if checkpoint:
-        # The edge list joins against ranks in EVERY iteration (and
-        # feeds nodes/deg): without truncation each of the n_iter
-        # actions re-executes the caller's whole edge-derivation
-        # pipeline — the same per-round re-derivation
-        # connected_components already truncates away. Edge-list-sized.
-        e = trunc(e)
+    # The edge list joins against ranks in EVERY iteration (and feeds
+    # nodes/deg): without truncation each of the n_iter actions
+    # re-executes the caller's whole edge-derivation pipeline — the
+    # same per-round re-derivation connected_components already
+    # truncates away. Edge-list-sized.
+    e = trunc(e)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    if checkpoint:
-        nodes = trunc(nodes)
+    nodes = trunc(nodes)
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     # out-degree rides on the node table so each iteration joins
     # ranks⋈edges only once; deg=null marks dangling nodes
     base = nodes.join(deg, nodes.node == deg.src, "left").select(
         "node", "deg"
     )
-    if checkpoint:
-        base = trunc(base)
+    base = trunc(base)
     n_total = base.agg(F.count("*").alias("n"))
     ranks = base.crossJoin(F.broadcast(n_total)).select(
         "node",
@@ -131,8 +129,7 @@ def pagerank(
                 "n",
             )
         )
-        if checkpoint:
-            ranks = trunc(ranks)
+        ranks = trunc(ranks)
     return ranks.select("node", "rank")
 
 
@@ -185,8 +182,6 @@ def triangle_count(
     *,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact triangle enumeration over an undirected simple graph.
     Returns one row per triangle ``(a, b, c)``; aggregate downstream for
@@ -207,19 +202,19 @@ def triangle_count(
     triangle is produced exactly once.
 
     Lineage is truncated at the canonicalized edge set and at the
-    oriented table (``checkpoint``; reliable ``checkpoint_dir`` on a
-    cluster, same contract as :func:`pagerank`): ``oriented`` is
+    oriented table (same :func:`operators.lineage.query_truncator`
+    policy as :func:`pagerank`): ``oriented`` is
     referenced three times (both wedge sides and the closure probe) and
     ``e`` three more underneath it, so an untruncated plan re-expands
     the whole upstream subtree per reference — with a non-trivial edge
     producer (e.g. ``cooccurrence_edges``) that multiplied into a
     3,335-operator / 480-scan physical plan at bench scale where the
     truncated one is ~50 operators with the edge pipeline executed
-    once. ``checkpoint=False`` keeps full lineage (tests only).
+    once.
     """
-    from mission_data_pipeline_spark.operators.lineage import make_truncator
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
 
-    trunc = make_truncator(checkpoint_dir) if checkpoint else (lambda df: df)
+    trunc = query_truncator()
     e = (
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("u"),
@@ -277,8 +272,6 @@ def label_propagation(
     n_iter: int = 5,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Synchronous label propagation (community detection). Returns
     ``(node, label)`` after ``n_iter`` rounds.
@@ -295,9 +288,9 @@ def label_propagation(
     round map-reduce shaped (no per-node window sort). O(edges) shuffle
     per round; lineage truncated every round like :func:`pagerank`.
     """
-    from mission_data_pipeline_spark.operators.lineage import make_truncator
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
 
-    trunc = make_truncator(checkpoint_dir)
+    trunc = query_truncator()
     if n_iter < 1:
         raise ValueError("label_propagation needs n_iter >= 1")
     e = edges.select(
@@ -306,8 +299,7 @@ def label_propagation(
     und = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).distinct()
-    if checkpoint:
-        und = trunc(und)
+    und = trunc(und)
     labels = und.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -324,6 +316,5 @@ def label_propagation(
                 F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))
             ).alias("m")
         ).select("node", (-F.col("m.neg")).alias("label"))
-        if checkpoint:
-            labels = trunc(labels)
+        labels = trunc(labels)
     return labels

@@ -353,8 +353,6 @@ def dsir_select(
     id_col: str = "doc_id",
     seed: int = 0,
     hash_fn: str = "md5",
-    checkpoint: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR, Xie et al. 2023):
     pick the ``n`` raw-corpus documents whose hashed-ngram distribution
@@ -383,13 +381,14 @@ def dsir_select(
     everything that touches the corpus is map-side expression work plus
     two gram-keyed partial aggs; only the O(buckets) model broadcasts.
 
-    ``checkpoint`` (default) materializes the raw-corpus gram table and
-    the O(buckets) count table once (``localCheckpoint``; reliable
-    ``checkpoint_dir`` on a cluster): each feeds two consumer subtrees
-    that exchange reuse cannot deduplicate, so unmaterialized the raw
-    featurization runs twice and the target featurization re-runs per
-    consumer. ``checkpoint=False`` keeps full lineage (tests only).
+    The raw-corpus gram table and the O(buckets) count table are
+    materialized once (:func:`operators.lineage.query_truncator`): each
+    feeds two consumer subtrees that exchange reuse cannot deduplicate,
+    so unmaterialized the raw featurization runs twice and the target
+    featurization re-runs per consumer.
     """
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
+
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     if buckets < 2:
@@ -397,21 +396,14 @@ def dsir_select(
     kw = dict(
         buckets=buckets, text_col=text_col, id_col=id_col, hash_fn=hash_fn
     )
-    raw_grams = _hashed_gram_buckets(raw, **kw)
+    trunc = query_truncator()
+    # raw_grams feeds BOTH the q̂_raw bucket counts and the per-doc
+    # scoring join through different subtrees (one has a partial agg
+    # below its exchange), so exchange reuse cannot deduplicate them —
+    # unmaterialized, the regex tokenize + explode + hash featurization
+    # of the RAW CORPUS runs twice per action.
+    raw_grams = trunc(_hashed_gram_buckets(raw, **kw))
     tgt_grams = _hashed_gram_buckets(target, **kw)
-    if checkpoint:
-        # raw_grams feeds BOTH the q̂_raw bucket counts and the per-doc
-        # scoring join through different subtrees (one has a partial agg
-        # below its exchange), so exchange reuse cannot deduplicate them
-        # — unmaterialized, the regex tokenize + explode + hash
-        # featurization of the RAW CORPUS runs twice per action.
-        # Truncate lineage at the gram table (make_truncator contract:
-        # localCheckpoint, or reliable checkpoint_dir on a cluster).
-        from mission_data_pipeline_spark.operators.lineage import (
-            make_truncator,
-        )
-
-        raw_grams = make_truncator(checkpoint_dir)(raw_grams)
     rc = raw_grams.groupBy("bucket").agg(F.count("*").alias("cr"))
     tc = tgt_grams.groupBy("bucket").agg(F.count("*").alias("ct"))
     counts = (
@@ -422,11 +414,10 @@ def dsir_select(
             F.coalesce("ct", F.lit(0)).alias("ct"),
         )
     )
-    if checkpoint:
-        # counts (≤ buckets rows) feeds both the corpus totals and the
-        # log-ratio model; truncating it stops the TARGET featurization
-        # + both bucket aggs from re-running in each consumer subtree.
-        counts = make_truncator(checkpoint_dir)(counts)
+    # counts (≤ buckets rows) feeds both the corpus totals and the
+    # log-ratio model; truncating it stops the TARGET featurization +
+    # both bucket aggs from re-running in each consumer subtree.
+    counts = trunc(counts)
     tot = counts.agg(
         F.sum("cr").alias("totr"), F.sum("ct").alias("tott")
     )
@@ -508,7 +499,6 @@ def budget_select(
     quality_col: str,
     id_col: str = "doc_id",
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Select the highest-quality documents until a corpus budget is
     exhausted — "take the best N tokens", the final step of a curation
@@ -525,10 +515,10 @@ def budget_select(
 
     1. ``repartitionByRange`` on the selection order — globally ordered
        partitions, each locally sortable;
-    2. lineage-truncate the ranged frame (``checkpoint_dir`` semantics
-       as in :func:`connected_components`) so the two passes below read
-       the SAME materialized partitioning — range sampling is not
-       guaranteed stable across recomputes;
+    2. lineage-truncate the ranged frame
+       (:func:`operators.lineage.query_truncator`) so the two passes
+       below read the SAME materialized partitioning — range sampling
+       is not guaranteed stable across recomputes;
     3. pass 1: per-partition weight totals (``num_partitions`` rows to
        the driver) → exclusive prefix offsets, broadcast back;
     4. pass 2: per-partition cumulative window (partitioned by the
@@ -540,11 +530,10 @@ def budget_select(
     where the range boundaries land.
     """
     spark = docs.sparkSession
-    from mission_data_pipeline_spark.operators.lineage import make_truncator
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
 
     n = num_partitions or spark.sparkContext.defaultParallelism
-    trunc = make_truncator(checkpoint_dir)
-    ranged = trunc(
+    ranged = query_truncator()(
         docs.select(
             F.col(id_col),
             F.col(quality_col),

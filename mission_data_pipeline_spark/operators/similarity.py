@@ -635,7 +635,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     round_digits: int = 6,
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """SemDeDup-style cluster-scoped semantic deduplication (Abbas et
     al. 2023, "SemDeDup: Data-efficient learning at web-scale through
@@ -656,8 +655,9 @@ def semantic_dedup(
     3. Pairs close into semantic groups via
        :func:`~mission_data_pipeline_spark.operators.dedup
        .connected_components` (path-halving min-label fixpoint,
-       lineage-truncated per round; pass ``checkpoint_dir`` for
-       reliable checkpoints on a real cluster).
+       lineage-truncated per round through
+       :func:`~mission_data_pipeline_spark.operators.lineage
+       .query_truncator`).
     4. Non-canonical members (``node != component_id``) are dropped by
        a left-anti join.
 
@@ -701,11 +701,7 @@ def semantic_dedup(
         .select("id_a", "id_b")
     )
     comp = connected_components(
-        pairs,
-        id_a="id_a",
-        id_b="id_b",
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
+        pairs, id_a="id_a", id_b="id_b", max_iter=max_iter
     )
     dropped = comp.filter(F.col("node") != F.col("component_id")).select(
         F.col("node").alias(id_col)

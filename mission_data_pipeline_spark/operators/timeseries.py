@@ -307,8 +307,6 @@ def ewma_sharded(
     series_cols: list[str],
     shard_col: str,
     order_cols: list[str] | None = None,
-    checkpoint: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """EWMA for the one series too big for one task: the input is cut
     into time shards (``shard_col`` — e.g. a day bucket, monotone in
@@ -335,13 +333,11 @@ def ewma_sharded(
     flagged-last-row summary) and the recombination join's probe side —
     through different subtrees, so exchange reuse cannot deduplicate
     them: unmaterialized, the scan + (series, shard) shuffle + Python
-    recurrence pass run twice per action. ``checkpoint`` (default)
-    truncates lineage at the stage-1 output (``localCheckpoint``;
-    reliable ``checkpoint_dir`` on a cluster — the make_truncator
-    contract shared with pagerank and connected_components), so the
-    expensive pass runs once and both consumers read materialized
-    blocks. ``checkpoint=False`` restores the read-twice full-lineage
-    form (tests only).
+    recurrence pass run twice per action. Lineage is therefore
+    truncated at the stage-1 output
+    (:func:`operators.lineage.query_truncator`, shared with pagerank and
+    connected_components), so the expensive pass runs once and both
+    consumers read materialized blocks.
 
     The result is the textbook parallel-prefix EWMA: algebraically
     identical to :func:`ewma`, floating-point-wise within an ULP-level
@@ -398,12 +394,9 @@ def ewma_sharded(
     staged = cols.groupBy(*series_cols, "__shard").applyInPandas(
         shard_pass, schema=stage1_schema
     )
-    if checkpoint:
-        from mission_data_pipeline_spark.operators.lineage import (
-            make_truncator,
-        )
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
 
-        staged = make_truncator(checkpoint_dir)(staged)
+    staged = query_truncator()(staged)
     # shard summaries: the flagged LAST row per (series, shard)
     summary = staged.filter("__last").select(
         *series_cols,

@@ -1060,25 +1060,23 @@ def _leakage_safe_split_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the same recursive-CTE components and hash formula."""
     from pyspark.sql import functions as F
 
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
     from mission_data_pipeline_spark.operators.sampling import (
         leakage_safe_split,
     )
 
     register_views(spark, sf_dir)
+    trunc = query_truncator()
     docs = spark.table("documents").filter(F.col("doc_id") < 200)
     # pairs feed both the components fixpoint and the violation check;
     # the assignment feeds both the violation check and the report —
-    # localCheckpoint each (pair-graph-/doc-sized) so neither the
-    # MinHash construction nor the components fixpoint runs twice.
-    pairs = spark.sql(
-        f"SELECT doc_a, doc_b FROM ({_MINHASH_SPARK}) p"
-    ).localCheckpoint()
-    out = (
+    # truncate each (pair-graph-/doc-sized) so neither the MinHash
+    # construction nor the components fixpoint runs twice.
+    pairs = trunc(spark.sql(f"SELECT doc_a, doc_b FROM ({_MINHASH_SPARK}) p"))
+    out = trunc(
         leakage_safe_split(
             docs, pairs, {"train": 8, "val": 1, "test": 1}, seed=13
-        )
-        .select("doc_id", "split")
-        .localCheckpoint()
+        ).select("doc_id", "split")
     )
     a = out.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("sa"))
     b = out.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("sb"))
@@ -1429,15 +1427,15 @@ def _quality_tiers_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     row through one task."""
     from pyspark.sql import functions as F
 
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
     from mission_data_pipeline_spark.operators.text import unigram_logprob
 
     register_views(spark, sf_dir)
     # The score table feeds BOTH the threshold aggregate and the tier
-    # rows; localCheckpoint materializes it once (MEMORY_AND_DISK,
-    # context-cleaned when the DF is GC'd) so the explode+join score
-    # computation appears exactly once — the one-pass deployment shape,
-    # not a demo that silently re-scores the corpus.
-    scores = unigram_logprob(spark.table("documents")).localCheckpoint()
+    # rows; truncating lineage materializes it once so the explode+join
+    # score computation appears exactly once — the one-pass deployment
+    # shape, not a demo that silently re-scores the corpus.
+    scores = query_truncator()(unigram_logprob(spark.table("documents")))
     qs = scores.agg(
         F.expr("percentile(neg_logprob, 0.25)").alias("q1"),
         F.expr("percentile(neg_logprob, 0.5)").alias("q2"),
@@ -1536,10 +1534,12 @@ def _zipf_slope_spark(spark, sf_dir):
     The rank is identical to ROW_NUMBER() OVER (ORDER BY cf DESC, term)
     for ANY range boundaries (ranges are ordered and disjoint; the key
     is unique), so the result is layout-invariant — the perturb gate
-    checks that. The DuckDB oracle keeps the window form. The
-    localCheckpoint pins the nondeterministic mid assignment so both
-    passes see one materialization."""
+    checks that. The DuckDB oracle keeps the window form. The lineage
+    truncation pins the nondeterministic mid assignment so both passes
+    see one materialization."""
     from pyspark.sql import functions as F
+
+    from mission_data_pipeline_spark.operators.lineage import query_truncator
 
     register_views(spark, sf_dir)
     freq = (
@@ -1549,11 +1549,10 @@ def _zipf_slope_spark(spark, sf_dir):
         .groupBy("term")
         .agg(F.count("*").alias("cf"))
     )
-    ordered = (
+    ordered = query_truncator()(
         freq.repartitionByRange(32, F.col("cf").desc(), F.col("term").asc())
         .sortWithinPartitions(F.col("cf").desc(), F.col("term").asc())
         .withColumn("_mid", F.monotonically_increasing_id())
-        .localCheckpoint()
     )
     pid = F.shiftright("_mid", 33).cast("int")
     counts = sorted(

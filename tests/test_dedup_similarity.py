@@ -840,31 +840,37 @@ def test_pq_rerank_tie_guard_auto_recovers_clone_cluster(spark):
         ).collect()
 
 
-def test_connected_components_reliable_checkpoint_dir(spark, tmp_path):
-    """Reliable checkpoint_dir path: identical labels, files on disk."""
+def test_connected_components_reliable_checkpoint_dir(
+    spark, tmp_path, monkeypatch
+):
+    """Reliable checkpoint dir ($SPARK_GRAFT_CHECKPOINT_DIR): identical
+    labels, files on disk."""
     import os
 
     from mission_data_pipeline_spark.operators.dedup import connected_components
+    from mission_data_pipeline_spark.operators.lineage import CHECKPOINT_DIR_ENV
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (12, 11)], "doc_a long, doc_b long"
     )
     ckpt = str(tmp_path / "cc_ckpt")
+    monkeypatch.setenv(CHECKPOINT_DIR_ENV, ckpt)
     got = {
         r["node"]: r["component_id"]
-        for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
+        for r in connected_components(pairs).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
     found = [f for _, _, fs in os.walk(ckpt) for f in fs]
     assert found, "no reliable checkpoint files written"
 
 
-def test_semantic_dedup_cluster_scoped(spark, tmp_path):
+def test_semantic_dedup_cluster_scoped(spark, tmp_path, monkeypatch):
     """SemDeDup semantics: within-cluster near-dups collapse to the
     min-id representative; distinct directions survive; candidate pairs
     are generated only inside clusters (the paper's known limitation:
     a near-dup pair split across clusters is NOT caught - asserted here
     so the contract is pinned, not accidental)."""
+    from mission_data_pipeline_spark.operators.lineage import CHECKPOINT_DIR_ENV
     from mission_data_pipeline_spark.operators.similarity import (
         default_centroids,
         semantic_dedup,
@@ -892,10 +898,9 @@ def test_semantic_dedup_cluster_scoped(spark, tmp_path):
     out2 = semantic_dedup(emb, cents, threshold=0.9)
     assert sorted(r["vec_id"] for r in out2.collect()) == [0, 1, 11, 13]
 
-    # reliable checkpoint path is plumbed through to the component step
-    out3 = semantic_dedup(
-        emb, cents, threshold=0.7, checkpoint_dir=str(tmp_path / "sd")
-    )
+    # the reliable checkpoint dir reaches the component step
+    monkeypatch.setenv(CHECKPOINT_DIR_ENV, str(tmp_path / "sd"))
+    out3 = semantic_dedup(emb, cents, threshold=0.7)
     assert sorted(r["vec_id"] for r in out3.collect()) == [0, 1, 13]
 
 

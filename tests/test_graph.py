@@ -48,19 +48,20 @@ def test_pagerank_multigraph_and_validation(spark):
         pagerank(df, damping=1.0)
 
 
-def test_pagerank_reliable_checkpoint_dir(spark, tmp_path):
-    """checkpoint_dir=... routes lineage truncation through reliable RDD
-    checkpointing (files on shared storage survive executor loss) and
-    must be result-identical to the localCheckpoint default."""
+def test_pagerank_reliable_checkpoint_dir(spark, tmp_path, monkeypatch):
+    """$SPARK_GRAFT_CHECKPOINT_DIR routes pagerank's lineage truncation
+    through reliable RDD checkpointing (files on shared storage survive
+    executor loss) and must be result-identical to the localCheckpoint
+    default."""
     from mission_data_pipeline_spark.operators.graph import pagerank
+    from mission_data_pipeline_spark.operators.lineage import CHECKPOINT_DIR_ENV
 
     edges = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (2, 4)]
     df = spark.createDataFrame(edges, "src long, dst long")
     ckpt = str(tmp_path / "pr_ckpt")
-    got = {
-        r["node"]: r["rank"]
-        for r in pagerank(df, n_iter=8, checkpoint_dir=ckpt).collect()
-    }
+    monkeypatch.setenv(CHECKPOINT_DIR_ENV, ckpt)
+    got = {r["node"]: r["rank"] for r in pagerank(df, n_iter=8).collect()}
+    monkeypatch.delenv(CHECKPOINT_DIR_ENV)
     base = {r["node"]: r["rank"] for r in pagerank(df, n_iter=8).collect()}
     assert got == base
     # checkpoint files actually landed in the reliable dir
@@ -68,6 +69,67 @@ def test_pagerank_reliable_checkpoint_dir(spark, tmp_path):
 
     found = [f for _, _, fs in os.walk(ckpt) for f in fs]
     assert found, "no reliable checkpoint files written"
+
+
+def _files_under(root):
+    import os
+
+    return sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
+    )
+
+
+def test_reliable_checkpoint_one_subdir_per_root(spark, tmp_path, monkeypatch):
+    """Spark's setCheckpointDir makes a fresh ``<root>/<uuid>/`` on every
+    call; the reliable truncator sets it only when the context is not
+    already under the root, so an 8-iteration pagerank (11 truncations)
+    leaves ONE subdirectory, and switching the env var to a second root
+    in the same session moves later checkpoint files there."""
+    import os
+
+    from mission_data_pipeline_spark.operators.graph import pagerank
+    from mission_data_pipeline_spark.operators.lineage import CHECKPOINT_DIR_ENV
+
+    df = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (2, 4)], "src long, dst long"
+    )
+    first, second = tmp_path / "first", tmp_path / "second"
+    monkeypatch.setenv(CHECKPOINT_DIR_ENV, str(first))
+    pagerank(df, n_iter=8).collect()
+    assert len(os.listdir(first)) == 1
+    before = _files_under(first)
+    assert before
+
+    monkeypatch.setenv(CHECKPOINT_DIR_ENV, str(second))
+    pagerank(df, n_iter=8).collect()
+    assert len(os.listdir(second)) == 1
+    assert _files_under(second)
+    assert _files_under(first) == before
+
+
+@pytest.mark.parametrize(
+    "name", ["g_pagerank", "x2_canonical_per_cluster", "curation_quality_tiers"]
+)
+def test_declared_query_truncations_honor_checkpoint_dir(
+    spark, sf0001, tmp_path, monkeypatch, name
+):
+    """Every truncation a declared query runs — its own and the ones
+    inside the operators it calls — reads $SPARK_GRAFT_CHECKPOINT_DIR:
+    reliable checkpoint files land in the dir, and the rows equal the
+    localCheckpoint run."""
+    from collections import Counter
+
+    from mission_data_pipeline_spark.operators.lineage import CHECKPOINT_DIR_ENV
+    from mission_data_pipeline_spark.plans.queries import QUERIES
+
+    q = QUERIES[name]
+    monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
+    local = Counter(map(tuple, q.spark(spark, sf0001).collect()))
+    ckpt = tmp_path / "ckpt"
+    monkeypatch.setenv(CHECKPOINT_DIR_ENV, str(ckpt))
+    reliable = Counter(map(tuple, q.spark(spark, sf0001).collect()))
+    assert _files_under(ckpt), "no reliable checkpoint files written"
+    assert reliable == local
 
 
 def test_query_truncator_env_plumbing(spark, tmp_path, monkeypatch):
