@@ -318,67 +318,6 @@ def bench_etl(spark, out: dict) -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
-def compact_inputs(spark, sf_dir: str) -> tuple[str, dict]:
-    """EXPLICIT, RECORDED bench pre-step (SPARK_GRAFT_COMPACT=1): rewrite
-    the input tables into a scan-parallel layout before timing.
-
-    The driver's sf0.1/sf0.01 parquet is ONE row group per table (DuckDB
-    writes ≤100k-row tables unsplittably), so headline TPC-H scans run
-    as a single task regardless of cores — a file-layout artifact, not
-    an engine property. This rewrites each large table into ≥32 files
-    (``sinks/compact.py compact_dataset``, the lakehouse OPTIMIZE
-    primitive) under a derived /tmp dir and returns it; the emitted JSON
-    carries a ``layout`` stamp so compacted numbers can never be passed
-    off as raw-layout numbers. The driver's own files are never touched.
-    """
-    import math
-
-    from mission_data_pipeline_spark.sinks.compact import (
-        compact_dataset,
-        dataset_bytes,
-    )
-    from mission_data_pipeline_spark.sources.tables import TABLES
-
-    dst = os.path.join(
-        tempfile.gettempdir(),
-        "mdps_bench_compact_" + os.path.basename(sf_dir.rstrip("/")),
-    )
-    marker = os.path.join(dst, "_COMPACTED_FROM")
-    # policy version invalidates stale cached layouts when the splitting
-    # strategy changes between rounds
-    stamp = f"{sf_dir}|policy=size-proportional-v2"
-    files: dict = {}
-    if os.path.exists(marker) and open(marker).read() == stamp:
-        return dst, {"mode": "compacted", "dir": dst, "cached": True}
-    shutil.rmtree(dst, ignore_errors=True)
-    os.makedirs(dst)
-    for t in TABLES:
-        src = f"{sf_dir}/{t}.parquet"
-        # Size-proportional splitting (the first 32-files-for-everything
-        # attempt measured a net LOSS at sf0.1: per-file overhead swamps
-        # tiny tables — see BASELINE.md round 6). Broadcast dims stay
-        # single-file; CPU-per-row corpora (text/vectors) get a floor of
-        # 8 splits regardless of bytes; relational tables split by size.
-        if t in ("region", "nation"):
-            min_files = 1
-        elif t in ("documents", "embeddings"):
-            min_files = 8
-        else:
-            min_files = max(
-                1, min(32, math.ceil(dataset_bytes(src) / (2 * 1024 * 1024)))
-            )
-        files[t] = compact_dataset(
-            spark,
-            src,
-            f"{dst}/{t}.parquet",
-            target_file_bytes=64 * 1024 * 1024,
-            min_files=min_files,
-        )
-    with open(marker, "w") as f:
-        f.write(stamp)
-    return dst, {"mode": "compacted", "dir": dst, "files_per_table": files}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # --anchor (or SPARK_GRAFT_BENCH_SAMPLES=N): best-of-3 per query
@@ -396,9 +335,9 @@ def main() -> None:
     spark = get_spark(app_name="mdps-bench")
     spark.sparkContext.setLogLevel("ERROR")
     sf_label = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    layout: dict = {"mode": "driver-raw"}
-    if os.environ.get("SPARK_GRAFT_COMPACT", "").lower() in ("1", "true", "yes"):
-        sf_dir, layout = compact_inputs(spark, sf_dir)
+    # The tables are timed as the driver ships them; the stamp keeps the
+    # tripwire off baselines taken on a rewritten (compacted) layout.
+    layout = {"mode": "driver-raw"}
     register_views(spark, sf_dir)  # warm the session + file listing
     # One small scan+shuffle so the first timed query doesn't absorb
     # one-time engine costs (codegen compile, shuffle/exchange init).

@@ -11,7 +11,8 @@ this engine's ``operators/limits.py`` completes that loop):
      the state-store streaming twin catches gaps across micro-batches).
   3. Decommutate + calibrate the housekeeping parameters.
   4. Check engineering values against warn/critical limit bands
-     (broadcast limit table; zero shuffle of the sample stream).
+     (the definitions compile into expressions; zero shuffle of the
+     sample stream).
   5. Report alarm counts per parameter and the worst samples.
 
 Run from the repo root::

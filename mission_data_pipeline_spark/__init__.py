@@ -4,9 +4,10 @@ A from-scratch rebuild of the capabilities of the reference ETL framework
 ``northflowlabs/mission-data-pipeline`` (CCSDS space-telemetry
 Extractor → Transformer* → Loader pipelines; see SURVEY.md), re-expressed
 as idiomatic Spark: declarative DataFrame plans, Catalyst-optimizable
-expressions, broadcast joins against config tables, native partitioned
-sinks — plus a large-scale training-data toolkit (dedup, similarity
-search, text analysis, multimodal columns) designed for 100 TB operation.
+expressions, config tables compiled into those expressions, native
+partitioned sinks — plus a large-scale training-data toolkit (dedup,
+similarity search, text analysis, multimodal columns) designed for
+100 TB operation.
 
 Two canonical DataFrames replace the reference's ``TelemetryDataset``
 (reference ``src/mdp/models/dataset.py:14-24``):

@@ -6,16 +6,8 @@ and piecewise-linear table interpolation that **clamps** outside the
 table range (the reference docstring says "extrapolation" but the code
 clamps; we replicate the behavior, SURVEY §2.2 T10).
 
-Two forms are provided:
-
-- literal-coefficient builders (``polynomial_expr`` /
-  ``piecewise_linear_expr``) — Horner / CASE chains that constant-fold,
-  for configs known at plan-build time;
-- array-column builders (``polynomial_from_array`` /
-  ``piecewise_from_arrays``) — higher-order-function expressions over
-  ``array<double>`` columns, used by the broadcast-join calibration
-  pass so *one* plan serves any number of parameter names (the
-  scalable path: config arrives as data, not as plan size).
+Both are literal-coefficient builders (Horner / CASE chains) that
+constant-fold, for configs known at plan-build time.
 """
 
 from __future__ import annotations
@@ -46,7 +38,7 @@ def piecewise_linear_expr(
     for (x0, y0), (x1, y1) in zip(zip(xs, ys), list(zip(xs, ys))[1:]):
         # same association order as the reference's _interpolate
         # (calibration.py:128-132): y0 + (x-x0)/(x1-x0) * (y1-y0) —
-        # bit-identical to the array-column form and the Python original.
+        # bit-identical to the Python original.
         expr = expr.when(
             raw <= F.lit(float(x1)),
             F.lit(float(y0))
@@ -55,35 +47,3 @@ def piecewise_linear_expr(
             * F.lit(float(y1) - float(y0)),
         )
     return expr.otherwise(F.lit(float(ys[-1])))
-
-
-def polynomial_from_array(raw: Column, coeffs: Column) -> Column:
-    """Horner over an ``array<double>`` column (low→high coefficients):
-    ``aggregate(reverse(coeffs), 0.0, (acc, c) -> acc*raw + c)``."""
-    return F.when(F.size(coeffs) == 0, raw).otherwise(
-        F.aggregate(
-            F.reverse(coeffs),
-            F.lit(0.0),
-            lambda acc, c: acc * raw + c,
-        )
-    )
-
-
-def piecewise_from_arrays(raw: Column, xs: Column, ys: Column) -> Column:
-    """Piecewise-linear with clamp over ``array<double>`` columns.
-
-    Segment lookup = ``size(filter(xs, x -> x <= raw))`` — a scan of a
-    small broadcast-side array, no shuffle, no UDF.
-    """
-    n = F.size(xs)
-    k = F.size(F.filter(xs, lambda x: x <= raw))  # xs[0..k-1] <= raw
-    x0 = F.element_at(xs, k)
-    x1 = F.element_at(xs, k + 1)
-    y0 = F.element_at(ys, k)
-    y1 = F.element_at(ys, k + 1)
-    interp = y0 + (raw - x0) / (x1 - x0) * (y1 - y0)
-    return (
-        F.when(k == 0, F.element_at(ys, 1))  # below table → clamp low
-        .when(k >= n, F.element_at(ys, n))  # above table → clamp high
-        .otherwise(interp)
-    )

@@ -137,10 +137,6 @@ def _zigzag(r: int) -> int:
     return (r << 1) if r >= 0 else ((-r) << 1) - 1
 
 
-def _unzigzag(u: int) -> int:
-    return (u >> 1) if (u & 1) == 0 else -((u + 1) >> 1)
-
-
 _FIXED_COEFS = {
     0: [],
     1: [1],

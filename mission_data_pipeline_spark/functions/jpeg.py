@@ -349,20 +349,6 @@ def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     return out
 
 
-def _huff_decode_map(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(nbits, code) -> symbol."""
-    out: dict[tuple[int, int], int] = {}
-    code = 0
-    k = 0
-    for ln in range(1, 17):
-        for _ in range(bits[ln - 1]):
-            out[(ln, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
 def _huff_lut(bits: list[int], vals: list[int]) -> list[int]:
     """16-bit-prefix decode table: ``lut[peek16] = (symbol << 5) | len``
     (0 = no code owns that prefix → invalid stream). A canonical JPEG

@@ -1,7 +1,7 @@
-"""Calibration application pass: params_df ⋈ calibration table → params_df.
+"""Calibration application pass: params_df + calibration entries → params_df.
 
 Parity: reference ``src/mdp/plugins/transformers/calibration.py:75-119``:
-- only parameters with a calibration entry are touched (left join);
+- only parameters with a calibration entry are touched;
 - polynomial / table / identity methods (``:53-67``);
 - samples whose raw value is non-numeric are **kept unchanged**
   (``:112-113`` — our tidy schema already separates numeric
@@ -10,24 +10,24 @@ Parity: reference ``src/mdp/plugins/transformers/calibration.py:75-119``:
 - unit is overwritten by the calibration's unit when present
   (``:116-117``); ``calibration_id`` records the method.
 
-Spark-first shape, two paths chosen by input type (see
-``apply_calibrations``): plan-time config lists constant-fold into
-literal CASE dispatch inside whole-stage codegen; DataFrame calibration
-tables broadcast-hash left join with array-expression dispatch. Neither
-path shuffles the fact side.
+Spark-first shape: the calibration entries are plan-time config
+(the reference looks them up per parameter, ``:81-84``), so they
+constant-fold into a literal CASE dispatch with Horner / piecewise CASE
+chains inside whole-stage codegen — no join, no shuffle of the fact
+side.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
 
 from mission_data_pipeline_spark.functions.calibrate import (
-    piecewise_from_arrays,
-    polynomial_from_array,
+    piecewise_linear_expr,
+    polynomial_expr,
 )
 
 
@@ -51,27 +51,6 @@ class Calibration:
             raise ValueError(f"unknown calibration method: {self.method}")
 
 
-def calibration_table(spark: SparkSession, cals: list[Calibration]) -> DataFrame:
-    rows = [
-        {
-            "name": c.parameter,
-            "cal_method": c.method,
-            "cal_coeffs": [float(x) for x in c.coefficients],
-            "cal_xs": [float(x) for x in c.table_raw],
-            "cal_ys": [float(x) for x in c.table_eng],
-            "cal_unit": c.unit,
-        }
-        for c in cals
-    ]
-    return spark.createDataFrame(
-        rows,
-        schema=(
-            "name string, cal_method string, cal_coeffs array<double>, "
-            "cal_xs array<double>, cal_ys array<double>, cal_unit string"
-        ),
-    )
-
-
 def _fill_defaults(params: DataFrame) -> DataFrame:
     # Tolerate partial input schemas (only name/raw_value are required):
     # missing optional columns materialize as typed nulls.
@@ -86,29 +65,22 @@ def _fill_defaults(params: DataFrame) -> DataFrame:
     return params
 
 
-def apply_calibrations(params: DataFrame, cals: list[Calibration] | DataFrame) -> DataFrame:
-    """Apply calibrations: constant-folded dispatch or broadcast join.
+def apply_calibrations(params: DataFrame, cals: Sequence[Calibration]) -> DataFrame:
+    """Apply calibration entries as a literal name-dispatch CASE.
 
-    A Python ``list[Calibration]`` is plan-time config — it compiles to a
-    literal name-dispatch CASE with Horner / piecewise CASE chains, fully
-    inside whole-stage codegen (zero join, zero higher-order lambdas,
-    first entry wins on duplicate names — the reference's dict semantics,
-    ``calibration.py:81-84``). Pass a DataFrame instead when the
-    calibration table is *data* (large or runtime-loaded): that path is a
-    broadcast-hash left join + array-expression dispatch, one plan for
-    any MIB size.
+    The entries compile to Horner / piecewise CASE chains, fully inside
+    whole-stage codegen (zero join, zero higher-order lambdas). First
+    entry wins on duplicate names — the reference's dict semantics,
+    ``calibration.py:81-84``.
     """
-    if isinstance(cals, list):
-        return _apply_literal(_fill_defaults(params), cals)
-    return _apply_join(_fill_defaults(params), cals)
-
-
-def _apply_literal(params: DataFrame, cals: list[Calibration]) -> DataFrame:
-    from mission_data_pipeline_spark.functions.calibrate import (
-        piecewise_linear_expr,
-        polynomial_expr,
-    )
-
+    if not isinstance(cals, Sequence) or not all(
+        isinstance(c, Calibration) for c in cals
+    ):
+        raise TypeError(
+            "apply_calibrations expects a sequence of Calibration entries, "
+            f"got {type(cals).__name__}"
+        )
+    params = _fill_defaults(params)
     if not cals:
         return params
     name = F.col("name")
@@ -134,35 +106,4 @@ def _apply_literal(params: DataFrame, cals: list[Calibration]) -> DataFrame:
         params.withColumn("eng_value", w_eng.otherwise(F.col("eng_value")))
         .withColumn("unit", w_unit.otherwise(F.col("unit")))
         .withColumn("calibration_id", w_cid.otherwise(F.col("calibration_id")))
-    )
-
-
-def _apply_join(params: DataFrame, cal_df: DataFrame) -> DataFrame:
-    joined = params.join(broadcast(cal_df), on="name", how="left")
-    raw = F.col("raw_value")
-    calibrated = (
-        F.when(F.col("cal_method") == "polynomial", polynomial_from_array(raw, F.col("cal_coeffs")))
-        .when(F.col("cal_method") == "table", piecewise_from_arrays(raw, F.col("cal_xs"), F.col("cal_ys")))
-        .when(F.col("cal_method") == "identity", raw)
-    )
-    has_cal = F.col("cal_method").isNotNull()
-    # Non-numeric raw (raw_value null, value lives in raw_value_str):
-    # keep sample unchanged (reference :112-113).
-    applies = has_cal & raw.isNotNull()
-
-    return (
-        joined.withColumn(
-            "eng_value", F.when(applies, calibrated).otherwise(F.col("eng_value"))
-        )
-        .withColumn(
-            "unit",
-            F.when(has_cal, F.coalesce(F.col("cal_unit"), F.col("unit"))).otherwise(
-                F.col("unit")
-            ),
-        )
-        .withColumn(
-            "calibration_id",
-            F.when(applies, F.col("cal_method")).otherwise(F.col("calibration_id")),
-        )
-        .drop("cal_method", "cal_coeffs", "cal_xs", "cal_ys", "cal_unit")
     )

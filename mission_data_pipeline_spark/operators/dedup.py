@@ -1,14 +1,13 @@
 """Document deduplication operators — SURVEY §2.11 X1/X2.
 
-Training-data dedup at 100 TB, four strategies (each also declared as an
-oracle-checked query in ``plans/queries.py``):
+Training-data dedup at 100 TB, three strategies (each also declared as
+an oracle-checked query in ``plans/queries.py``; SimHash is declared
+there as SQL only):
 
 - exact: content-hash groupBy (one shuffle on a 64-bit key);
 - MinHash + LSH banding: shingle → per-seed min-hash → band → bucket
   join — candidate pairs WITHOUT a cross join (the classic
   Broder/LSH construction; cost is #collisions, not n²);
-- SimHash: 64-bit rotation-invariant fingerprint, near-dups = equal
-  fingerprints (or banded Hamming buckets);
 - n-gram Jaccard verification for candidate pairs (exact similarity on
   the *small* candidate set only).
 
@@ -534,39 +533,6 @@ def connected_components(
             "one real component into several"
         )
     return labels.select("node", F.col("comp").alias("component_id"))
-
-
-# -- SimHash ------------------------------------------------------------
-
-
-def simhash(docs: DataFrame, *, n: int = 3, bits: int = 64,
-            text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash fingerprint per doc: sign of per-bit weight sums.
-
-    Bit b of the fingerprint is 1 iff the majority of the doc's shingle
-    hashes have bit b set. Packed-vote construction: the per-bit ±1 vote
-    sums are ``bits`` parallel conditional-sum aggregates over the
-    shingle-hash rows — one groupBy(doc_id) with map-side partial
-    aggregation, no per-bit explode (the naive construction amplifies
-    the shingle table ``bits``× before its shuffle) and one Exchange
-    total. The fingerprint reassembly is a pure projection.
-    """
-    g = shingles(docs, n=n, text_col=text_col, id_col=id_col)
-    h = g.select("doc_id", F.xxhash64("gram").alias("h"))
-    votes = h.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.expr(f"(h >> {b}) & 1") == 1, F.lit(1)).otherwise(F.lit(-1))
-            ).alias(f"__s{b}")
-            for b in range(bits)
-        ]
-    )
-    fp = F.lit(0).cast("long")
-    for b in range(bits):
-        fp = fp + F.when(
-            F.col(f"__s{b}") > 0, F.expr(f"shiftleft(1L, {b})")
-        ).otherwise(F.lit(0).cast("long"))
-    return votes.select("doc_id", fp.alias("simhash"))
 
 
 def duplicate_span_fraction(

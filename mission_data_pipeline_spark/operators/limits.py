@@ -12,22 +12,23 @@ Alarm levels: 0 nominal, 1 warning (outside warn band), 3 critical
 (outside critical band) — level 2 is reserved for user-defined bands,
 matching the model's 0–3 range. ``out_of_limit = alarm_level > 0``.
 
-Same two-path shape as calibration (``operators/calibration.py``):
-plan-time config lists constant-fold into a literal CASE dispatch inside
-whole-stage codegen; DataFrame limit tables broadcast-hash left join.
-Neither path shuffles the fact side, so limit checking composes with
-decom/calibration into a single map-side stage at any scale.
+Same shape as calibration (``operators/calibration.py``): the limit
+definitions are plan-time config and constant-fold into a literal CASE
+dispatch inside whole-stage codegen. The fact side never shuffles, so
+limit checking composes with decom/calibration into a single map-side
+stage at any scale.
 """
 
 from __future__ import annotations
 
+import math
+from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
 
-__all__ = ["LimitDefinition", "limit_table", "apply_limits"]
+__all__ = ["LimitDefinition", "apply_limits"]
 
 
 @dataclass(frozen=True)
@@ -41,6 +42,12 @@ class LimitDefinition:
     crit_high: float | None = None
 
     def __post_init__(self) -> None:
+        for bound in ("warn_low", "warn_high", "crit_low", "crit_high"):
+            x = getattr(self, bound)
+            # Spark orders NaN above every number, so a NaN low bound
+            # would trip on every sample and a NaN high bound on none.
+            if x is not None and math.isnan(x):
+                raise ValueError(f"limits for {self.parameter!r}: {bound} is NaN")
         lows = [x for x in (self.crit_low, self.warn_low) if x is not None]
         highs = [x for x in (self.warn_high, self.crit_high) if x is not None]
         if lows + highs != sorted(lows + highs):
@@ -48,26 +55,6 @@ class LimitDefinition:
                 f"limits for {self.parameter!r} must satisfy "
                 "crit_low <= warn_low <= warn_high <= crit_high"
             )
-
-
-def limit_table(spark: SparkSession, limits: list[LimitDefinition]) -> DataFrame:
-    rows = [
-        {
-            "name": d.parameter,
-            "lim_warn_low": d.warn_low,
-            "lim_warn_high": d.warn_high,
-            "lim_crit_low": d.crit_low,
-            "lim_crit_high": d.crit_high,
-        }
-        for d in limits
-    ]
-    return spark.createDataFrame(
-        rows,
-        schema=(
-            "name string, lim_warn_low double, lim_warn_high double, "
-            "lim_crit_low double, lim_crit_high double"
-        ),
-    )
 
 
 def _level(
@@ -105,7 +92,7 @@ def _fill_defaults(params: DataFrame) -> DataFrame:
 
 def apply_limits(
     params: DataFrame,
-    limits: list[LimitDefinition] | DataFrame,
+    limits: Sequence[LimitDefinition],
     *,
     value_col: str = "eng_value",
 ) -> DataFrame:
@@ -113,25 +100,22 @@ def apply_limits(
 
     Parameters without a limit entry keep their existing values
     (left-join semantics, mirroring calibration's touch-only-configured
-    contract). First entry wins on duplicate names in the list path.
+    contract). First entry wins on duplicate names.
 
-    Both paths agree on two edge cases: a definition whose bounds are
-    ALL None defines no check and leaves the parameter untouched, and a
-    null ``eng_value`` on a checked parameter preserves any prior alarm
-    state rather than resetting it to nominal (validity is a separate
-    concern; an alarm must not clear on a data gap).
+    A definition whose bounds are ALL None defines no check and leaves
+    the parameter untouched, and a null ``eng_value`` on a checked
+    parameter preserves any prior alarm state rather than resetting it
+    to nominal (validity is a separate concern; an alarm must not clear
+    on a data gap).
     """
+    if not isinstance(limits, Sequence) or not all(
+        isinstance(d, LimitDefinition) for d in limits
+    ):
+        raise TypeError(
+            "apply_limits expects a sequence of LimitDefinition entries, "
+            f"got {type(limits).__name__}"
+        )
     params = _fill_defaults(params)
-    if isinstance(limits, list):
-        return _apply_literal(params, limits, value_col)
-    return _apply_join(params, limits, value_col)
-
-
-def _apply_literal(
-    params: DataFrame, limits: list[LimitDefinition], value_col: str
-) -> DataFrame:
-    # All-None-bounds definitions define no check (mirror _apply_join's
-    # has_limit, where an all-null row keeps existing values).
     limits = [
         d
         for d in limits
@@ -158,34 +142,4 @@ def _apply_literal(
     ).withColumn(
         "out_of_limit",
         F.when(matched, F.col("alarm_level") > 0).otherwise(F.col("out_of_limit")),
-    )
-
-
-def _apply_join(params: DataFrame, limit_df: DataFrame, value_col: str) -> DataFrame:
-    joined = params.join(broadcast(limit_df), on="name", how="left")
-    has_limit = (
-        F.col("lim_warn_low").isNotNull()
-        | F.col("lim_warn_high").isNotNull()
-        | F.col("lim_crit_low").isNotNull()
-        | F.col("lim_crit_high").isNotNull()
-    )
-    val = F.col(value_col).cast("double")
-    # Null values on a checked parameter keep their prior alarm state.
-    checked = has_limit & val.isNotNull()
-    lv = _level(
-        val,
-        F.col("lim_warn_low"),
-        F.col("lim_warn_high"),
-        F.col("lim_crit_low"),
-        F.col("lim_crit_high"),
-    )
-    return (
-        joined.withColumn(
-            "alarm_level", F.when(checked, lv).otherwise(F.col("alarm_level"))
-        )
-        .withColumn(
-            "out_of_limit",
-            F.when(checked, lv > 0).otherwise(F.col("out_of_limit")),
-        )
-        .drop("lim_warn_low", "lim_warn_high", "lim_crit_low", "lim_crit_high")
     )

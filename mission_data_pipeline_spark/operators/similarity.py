@@ -251,30 +251,6 @@ def _np_argmax_udf(cents: list[tuple[int, list[float]]], *, round_digits: int = 
     return assign
 
 
-def lsh_buckets(
-    df: DataFrame,
-    *,
-    bits: int = 8,
-    tables: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """(id, table, bucket) — one row per hash table.
-
-    All ``tables`` sketches are computed in ONE pass over the input
-    (one Arrow-batched matmul + posexplode), not one scan per table:
-    at 100 TB the corpus is read exactly once.
-    """
-    if dim is None:
-        dim = _vec_dim(df, vec_col)
-    buckets = _np_bucket_udf(bits=bits, tables=tables, dim=dim)
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(buckets(F.col(vec_col))).alias("table", "bucket"),
-    )
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -336,34 +312,6 @@ def lsh_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    )
-
-
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """(id, centroid_id): nearest centroid per vector (IVF coarse quantizer).
-
-    ``centroids`` is (centroid_id, centroid_vec) — a driver-sized model
-    codebook, materialized into an Arrow-batched NumPy argmax
-    (:func:`_np_argmax_udf`): pure map-side compute, no crossJoin, no
-    per-id window shuffle. The assignment ranks on
-    round(cosine, round_digits) with centroid_id as the tie-break,
-    which makes cluster membership reproducible across engines and runs
-    (an exact-float argmax is not).
-    """
-    cents = _centroid_literals(centroids)
-    if not cents:
-        raise ValueError("ivf_assign needs at least one centroid")
-    np_assign = _np_argmax_udf(cents, round_digits=round_digits)
-    return corpus.select(
-        F.col(id_col).alias("id"),
-        np_assign(F.col(vec_col)).alias("centroid_id"),
     )
 
 

@@ -1083,7 +1083,6 @@ def heldout_backoff_logprob(
     alpha: float = 0.4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    single_pass_train: bool = True,
 ) -> DataFrame:
     """Held-out LM scoring with stupid backoff (Brants et al. 2007) —
     the real shape of the CCNet/KenLM perplexity filter: the language
@@ -1110,20 +1109,10 @@ def heldout_backoff_logprob(
     the train-side count tables are vocabulary-sized; DECIMAL-exact
     contribution sums for the oracle.
 
-    ``single_pass_train`` (DEFAULT True) restructures the TRAIN side
-    for corpus scale: the two-pass plan explodes the train corpus once
-    per consumer subtree (the gram explode feeds the cb and ch
-    aggregates separately, the token explode feeds cf and ctot), while
-    the single-pass form derives ``cb``/``ch`` from ONE
-    vocabulary-sized (gh, hh) pair-count table and ``ctot`` from ``cf``
-    — two full corpus explodes become one each, with only extra
-    vocabulary-sized shuffles in exchange (guide §2.3, aggregate before
-    you shuffle). Results are identical (pinned by a pytest). r14 had
-    measured the restructure ~15% slower at sf0.1 on a noise-loaded
-    box; the r15 calm-box interleaved A/B reads FLAT at sf0.1 (med
-    0.66 vs 0.66 s) and ~11% faster at sfx10 (med 1.04 vs 1.16 s), so
-    the corpus-scale shape is now the default; pass False for the
-    two-pass lineage.
+    The train corpus is exploded once into grams and once into tokens:
+    ``cb`` and ``ch`` both derive from ONE vocabulary-sized (gh, hh)
+    pair-count table, and ``ctot`` from ``cf``, so each explode feeds a
+    single aggregate (guide §2.3, aggregate before you shuffle).
     """
     from mission_data_pipeline_spark.operators.dedup import word_ngrams
 
@@ -1142,27 +1131,19 @@ def heldout_backoff_logprob(
         F.xxhash64("gram").alias("gh"),
         F.xxhash64(F.substring_index("gram", " ", 1)).alias("hh"),
     )
-    tt = toks_of(docs_train)
-    cf = tt.groupBy(F.xxhash64("w").alias("wh")).agg(
+    cf = toks_of(docs_train).groupBy(F.xxhash64("w").alias("wh")).agg(
         F.count("*").cast("double").alias("cf")
     )
-    if single_pass_train:
-        # one (gh, hh) pair-count shuffle over the gram table; gh is a
-        # hash of the full bigram so it determines hh up to 64-bit
-        # collisions — cb still groups by gh alone so a collision
-        # cannot change the count vs the two-pass form
-        pc = tg.groupBy("gh", "hh").agg(F.count("*").alias("__n"))
-        cb = pc.groupBy("gh").agg(F.sum("__n").cast("double").alias("cb"))
-        ch = pc.groupBy("hh").agg(F.sum("__n").cast("double").alias("ch"))
-        # coalesce: sum over an EMPTY vocab is NULL where count(*) on
-        # the empty token table is 0 — keep the two forms identical
-        ctot = cf.agg(
-            F.coalesce(F.sum("cf"), F.lit(0.0)).cast("double").alias("ctot")
-        )
-    else:
-        cb = tg.groupBy("gh").agg(F.count("*").cast("double").alias("cb"))
-        ch = tg.groupBy("hh").agg(F.count("*").cast("double").alias("ch"))
-        ctot = tt.agg(F.count("*").cast("double").alias("ctot"))
+    # one (gh, hh) pair-count shuffle over the gram table; gh is a hash
+    # of the full bigram so it determines hh up to 64-bit collisions —
+    # cb still groups by gh alone so a collision cannot change its count
+    pc = tg.groupBy("gh", "hh").agg(F.count("*").alias("__n"))
+    cb = pc.groupBy("gh").agg(F.sum("__n").cast("double").alias("cb"))
+    ch = pc.groupBy("hh").agg(F.sum("__n").cast("double").alias("ch"))
+    # coalesce: sum over an EMPTY vocab is NULL; the token count is 0
+    ctot = cf.agg(
+        F.coalesce(F.sum("cf"), F.lit(0.0)).cast("double").alias("ctot")
+    )
 
     sg = grams_of(docs_score).select(
         "doc_id",

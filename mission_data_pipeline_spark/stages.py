@@ -191,7 +191,7 @@ class CalibrationConfig(StageConfig):
 
 @registry.transformer("calibration")
 class CalibrationTransformer(Transformer):
-    """T9–T12: broadcast-join calibration pass (``calibration.py:75-119``)."""
+    """T9–T12: calibration pass, a literal CASE dispatch (``calibration.py:75-119``)."""
 
     config_model = CalibrationConfig
 

@@ -260,111 +260,3 @@ def ewma_stream(stream: DataFrame, *, alpha: float) -> DataFrame:
         outputMode="append",
         timeoutConf="NoTimeout",
     )
-
-
-# -- transformWithStateInPandas (Spark 4 arbitrary-state API) -----------
-
-TWS_TOPK_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("n_types", T.LongType()),
-        T.StructField("top3_sum", T.DoubleType()),
-    ]
-)
-
-
-def running_topk_stats(stream: DataFrame) -> DataFrame:
-    """Per-key running (count, distinct-type count, top-3-value sum) via
-    ``transformWithStateInPandas`` — Spark 4's arbitrary-state successor
-    to ``applyInPandasWithState``, exercising all three typed state
-    primitives the new API adds over the single-tuple legacy state:
-
-    - ``ValueState`` — the running event count;
-    - ``ListState`` — the current top-3 values (a bounded sketch: state
-      is O(3) per key no matter the throughput);
-    - ``MapState`` — per-event-type counts, read-modify-write via
-      ``getValue``/``updateValue``; ``n_types`` = its key cardinality.
-
-    Every accumulator is order-independent (count, set cardinality,
-    running top-k), so the final emission per key must equal the batch
-    GROUP BY however the source splits into micro-batches — the same
-    contract :func:`cumulative_group_stats` pins for the legacy API.
-
-    Input needs ``(key, event_id, event_type, value)``; append mode,
-    ``timeMode="none"``. NOTE: the new API requires (a) the RocksDB
-    state store provider (``spark.sql.streaming.stateStore
-    .providerClass`` = ``...state.RocksDBStateStoreProvider``) — the
-    HDFS-backed default refuses transformWithState queries — and (b)
-    the ``protobuf`` Python package (the PySpark state-server protocol
-    is protobuf-based). ENV-GATED here: this sandbox has no protobuf
-    and installs are forbidden, so the operator raises loudly up front
-    (a missing protobuf otherwise surfaces as an opaque "driver worker
-    exited unexpectedly (crashed)" stream failure) and its declared
-    query is withheld; the logic follows the public API and activates
-    unchanged once protobuf is present.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:  # pragma: no cover - env-dependent
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(PySpark's state-server protocol is protobuf-based); it is "
-            "not installed in this environment. Use "
-            "applyInPandasWithState (cumulative_group_stats) instead, "
-            "or install protobuf."
-        ) from e
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _TopKRunning(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._n = handle.getValueState("n", "n bigint")
-            self._top = handle.getListState("top", "v double")
-            self._types = handle.getMapState("types", "t string", "c bigint")
-
-        def handleInputRows(self, key, rows, timer_values):
-            (k,) = key
-            n = self._n.get()[0] if self._n.exists() else 0
-            top = (
-                sorted((t[0] for t in self._top.get()), reverse=True)
-                if self._top.exists()
-                else []
-            )
-            for pdf in rows:
-                n += len(pdf)
-                for t, c in pdf["event_type"].value_counts().items():
-                    prev = self._types.getValue((str(t),))
-                    self._types.updateValue(
-                        (str(t),), ((prev[0] if prev else 0) + int(c),)
-                    )
-                top = sorted(
-                    top + [float(x) for x in pdf["value"].tolist()],
-                    reverse=True,
-                )[:3]
-            self._n.update((int(n),))
-            self._top.put([(v,) for v in top])
-            n_types = sum(1 for _ in self._types.keys())
-            yield pd.DataFrame(
-                [
-                    {
-                        "key": k,
-                        "n_events": int(n),
-                        "n_types": int(n_types),
-                        "top3_sum": round(sum(top), 6),
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=_TopKRunning(),
-        outputStructType=TWS_TOPK_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )

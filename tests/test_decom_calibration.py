@@ -156,29 +156,42 @@ def test_apid_filter_include_exclude(spark, mixed_apid_bin):
     assert apid_filter(pk).count() == 30  # passthrough
 
 
-def test_dataframe_cal_table_path_matches_literal(spark):
-    """calibration-as-DataFrame (broadcast join) ≡ calibration-as-config
-    (literal dispatch) on the same samples."""
-    from mission_data_pipeline_spark.operators.calibration import calibration_table
-
-    cals = [
+def test_mixed_methods_hand_computed(spark):
+    """Polynomial with unit override, table interpolation and clamp,
+    identity and an uncalibrated passthrough in one pass, from a tuple of
+    entries; on a duplicate name the first entry wins."""
+    cals = (
         Calibration("p", "polynomial", (-55.0, 0.5), unit="degC"),
         Calibration("t", "table", table_raw=(0, 10), table_eng=(0, 100), unit="u"),
         Calibration("i", "identity"),
-    ]
+        Calibration("p", "polynomial", (0.0, 100.0), unit="K"),  # shadowed
+    )
     params = spark.createDataFrame(
         [("p", 10.0), ("t", 5.0), ("t", 40.0), ("i", 7.0), ("other", 1.0)],
         "name string, raw_value double",
     ).withColumn("eng_value", F.col("raw_value"))
-    lit_rows = sorted(
-        apply_calibrations(params, cals).collect(),
-        key=lambda r: (r["name"], r["raw_value"]),
+    rows = sorted(
+        (r["name"], r["raw_value"], r["eng_value"], r["unit"], r["calibration_id"])
+        for r in apply_calibrations(params, cals).collect()
     )
-    df_rows = sorted(
-        apply_calibrations(params, calibration_table(spark, cals)).collect(),
-        key=lambda r: (r["name"], r["raw_value"]),
-    )
-    assert [r.asDict() for r in lit_rows] == [r.asDict() for r in df_rows]
+    assert rows == [
+        ("i", 7.0, 7.0, None, "identity"),
+        ("other", 1.0, 1.0, None, None),
+        ("p", 10.0, -50.0, "degC", "polynomial"),  # -55 + 0.5 * 10
+        ("t", 5.0, 50.0, "u", "table"),  # 0 + 5/10 * 100
+        ("t", 40.0, 100.0, "u", "table"),  # clamp above
+    ]
+
+
+def test_non_sequence_calibrations_rejected(spark):
+    """A DataFrame calibration table is no longer accepted: the error
+    names the expected entry type instead of failing inside the plan."""
+    params = spark.createDataFrame([("p", 1.0)], "name string, raw_value double")
+    table = spark.createDataFrame([("p", "identity")], "name string, cal_method string")
+    with pytest.raises(TypeError, match="Calibration"):
+        apply_calibrations(params, table)
+    with pytest.raises(TypeError, match="Calibration"):
+        apply_calibrations(params, [("p", "identity")])
 
 
 def test_decom_calibrate_is_shuffle_free(spark, hk_bin):
@@ -207,9 +220,8 @@ def test_decom_calibrate_is_shuffle_free(spark, hk_bin):
         .toString()
         .split("== Initial Plan ==")[0]
     )
-    # The only exchange allowed is read_packets' range-descriptor
-    # repartition (one row PER SCAN RANGE — task distribution, not a
-    # data shuffle); packet/param rows must never hash-shuffle and no
-    # join node may appear (the MIB compiles into expressions).
-    assert "Exchange hashpartitioning" not in plan
+    # read_packets plans one slice per scan range without a repartition,
+    # so no Exchange of any kind may appear, and no join node either
+    # (the MIB compiles into expressions).
+    assert "Exchange" not in plan
     assert "Join" not in plan

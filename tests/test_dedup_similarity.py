@@ -11,7 +11,6 @@ from mission_data_pipeline_spark.operators.dedup import (
     minhash_signatures,
     near_dedup_minhash,
     shingles,
-    simhash,
 )
 from mission_data_pipeline_spark.operators.similarity import (
     cosine_topk,
@@ -293,25 +292,6 @@ def test_incremental_probe_cap_bounds_corpus_bucket(spark):
         )
 
 
-def test_simhash_equal_for_identical(docs):
-    out = {r["doc_id"]: r["simhash"] for r in simhash(docs, n=2).collect()}
-    assert out[1] == out[2]
-    assert out[1] != out[4]
-    # near-dup: small Hamming distance
-    ham = bin(out[1] ^ out[3]).count("1")
-    assert ham <= 16
-
-
-def test_simhash_single_exchange(docs):
-    """Packed-vote SimHash: ONE shuffle total. No per-bit explode (the
-    naive construction has an extra Exchange on (doc_id, bit) over a
-    64x-amplified row set), and since shingles() partitions by doc_id
-    before its distinct (round 12), the dedup AND the vote
-    groupBy(doc_id) both run doc-local on that single exchange."""
-    plan = simhash(docs, n=2)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1
-
-
 def test_connected_components_transitive_chain(spark):
     """A 5-node chain (1-2, 2-3, 3-4, 4-5) needs min-label iteration to a
     fixpoint — one round of min-id chaining would under-merge it."""
@@ -547,7 +527,6 @@ def test_operators_handle_empty_inputs(spark):
     from mission_data_pipeline_spark.operators.dedup import (
         exact_dedup,
         near_dedup_minhash,
-        simhash,
     )
     from mission_data_pipeline_spark.operators.packing import (
         chunk_tokens,
@@ -569,7 +548,6 @@ def test_operators_handle_empty_inputs(spark):
     assert near_dedup_minhash(
         ed, n=2, num_hashes=4, bands=2, threshold=0.5
     ).count() == 0
-    assert simhash(ed).count() == 0
     assert connected_components(
         spark.createDataFrame([], "doc_a long, doc_b long")
     ).count() == 0

@@ -1,4 +1,5 @@
-"""Limit monitoring (operators/limits.py): literal and join paths agree."""
+"""Limit monitoring (operators/limits.py): definition lists compile to a
+literal CASE dispatch over ``eng_value``."""
 
 from __future__ import annotations
 
@@ -8,7 +9,6 @@ from pyspark.sql import functions as F
 from mission_data_pipeline_spark.operators.limits import (
     LimitDefinition,
     apply_limits,
-    limit_table,
 )
 
 ROWS = [
@@ -55,9 +55,21 @@ def test_literal_path_levels(spark, params):
     assert _levels(apply_limits(params, LIMITS)) == EXPECTED
 
 
-def test_join_path_matches_literal(spark, params):
-    lt = limit_table(spark, LIMITS)
-    assert _levels(apply_limits(params, lt)) == EXPECTED
+def test_tuple_input_and_first_entry_wins(spark, params):
+    """Any sequence of definitions works; on a duplicate name the first
+    entry wins (a later, looser band must not override it)."""
+    loose = LimitDefinition("temp", crit_high=1000.0)
+    assert _levels(apply_limits(params, tuple(LIMITS) + (loose,))) == EXPECTED
+
+
+def test_non_sequence_limits_rejected(spark, params):
+    """A DataFrame limit table is no longer accepted: the error names the
+    expected entry type instead of failing deep inside the plan."""
+    table = spark.createDataFrame([("temp", 0.0)], "name string, crit_low double")
+    with pytest.raises(TypeError, match="LimitDefinition"):
+        apply_limits(params, table)
+    with pytest.raises(TypeError, match="LimitDefinition"):
+        apply_limits(params, [("temp", 0.0)])
 
 
 def test_one_sided_limit(spark):
@@ -77,9 +89,9 @@ def test_untouched_columns_preserved(spark):
     assert (r["alarm_level"], r["out_of_limit"]) == (2, True)
 
 
-def test_null_value_preserves_prior_alarm_both_paths(spark):
+def test_null_value_preserves_prior_alarm(spark):
     """An in-alarm parameter that goes null (data gap) must stay in alarm,
-    and an all-None-bounds definition defines no check — in BOTH paths."""
+    and an all-None-bounds definition defines no check."""
     df = spark.createDataFrame(
         [("temp", None, 3, True), ("idle", 5.0, 2, True)],
         "name string, eng_value double, alarm_level int, out_of_limit boolean",
@@ -87,12 +99,20 @@ def test_null_value_preserves_prior_alarm_both_paths(spark):
     defs = LIMITS + [LimitDefinition("idle")]  # idle: all bounds None
     expect = [("idle", 5.0, 2, True), ("temp", None, 3, True)]
     assert _levels(apply_limits(df, defs)) == expect
-    assert _levels(apply_limits(df, limit_table(spark, defs))) == expect
 
 
 def test_misordered_bounds_rejected():
     with pytest.raises(ValueError):
         LimitDefinition("p", warn_low=10.0, crit_low=20.0)
+
+
+def test_nan_bound_rejected():
+    """Spark orders NaN above every number, so a NaN low bound would trip
+    on every sample and a NaN high bound on none, both silently."""
+    with pytest.raises(ValueError, match="'temp'.*crit_low"):
+        LimitDefinition("temp", crit_low=float("nan"), warn_high=50.0)
+    with pytest.raises(ValueError, match="'temp'.*warn_high"):
+        LimitDefinition("temp", warn_high=float("nan"))
 
 
 def test_decom_pipeline_integration(spark, hk_bin):
@@ -118,8 +138,15 @@ def test_decom_pipeline_integration(spark, hk_bin):
     }
     # obc_temp = -55 + 0.04394531 * (2048 + 200*sin(i/20)) spans ~26..45 degC
     assert set(by_level) == {0, 1, 3} and sum(by_level.values()) == 200
-    # no data shuffle anywhere in scan->decom->calibrate->limits (the
-    # binary source's SinglePartition exchange of per-split range
-    # descriptors — one tiny row per split — is scan setup, not data)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
+    # scan->decom->calibrate->limits is one narrow pipeline: the scan
+    # plans its ranges without a repartition and the definitions compile
+    # into expressions, so no Exchange of any kind and no join appear
+    out.collect()
+    plan = (
+        out._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+        .split("== Initial Plan ==")[0]
+    )
+    assert "Exchange" not in plan
+    assert "Join" not in plan

@@ -395,103 +395,6 @@ def test_checkpoint_restart_exactly_once_with_merge_sink(spark, tmp_path):
     assert got == set(rows), (len(got), n_partial)
 
 
-def test_transform_with_state_gate_without_protobuf(spark):
-    """Without the protobuf package the operator must refuse loudly up
-    front (the raw failure mode is an opaque mid-stream worker crash)."""
-    import pytest
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        pytest.skip("protobuf installed - gate not applicable")
-    except ImportError:
-        pass
-    from mission_data_pipeline_spark.streaming.stateful import (
-        running_topk_stats,
-    )
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .selectExpr("value AS key", "value AS event_id",
-                    "'t' AS event_type", "CAST(value AS DOUBLE) AS value")
-    )
-    with pytest.raises(ImportError, match="protobuf"):
-        running_topk_stats(stream)
-
-
-def test_transform_with_state_running_topk(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas: ValueState count + ListState
-    top-3 + MapState type counts fold across micro-batches (RocksDB
-    provider); final emission equals batch-computed expectations.
-    ENV-GATED: needs the protobuf package (state-server protocol)."""
-    import json
-
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-
-    from mission_data_pipeline_spark.streaming.stateful import (
-        running_topk_stats,
-    )
-
-    root = tmp_path / "ev"
-    root.mkdir()
-    b1 = [(1, 10, "view", 5.0), (1, 11, "click", 9.0), (1, 12, "view", 1.0)]
-    b2 = [(1, 13, "buy", 7.0), (1, 14, "view", 8.0), (2, 20, "view", 2.0)]
-    for name, rows in (("a.json", b1), ("b.json", b2)):
-        (root / name).write_text(
-            "\n".join(
-                json.dumps(
-                    {"key": k, "event_id": i, "event_type": t, "value": v}
-                )
-                for k, i, t, v in rows
-            )
-            + "\n"
-        )
-    stream = (
-        spark.readStream.schema(
-            "key long, event_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .json(str(root))
-    )
-    knob = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(knob, None)
-    spark.conf.set(
-        knob,
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            running_topk_stats(stream)
-            .writeStream.format("memory")
-            .queryName("tws_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if prev is None:
-            spark.conf.unset(knob)
-        else:
-            spark.conf.set(knob, prev)
-    rows = spark.sql("SELECT * FROM tws_sink").collect()
-    by_key = {}
-    for r in rows:
-        by_key.setdefault(r["key"], []).append(r)
-    ones = sorted(by_key[1], key=lambda r: r["n_events"])
-    # batch 1: 3 events, 2 types, top3 = 9+5+1
-    assert (ones[0]["n_events"], ones[0]["n_types"]) == (3, 2)
-    assert ones[0]["top3_sum"] == 15.0
-    # batch 2 folds state: 5 events, 3 types, top3 = 9+8+7
-    assert (ones[-1]["n_events"], ones[-1]["n_types"]) == (5, 3)
-    assert ones[-1]["top3_sum"] == 24.0
-    (two,) = by_key[2]
-    assert (two["n_events"], two["n_types"], two["top3_sum"]) == (1, 1, 2.0)
-
-
 def test_ewma_stream_state_and_null_skip_across_batches(spark, tmp_path):
     """Streaming EWMA carries the smoothing state across micro-batches
     and skips nulls exactly like the batch operator: a null value emits

@@ -604,11 +604,11 @@ def test_heldout_backoff_branches(spark):
     assert abs(r["neg_logprob"] - exp) < 1e-5
 
 
-def test_heldout_backoff_single_pass_train_identical(spark):
-    """single_pass_train=True (the default: one (gh,hh) pair-count table
-    deriving cb/ch, ctot from cf — the corpus-scale shape) must produce
-    exactly the two-pass form's rows (single_pass_train=False), all
-    three branches included."""
+def test_heldout_backoff_multi_doc_hand_computed(spark):
+    """Counts pool across train docs (an empty one adds nothing), all
+    three branches fire, and a score doc with no bigram yields no row."""
+    import math
+
     from mission_data_pipeline_spark.operators.text import (
         heldout_backoff_logprob,
     )
@@ -621,24 +621,21 @@ def test_heldout_backoff_single_pass_train_identical(spark):
         [(10, "a b z a"), (11, "e e q"), (12, "solo")],
         "doc_id long, text string",
     )
-    two = sorted(
-        map(
-            tuple,
-            heldout_backoff_logprob(
-                train, score, single_pass_train=False
-            ).collect(),
-        )
-    )
-    one = sorted(
-        map(
-            tuple,
-            heldout_backoff_logprob(
-                train, score, single_pass_train=True
-            ).collect(),
-        )
-    )
-    assert one == two
-    assert len(two) == 2  # doc 12 has no bigrams
+    # train: 11 tokens; C(a)=3; bigrams a b x2, b a x2, a c, c d, d e,
+    # e e x2, so C(a ·)=3 and C(e ·)=2
+    oov = -math.log(0.4 / (11 + 1))
+    exp = {
+        # a b seen (2/3), b z OOV, z a backoff to unigram a (0.4 * 3/11)
+        10: (3, 1, 1, (-math.log(2 / 3) + oov - math.log(0.4 * 3 / 11)) / 3),
+        # e e seen (2/2), e q OOV
+        11: (2, 0, 1, (-math.log(2 / 2) + oov) / 2),
+    }
+    rows = heldout_backoff_logprob(train, score, alpha=0.4).collect()
+    assert {r["doc_id"] for r in rows} == set(exp)  # doc 12: no bigram
+    for r in rows:
+        n, n_backoff, n_oov, neg = exp[r["doc_id"]]
+        assert (r["n_bigrams"], r["n_backoff"], r["n_oov"]) == (n, n_backoff, n_oov)
+        assert abs(r["neg_logprob"] - neg) < 1e-6
 
 
 def test_canonicalize_url_variants(spark):
