@@ -74,7 +74,8 @@ def main() -> None:
             )
         assert len(gaps) == 1 and gaps[0]["missing"] == 5
 
-        # 3. Decom + calibrate (constant-folded Catalyst expressions).
+        # 3. Decom (the numpy decode kernel in one mapInArrow) + calibrate
+        # (constant-folded Catalyst expressions).
         defs = [
             ParameterDefinition("obc_temp", 0x100, 0, 16),
             ParameterDefinition("bus_voltage", 0x100, 2, 16),

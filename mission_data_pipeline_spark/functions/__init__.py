@@ -1,13 +1,4 @@
-from mission_data_pipeline_spark.functions.decode import (
-    slice_bytes,
-    decode_uint,
-    decode_int,
-    decode_float,
-    decode_bool,
-    decode_string,
-    decode_hex,
-    tai_time,
-)
+from mission_data_pipeline_spark.functions.decode import Payloads, tai_time
 from mission_data_pipeline_spark.functions.calibrate import (
     polynomial_expr,
     piecewise_linear_expr,
@@ -52,13 +43,7 @@ __all__ = [
     "probe_image_meta",
     "probe_video_meta",
     "sample_frames",
-    "slice_bytes",
-    "decode_uint",
-    "decode_int",
-    "decode_float",
-    "decode_bool",
-    "decode_string",
-    "decode_hex",
+    "Payloads",
     "tai_time",
     "polynomial_expr",
     "piecewise_linear_expr",

@@ -47,6 +47,15 @@ class Calibration:
             len(self.table_raw) != len(self.table_eng) or len(self.table_raw) < 2
         ):
             raise ValueError("table calibration needs >= 2 equal-length point lists")
+        if self.method == "table" and any(
+            b < a for a, b in zip(self.table_raw, self.table_raw[1:])
+        ):
+            # piecewise_linear_expr walks the knots in order; a descending
+            # pair would interpolate silently wrong
+            raise ValueError(
+                f"calibration {self.parameter!r}: table_raw must be ascending, "
+                f"got {tuple(self.table_raw)}"
+            )
         if self.method not in ("identity", "polynomial", "table"):
             raise ValueError(f"unknown calibration method: {self.method}")
 

@@ -29,8 +29,9 @@ def get_spark(
       table carries TIMESTAMP(NANOS) which Spark has no native type for;
       we read it as epoch-nanosecond longs and convert explicitly
       (see ``plans/tables.py``).
-    - Arrow execution for pandas UDFs (float-from-bytes decode and the
-      multimodal stubs are the only Python-side hot paths).
+    - Arrow execution for Python code over DataFrames: the binary packet
+      scan and decommutation are ``mapInArrow`` batches (NumPy over the
+      Arrow buffers), beside the multimodal decoders.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:

@@ -1,8 +1,8 @@
 """Seeded randomized sweep of the full decode matrix vs struct.unpack.
 
-One Spark job checks thousands of cases (hypothesis-per-example would
-pay a Spark round trip each): uint/int at 1/2/4/8 bytes, float32/64,
-both endiannesses, with adversarial patterns (all-zero, all-FF, sign
+The numpy kernel decodes thousands of cases straight from Arrow arrays
+(no Spark job): uint/int at 1/2/4/8 bytes, float32/64, both
+endiannesses, with adversarial patterns (all-zero, all-FF, sign
 boundaries, subnormals, inf, NaN) mixed into the random pool.
 """
 
@@ -10,8 +10,8 @@ import math
 import random
 import struct
 
+import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
 
 from mission_data_pipeline_spark.functions import decode as dec
 
@@ -46,22 +46,23 @@ def _cases():
 
 
 @pytest.fixture(scope="module")
-def decoded(spark):
+def decoded():
     rows = _cases()
-    df = spark.createDataFrame(
-        rows, "i long, b1 binary, b2 binary, b4 binary, b8 binary, f4 binary, f8 binary"
-    )
-    sel = [F.col("i")]
+    cols = {
+        name: dec.Payloads(pa.array([r[j] for r in rows], pa.binary()))
+        for j, name in enumerate(("b1", "b2", "b4", "b8", "f4", "f8"), start=1)
+    }
+    got = {}
     for n, col in ((1, "b1"), (2, "b2"), (4, "b4"), (8, "b8")):
         for le in (False, True):
             tag = f"{n}{'le' if le else 'be'}"
-            sel.append(dec.decode_uint(F.col(col), 0, n, le).cast("decimal(20,0)").alias(f"u{tag}"))
-            sel.append(dec.decode_int(F.col(col), 0, n, le).alias(f"s{tag}"))
+            got[f"u{tag}"] = cols[col].decode("uint", 0, n, le).to_pylist()
+            got[f"s{tag}"] = cols[col].decode("int", 0, n, le).to_pylist()
     for n, col in ((4, "f4"), (8, "f8")):
         for le in (False, True):
             tag = f"{n}{'le' if le else 'be'}"
-            sel.append(dec.decode_float(F.col(col), 0, n, le).alias(f"f{tag}"))
-    out = {r["i"]: r for r in df.select(*sel).collect()}
+            got[f"f{tag}"] = cols[col].decode("float", 0, n, le).to_pylist()
+    out = {i: {k: v[i] for k, v in got.items()} for i in range(len(rows))}
     return rows, out
 
 

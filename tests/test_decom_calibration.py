@@ -2,6 +2,7 @@
 ``tests/test_plugins_transformers.py:64-235``)."""
 
 import math
+import random
 import struct
 
 import pytest
@@ -69,6 +70,102 @@ def test_decom_short_payload_silently_skipped(spark, tmp_root):
     out = decommutate(pk, [ParameterDefinition("v", 0x10, 0, 32, ParameterType.UINT)])
     rows = out.collect()
     assert len(rows) == 1 and rows[0]["seq_count"] == 0
+
+
+#: every ParameterType, across two APIDs; 0x30 packets have no definitions
+ALL_TYPE_DEFS = [
+    ParameterDefinition("u16", 0x10, 0, 16, ParameterType.UINT, unit="dn"),
+    ParameterDefinition("i24_le", 0x10, 2, 24, ParameterType.INT, little_endian=True),
+    ParameterDefinition("f32", 0x10, 5, 32, ParameterType.FLOAT, unit="s"),
+    ParameterDefinition("f64_le", 0x10, 9, 64, ParameterType.DOUBLE, little_endian=True),
+    ParameterDefinition("flag", 0x10, 17, 1, ParameterType.BOOLEAN),
+    ParameterDefinition("mode", 0x10, 18, 8, ParameterType.ENUMERATED),
+    ParameterDefinition("u32_tail", 0x10, 20, 32, ParameterType.UINT),
+    ParameterDefinition("label", 0x20, 0, 48, ParameterType.STRING),
+    ParameterDefinition("blob", 0x20, 6, 24, ParameterType.BINARY),
+    ParameterDefinition("i16", 0x20, 9, 16, ParameterType.INT, unit="A"),
+]
+
+_LABELS = [b"SAFE\x00\x00", b"A\x00B\x00\x00\x00", b"OK\xe9\x00\x00\x00", b"\xff" * 6]
+
+
+def _all_type_packets(n=90):
+    """(apid, seq_count, user_data) triples: full and short 0x10 payloads,
+    0x20 payloads with NUL-padded / non-ASCII labels, unknown 0x30."""
+    rng = random.Random(7)
+    out = []
+    for i in range(n):
+        apid = (0x10, 0x20, 0x30)[i % 3]
+        if apid == 0x10:
+            data = (
+                struct.pack(">H", rng.getrandbits(16))
+                + rng.getrandbits(24).to_bytes(3, "little")
+                + struct.pack(">f", rng.uniform(-1e6, 1e6))
+                + struct.pack("<d", rng.uniform(-1e300, 1e300))
+                + bytes([0 if i % 4 == 0 else rng.getrandbits(8), rng.getrandbits(8)])
+                + bytes([0x55])
+                + struct.pack(">I", rng.getrandbits(32))
+            )
+            if i % 4 == 1:
+                data = data[: rng.choice((3, 7, 12, 19))]  # short payloads
+        elif apid == 0x20:
+            data = _LABELS[i % 4] + bytes(rng.getrandbits(8) for _ in range(6))
+        else:
+            data = bytes(6)
+        out.append((apid, i, data))
+    return out
+
+
+def _reference_rows(packets):
+    """Per-packet struct.unpack decode (the reference's ``decom.py:104-124``)."""
+    rows = []
+    for apid, seq, data in packets:
+        for d in ALL_TYPE_DEFS:
+            off, n = d.byte_offset, d.n_bytes
+            if d.apid != apid or len(data) < off + n:
+                continue
+            e = "<" if d.little_endian else ">"
+            field = data[off : off + n]
+            num = txt = None
+            t = d.param_type
+            if t in (ParameterType.UINT, ParameterType.ENUMERATED):
+                num = float(struct.unpack(e + {1: "B", 2: "H", 4: "I"}[n], field)[0])
+            elif t == ParameterType.INT:
+                num = float(int.from_bytes(field, "little" if d.little_endian else "big", signed=True))
+            elif t == ParameterType.FLOAT:
+                num = struct.unpack(e + "f", data[off : off + 4])[0]
+            elif t == ParameterType.DOUBLE:
+                num = struct.unpack(e + "d", data[off : off + 8])[0]
+            elif t == ParameterType.BOOLEAN:
+                num = float(field[0] != 0)
+            elif t == ParameterType.STRING:
+                txt = field.decode("ascii", errors="replace").rstrip("\x00")
+            else:
+                txt = field.hex().upper()
+            rows.append((d.name, apid, seq, float(seq), num, txt, num, txt, d.unit))
+    return sorted(rows, key=repr)
+
+
+def test_decom_all_types_match_struct_reference(spark, tmp_root):
+    packets = _all_type_packets()
+    p = tmp_root / "all_types.bin"
+    p.write_bytes(b"".join(build_packet(a, s, d) for a, s, d in packets))
+    out = decommutate(read_packets(spark, str(p)), ALL_TYPE_DEFS)
+    got = sorted(
+        (
+            (r["name"], r["apid"], r["seq_count"], r["time_tai"], r["raw_value"],
+             r["raw_value_str"], r["eng_value"], r["eng_value_str"], r["unit"])
+            for r in out.collect()
+        ),
+        key=repr,
+    )
+    exp = _reference_rows(packets)
+    assert {r[0] for r in exp} == {d.name for d in ALL_TYPE_DEFS}
+    assert any(r[0] == "label" and "\ufffd" in r[5] for r in exp)
+    assert any(r[0] == "label" and "\x00" in r[5] for r in exp)
+    assert got == exp
+    constants = out.select("validity", "calibration_id", "out_of_limit", "alarm_level").distinct()
+    assert [tuple(r) for r in constants.collect()] == [(True, None, False, 0)]
 
 
 def test_tai_time_fallback_is_seq_count(spark, hk_packets):
@@ -147,6 +244,16 @@ def test_bad_calibration_configs():
         Calibration("x", "table", table_raw=(1,), table_eng=(1,))
     with pytest.raises(ValueError):
         Calibration("x", "bogus")
+
+
+def test_unsorted_calibration_table_rejected():
+    """A descending knot list used to interpolate silently wrong (raw 5.0
+    mapped to 30.0); equal neighbouring knots stay allowed."""
+    with pytest.raises(ValueError, match="'bat_current'.*table_raw"):
+        Calibration("bat_current", "table", table_raw=(20, 10, 0), table_eng=(30, 10, 0))
+    with pytest.raises(ValueError, match="table_raw"):
+        Calibration("x", "table", table_raw=(0, 10, 5), table_eng=(0, 1, 2))
+    Calibration("x", "table", table_raw=(0, 10, 10, 20), table_eng=(0, 1, 2, 3))
 
 
 def test_apid_filter_include_exclude(spark, mixed_apid_bin):
