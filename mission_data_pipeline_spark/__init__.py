@@ -18,8 +18,16 @@ Two canonical DataFrames replace the reference's ``TelemetryDataset``
   :data:`models.schemas.PARAMS_SCHEMA`.
 """
 
-from mission_data_pipeline_spark.session import get_spark
-
 __version__ = "0.10.0"
 
 __all__ = ["get_spark", "__version__"]
+
+
+def __getattr__(name: str):
+    # ``get_spark`` resolves on first use (PEP 562): importing it here would
+    # import ``pyspark`` before ``worker_daemon`` has fixed the worker's path.
+    if name == "get_spark":
+        from mission_data_pipeline_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory holding this package: Python workers import
+# ``worker_daemon`` from it, whatever their working directory.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "mission-data-pipeline-spark",
@@ -32,10 +36,31 @@ def get_spark(
     - Arrow execution for Python code over DataFrames: the binary packet
       scan and decommutation are ``mapInArrow`` batches (NumPy over the
       Arrow buffers), beside the multimodal decoders.
+    - ``spark.python.daemon.module`` — :mod:`.worker_daemon` makes Python
+      workers import PySpark from the driver's directory install instead
+      of Spark's bundled ``pyspark.zip``; each Python task otherwise pays
+      0.13-0.3 s re-reading that zip and the py4j zip and spark-core jar
+      beside it. ``spark.executorEnv.PYTHONPATH`` gains the engine's root
+      directory (ahead of any value in ``extra_conf``) so the module
+      imports from any working directory.
+    - ``spark.python.sql.dataFrameDebugging.enabled`` off — PySpark
+      otherwise walks the Python stack and makes about five extra py4j
+      round trips per DataFrame/Column call to record the caller's line
+      for error messages; building one ingest batch's scan, decom and
+      calibration plans took 0.34 s with it and 0.13 s without. Errors
+      still carry Spark's plan context, not the Python line.
+
+    The default master and shuffle partitions use the CPUs this process
+    may run on; ``SPARK_GRAFT_CPUS`` overrides the count.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    n_cpus = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(n_cpus)
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else n_cpus
+    extra_conf = dict(extra_conf or {})
+    python_path = os.pathsep.join(
+        p for p in (_ROOT, extra_conf.pop("spark.executorEnv.PYTHONPATH", None)) if p
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -62,7 +87,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", "mission_data_pipeline_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", python_path)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
