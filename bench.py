@@ -174,92 +174,6 @@ N_ETL_PACKETS = 200_000
 _JIT_WARMUP = {"g_triangle_count", "x2_duplicate_components"}
 
 
-def _stage_shuffle_bytes(spark) -> dict | None:
-    """(stageId, attemptId) -> (shuffleReadBytes, shuffleWriteBytes) of
-    COMPLETED stages, from the JVM AppStatusStore (the UI-less listener
-    store — this sandbox runs with the web UI off, so the REST API is
-    unavailable). Wall-time at bench scale is noise-dominated (0.1 s
-    swings), but a plan regression that matters at 100 TB shows first
-    in shuffle BYTES, which are layout-deterministic. Returns None if
-    the private JVM surface moves (metrics then degrade gracefully to
-    absent, never crash the bench)."""
-    try:
-        sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        jvm, gw = sc._jvm, sc._gateway
-        stages = store.stageList(
-            jvm.java.util.ArrayList(),
-            False,
-            False,
-            gw.new_array(jvm.double, 0),
-            jvm.java.util.ArrayList(),
-        )
-        out = {}
-        it = stages.iterator()
-        while it.hasNext():
-            s = it.next()
-            if str(s.status()) == "COMPLETE":
-                out[(s.stageId(), s.attemptId())] = (
-                    s.shuffleReadBytes(),
-                    s.shuffleWriteBytes(),
-                )
-        return out
-    except Exception:
-        return None
-
-
-def _job_group_shuffle_bytes(spark, group: str) -> dict | None:
-    """Shuffle read/write bytes of exactly the jobs submitted under
-    ``group`` (sc.setJobGroup around the measured run). JOB-SCOPED, not
-    time-window-scoped (VERDICT r11 item 1): the previous implementation
-    summed stages that COMPLETED between two snapshots, so under
-    co-tenant load a straggler stage from an EARLIER sample completing
-    inside the final run's window double-counted — the r11 capstone
-    7.2→12.7 MB byte flag was exactly this artifact. Job ids are read
-    from the public StatusTracker; per-stage bytes from the
-    AppStatusStore. Stages skipped via exchange reuse have no completed
-    attempt and correctly contribute 0."""
-    try:
-        tracker = spark.sparkContext.statusTracker()
-        stage_ids: set = set()
-        for jid in tracker.getJobIdsForGroup(group):
-            info = tracker.getJobInfo(jid)
-            if info is not None:
-                stage_ids.update(info.stageIds)
-        stages = _stage_shuffle_bytes(spark)
-        if stages is None:
-            return None
-        return _per_stage_max_attempt_bytes(stages, stage_ids)
-    except Exception:
-        return None
-
-
-def _per_stage_max_attempt_bytes(stages: dict, stage_ids: set) -> dict:
-    """Sum (read, write) bytes with ONE contribution per stageId — the
-    elementwise MAX across that stage's completed attempts (ADVICE
-    r13). Summing every (stageId, attemptId) entry counts a retried
-    stage once per attempt (over-count, fixed in r12); taking only the
-    LATEST attempt swapped the bias — a stage retry re-runs only the
-    lost/missing tasks, so the retry attempt's task-summed bytes can
-    substantially UNDER-count the stage. The per-stage max is closest
-    to the true bytes for partial retries: the first (full) attempt
-    dominates unless the retry redid more work than the original.
-    Residual bias: if BOTH attempts are partial (first attempt died
-    early AND the retry only re-ran a subset) the max still
-    under-counts — retries are rare enough on this single-JVM bench
-    that cross-round byte deltas should simply be re-measured when a
-    retry is suspected."""
-    best: dict = {}
-    for (sid, att), (r, w) in stages.items():
-        if sid in stage_ids:
-            pr, pw = best.get(sid, (0, 0))
-            best[sid] = (max(pr, r), max(pw, w))
-    return {
-        "read": sum(r for r, _w in best.values()),
-        "write": sum(w for _r, w in best.values()),
-    }
-
-
 def bench_etl(spark, out: dict) -> None:
     from mission_data_pipeline_spark.models.ccsds import generate_housekeeping_stream
     from mission_data_pipeline_spark.operators import (
@@ -330,6 +244,7 @@ def main() -> None:
     if "--anchor" in sys.argv[1:]:
         samples = max(samples, 3)
     from mission_data_pipeline_spark import get_spark
+    from mission_data_pipeline_spark.observability import harvest_job_group
     from mission_data_pipeline_spark.plans.queries import QUERIES, register_views
 
     spark = get_spark(app_name="mdps-bench")
@@ -374,9 +289,11 @@ def main() -> None:
             ).save()
             dt = time.time() - t0
             if final:
-                shuffle_bytes[name] = _job_group_shuffle_bytes(
-                    spark, f"bench:{name}"
-                )
+                h = harvest_job_group(spark, f"bench:{name}")
+                shuffle_bytes[name] = {
+                    "read": h["shuffle_read_bytes"],
+                    "write": h["shuffle_write_bytes"],
+                }
             return dt
         finally:
             if final:

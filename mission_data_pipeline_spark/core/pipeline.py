@@ -29,6 +29,13 @@ counts only exist after the action, ``batch.extracted`` /
 ``batch.transformed`` hooks fire with ``records=-1``; StageResult and
 metrics are backfilled post-action.
 
+A transformer call only builds a plan, so metrics record its time as
+``build_s``; the loader call that runs the action is ``load_s``.
+:class:`Pipeline` runs batch ``N`` under the job group
+``mdps:<name>:batch<N>``; after the last batch it reads what Spark
+executed for each group (:func:`harvest_job_group`) into the metrics,
+and logs the metrics snapshot in its "pipeline complete" record.
+
 :class:`BatchRunner` holds that per-batch body; :class:`Pipeline` feeds
 it the extractor's batches and ``StreamingPipeline`` each micro-batch.
 """
@@ -57,6 +64,7 @@ from mission_data_pipeline_spark.core.results import (
     StageStatus,
 )
 from mission_data_pipeline_spark.observability.hooks import HookManager
+from mission_data_pipeline_spark.observability.jobs import harvest_job_group
 from mission_data_pipeline_spark.observability.metrics import PipelineMetrics
 
 log = logging.getLogger("mission_data_pipeline_spark.pipeline")
@@ -110,12 +118,13 @@ class BatchRunner:
             stage.teardown()
 
     def _failed(
-        self, result: PipelineResult, sr: StageResult, exc: Exception
+        self, result: PipelineResult, sr: StageResult, exc: Exception, time_key: str
     ) -> None:
-        """Records a FAILED stage (P2, P3)."""
+        """Records a FAILED stage (P2, P3); ``time_key`` is ``build_s``
+        or ``load_s``."""
         result.stage_results.append(sr)
         result.errors.append(f"{sr.stage_name}: {exc}")
-        self.metrics.record_stage(sr.stage_name, elapsed_s=sr.elapsed_s, error=True)
+        self.metrics.record_stage(sr.stage_name, error=True, **{time_key: sr.elapsed_s})
         self.hooks.fire("stage.error", stage=sr.stage_name, error=exc)
 
     # -- one batch -------------------------------------------------------
@@ -132,12 +141,13 @@ class BatchRunner:
         n_errors = len(result.errors)
 
         # groups[i] = observation over the output of stage boundary i
-        # (0 = extractor output); deferred[(sr, in_idx, out_idx)] is
-        # backfilled from harvested counts after the batch's action.
-        # out_idx None keeps the rows-written count the loader returned.
+        # (0 = extractor output); deferred[(sr, in_idx, out_idx, time_key)]
+        # is backfilled from harvested counts after the batch's action.
+        # out_idx None keeps the rows-written count the loader returned;
+        # time_key names the stage's time in the metrics.
         groups = [ObservationGroup(f"b{number}:extract")]
         current = groups[0].attach(batch)
-        deferred: list[tuple[StageResult, int, int | None]] = []
+        deferred: list[tuple[StageResult, int, int | None, str]] = []
         self.hooks.fire("batch.extracted", batch=number, records=-1)
 
         for tr in self.transformers:
@@ -148,15 +158,15 @@ class BatchRunner:
                 # count); the remaining transformers of this batch are
                 # skipped either way.
                 sr = StageResult(tname, StageStatus.FAILED, elapsed, -1, -1, str(exc))
-                self._failed(result, sr, exc)
-                deferred.append((sr, len(groups) - 1, len(groups) - 1))
+                self._failed(result, sr, exc, "build_s")
+                deferred.append((sr, len(groups) - 1, len(groups) - 1, "build_s"))
                 break
             g = ObservationGroup(f"b{number}:{tname}")
             current = g.attach(out, upstream=groups[-1])
             groups.append(g)
             sr = StageResult(tname, StageStatus.SUCCESS, elapsed, -1, -1)
             result.stage_results.append(sr)
-            deferred.append((sr, len(groups) - 2, len(groups) - 1))
+            deferred.append((sr, len(groups) - 2, len(groups) - 1, "build_s"))
         self.hooks.fire("batch.transformed", batch=number, records=-1)
 
         stopping = cfg.stop_on_error and len(result.errors) > n_errors
@@ -169,14 +179,14 @@ class BatchRunner:
         counts = [g.rows for g in groups]
         result.total_packets += max(counts[0], 0)
         self.metrics.record_batch(max(counts[0], 0))
-        for sr, i_in, i_out in deferred:
+        for sr, i_in, i_out, time_key in deferred:
             sr.records_in = counts[i_in]
             if i_out is not None:
                 sr.records_out = counts[i_out]
             if sr.status is StageStatus.SUCCESS:
                 self.metrics.record_stage(
                     sr.stage_name,
-                    elapsed_s=sr.elapsed_s,
+                    **{time_key: sr.elapsed_s},
                     records_in=sr.records_in,
                     records_out=sr.records_out,
                 )
@@ -187,7 +197,7 @@ class BatchRunner:
         self,
         current: TelemetryBatch,
         number: int,
-        deferred: list[tuple[StageResult, int, int | None]],
+        deferred: list[tuple[StageResult, int, int | None, str]],
         last_group: int,
         result: PipelineResult,
     ) -> bool:
@@ -210,6 +220,7 @@ class BatchRunner:
                 result,
                 StageResult(lname, StageStatus.FAILED, elapsed, -1, 0, str(exc)),
                 exc,
+                "load_s",
             )
             return False
         # records_in backfills from the last observation; the loader's
@@ -218,7 +229,7 @@ class BatchRunner:
         written = out if counted else -1
         sr = StageResult(lname, StageStatus.SUCCESS, elapsed, -1, written)
         result.stage_results.append(sr)
-        deferred.append((sr, last_group, None if counted else last_group))
+        deferred.append((sr, last_group, None if counted else last_group, "load_s"))
         self.hooks.fire("batch.loaded", batch=number, records=written)
         return True
 
@@ -258,7 +269,7 @@ class Pipeline(BatchRunner):
                 result.batches_processed += 1
                 n = result.batches_processed
                 sc.setJobGroup(
-                    f"mdps:{cfg.name}:batch{n}", f"pipeline {cfg.name} batch {n}", False
+                    self._group(n), f"pipeline {cfg.name} batch {n}", False
                 )
                 try:
                     stop = self.run_batch(batch, n, result)
@@ -280,6 +291,9 @@ class Pipeline(BatchRunner):
                 "stage.error", stage=type(self.extractor).__name__, error=exc
             )
 
+        for n in range(1, result.batches_processed + 1):
+            group = self._group(n)
+            self.metrics.record_jobs(group, harvest_job_group(spark, group))
         result.elapsed_s = time.perf_counter() - t_start
         result.status = (
             StageStatus.SUCCESS if not result.errors else StageStatus.FAILED
@@ -287,6 +301,16 @@ class Pipeline(BatchRunner):
         self.hooks.fire("pipeline.complete", result=result)
         log.info(
             "pipeline complete",
-            extra={"ctx_status": result.status.value, "ctx_elapsed": result.elapsed_s},
+            extra={
+                "ctx_status": result.status.value,
+                "ctx_elapsed": result.elapsed_s,
+                "ctx_metrics": self.metrics.snapshot(),
+            },
         )
         return result
+
+    def _group(self, n: int) -> str:
+        """Job group of batch ``n``. The status store keeps every job
+        run under a group, so two runs of one pipeline name in one
+        session add up in its harvest: give runs distinct names."""
+        return f"mdps:{self.config.name}:batch{n}"

@@ -73,104 +73,6 @@ FRAMES_SCHEMA = T.StructType(
 )
 
 
-_ARROW_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
-
-
-class media_arrow_batch_guard:
-    """Bound one in-flight ``mapInPandas`` Arrow batch of media
-    payloads to ``~target_batch_bytes`` (VERDICT r13 item 5).
-
-    The decode operators stream Arrow batches of up to
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows (default
-    10,000) — record-COUNT-bounded, not byte-bounded. With real media
-    sizes (a 1 MiB JPEG, a 10 MiB clip) one input batch is then
-    gigabytes per task and the worker OOMs before the decoder sees a
-    byte; the failure scales with FILE size, invisible at fixture
-    payloads. This context manager measures the payload-size
-    distribution with one column-pruned aggregate (max + mean of
-    ``octet_length`` — the scan reads only the size statistics path),
-    sets the record cap to ``clamp(target_batch_bytes / max_payload,
-    floor, ceil)`` for the duration, and restores the previous value
-    on exit::
-
-        with media_arrow_batch_guard(spark, media) as g:
-            image_pixel_stats(media).write...   # batches ~<= 64 MiB
-        g.records_per_batch  # the cap it chose (diagnostics)
-
-    Sizing by the MAX payload is deliberate: a mean-sized cap still
-    lets one batch of tail-sized payloads blow the target; max gives
-    a hard ceiling at the cost of smaller batches on skewed corpora
-    (per-batch Python overhead is microseconds against millisecond
-    decode costs — measured in the r14 decode-throughput probe).
-    On a real cluster the same knob travels in the session conf; this
-    guard just scopes it to the media stage instead of globally
-    penalizing non-media pandas paths."""
-
-    def __init__(
-        self,
-        spark,
-        media: DataFrame,
-        *,
-        payload_col: str = "payload",
-        target_batch_bytes: int = 64 << 20,
-        floor: int = 8,
-        ceil: int = 4096,
-    ) -> None:
-        self._spark = spark
-        row = media.select(
-            F.max(F.octet_length(payload_col)).alias("mx"),
-            F.avg(F.octet_length(payload_col)).alias("avg"),
-        ).first()
-        self.max_payload_bytes = int(row["mx"] or 1)
-        self.avg_payload_bytes = float(row["avg"] or 1.0)
-        self.records_per_batch = max(
-            floor,
-            min(ceil, target_batch_bytes // max(self.max_payload_bytes, 1)),
-        )
-
-    def __enter__(self) -> "media_arrow_batch_guard":
-        self._prev = self._spark.conf.get(_ARROW_BATCH_CONF, None)
-        self._spark.conf.set(_ARROW_BATCH_CONF, str(self.records_per_batch))
-        return self
-
-    def __exit__(self, *exc) -> None:
-        if self._prev is None:
-            self._spark.conf.unset(_ARROW_BATCH_CONF)
-        else:
-            self._spark.conf.set(_ARROW_BATCH_CONF, self._prev)
-
-
-def peak_batch_bytes(
-    media: DataFrame, *, payload_col: str = "payload"
-) -> DataFrame:
-    """Diagnostic: the ACTUAL per-batch row count and payload bytes the
-    media operators would see — one row per Arrow batch, max over the
-    result = peak single-batch memory. Used by the r14 decode probe to
-    verify :class:`media_arrow_batch_guard` holds its target."""
-    cols = media.select(F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "batch_rows": [len(pdf)],
-                    "batch_bytes": [
-                        int(
-                            sum(
-                                len(p)
-                                for p in pdf["payload"]
-                                if p is not None
-                            )
-                        )
-                    ],
-                }
-            )
-
-    return cols.mapInPandas(
-        run, schema="batch_rows long, batch_bytes long"
-    )
-
-
 def _fake_feature(payload: bytes, dim: int) -> list[float]:
     """Deterministic stand-in for a real embedding: byte-histogram folds."""
     if payload is None:

@@ -1684,6 +1684,57 @@ def test_near_dedup_index_rejects_non_local_path(spark):
             read_index_manifest(bad)
 
 
+def build_graph(spark, n_giant: int, n_small: int):
+    """(pairs, docs): hub-skewed giant component over nodes
+    [0, n_giant) + 2-node clusters over [10**9, 10**9 + n_small).
+    Pure Spark expressions — deterministic, no driver-side data."""
+    giant = spark.range(1, n_giant).select(
+        F.col("id").alias("doc_a"),
+        F.when(F.col("id") % 4 == 0, F.lit(0).cast("long"))
+        .otherwise(F.pmod(F.xxhash64(F.col("id")), F.col("id")))
+        .alias("doc_b"),
+    )
+    base = 10**9
+    small = spark.range(0, n_small // 2).select(
+        (F.col("id") * 2 + base).alias("doc_a"),
+        (F.col("id") * 2 + base + 1).alias("doc_b"),
+    )
+    pairs = giant.unionByName(small)
+    nodes = spark.range(0, n_giant).unionByName(
+        spark.range(base, base + n_small)
+    )
+    docs = nodes.select(
+        F.col("id").alias("doc_id"),
+        F.pmod(F.xxhash64(F.col("id") * 7 + 13), F.lit(1000)).alias(
+            "quality"
+        ),
+    )
+    return pairs, docs
+
+
+def expected_keepers(docs, n_giant: int):
+    """Independent argmax reference: component membership is known by
+    construction (node < n_giant -> giant; else its 2-node pair)."""
+    base = 10**9
+    labeled = docs.select(
+        "doc_id",
+        "quality",
+        F.when(F.col("doc_id") < n_giant, F.lit(0).cast("long"))
+        .otherwise(
+            base + F.floor((F.col("doc_id") - base) / 2) * 2
+        )
+        .alias("cid"),
+    )
+    qmax = labeled.groupBy("cid").agg(F.max("quality").alias("qm"))
+    return (
+        labeled.join(qmax, "cid")
+        .filter(F.col("quality") == F.col("qm"))
+        .groupBy("cid")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+
+
 def test_giant_component_power_law_graph(spark):
     """VERDICT r09 item 2: real crawl pair graphs are power-law — one
     component holds a large fraction of all duplicates and one hub node
@@ -1692,13 +1743,8 @@ def test_giant_component_power_law_graph(spark):
     0, and quality_dedup's two partial aggregates must keep the exact
     argmax representative — computed here against an independent
     reference that never runs the fixpoint (membership is known by
-    construction). scripts/giant_component_probe.py runs the same
-    shape at millions of nodes (BASELINE.md §round 10)."""
-    import sys
-
-    sys.path.insert(0, "scripts")
-    from giant_component_probe import build_graph, expected_keepers
-
+    construction). BASELINE.md §round 10 records the same shape at
+    millions of nodes."""
     from mission_data_pipeline_spark.operators.dedup import (
         connected_components,
         quality_dedup,

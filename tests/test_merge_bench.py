@@ -2,7 +2,8 @@
 must take the UNION of query keys across windows (a query added
 between anchor windows must not silently vanish) and warn when a query
 is missing from some window (thinner sample), while still taking the
-per-query minimum and recomputing totals."""
+per-query minimum and recomputing totals. Also the per-stage shuffle
+byte rule behind bench.py's ``shuffle_bytes``."""
 
 import json
 import subprocess
@@ -73,14 +74,11 @@ def test_bench_stage_retry_bytes_one_contribution_per_stage():
     stageId (not the sum across attempts — inflation), and that value
     is the per-stage MAX across attempts (not the latest — a retry
     re-runs only the lost tasks, so the latest attempt's task-summed
-    bytes can under-count the stage)."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod", str(ROOT / "bench.py")
+    bytes can under-count the stage). bench.py's shuffle_bytes come
+    from the package harvest, which applies this rule."""
+    from mission_data_pipeline_spark.observability.jobs import (
+        max_attempt_shuffle_bytes,
     )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
 
     stages = {
         (7, 0): (100, 50),   # full first attempt of stage 7
@@ -88,10 +86,12 @@ def test_bench_stage_retry_bytes_one_contribution_per_stage():
         (8, 0): (10, 5),
         (9, 0): (999, 999),  # not in the job group
     }
-    got = bench._per_stage_max_attempt_bytes(stages, {7, 8})
+    got = max_attempt_shuffle_bytes(stages, {7, 8})
     assert got == {"read": 110, "write": 55}
     # a retry that genuinely did MORE work than the original wins
-    got2 = bench._per_stage_max_attempt_bytes(
+    got2 = max_attempt_shuffle_bytes(
         {(7, 0): (100, 50), (7, 1): (120, 60)}, {7}
     )
     assert got2 == {"read": 120, "write": 60}
+    # a group with no jobs has no stages: zeros, no exception
+    assert max_attempt_shuffle_bytes({}, set()) == {"read": 0, "write": 0}

@@ -332,50 +332,6 @@ def test_image_pixel_stats_operator(spark):
     assert r2["width"] is None and r2["px_sum"] is None
 
 
-def test_media_arrow_batch_guard_bounds_batches(spark):
-    """VERDICT r13 item 5: one mapInPandas Arrow batch of media
-    payloads must stay under the byte target — the default
-    10k-record batching is count-bounded, so at real image sizes a
-    single input batch OOMs the worker before decode starts. The
-    guard sizes maxRecordsPerBatch off the MAX payload and restores
-    the previous conf on exit; peak_batch_bytes verifies the actual
-    in-flight batch."""
-    from mission_data_pipeline_spark.functions.multimodal import (
-        _ARROW_BATCH_CONF,
-        media_arrow_batch_guard,
-        peak_batch_bytes,
-    )
-    from pyspark.sql import functions as F
-
-    # 400 payloads of 50 kB in ONE partition: default batching packs
-    # them into one ~20 MB batch; a 1 MB target forces ~20-row batches
-    rows = [(i, b"x" * 50_000) for i in range(400)]
-    df = spark.createDataFrame(
-        rows, "item_id long, payload binary"
-    ).coalesce(1)
-    unguarded = peak_batch_bytes(df).agg(
-        F.max("batch_bytes").alias("b")
-    ).first()["b"]
-    assert unguarded >= 10_000_000  # the OOM vector, demonstrated
-    prev = spark.conf.get(_ARROW_BATCH_CONF, None)
-    with media_arrow_batch_guard(
-        spark, df, target_batch_bytes=1 << 20
-    ) as g:
-        assert g.max_payload_bytes == 50_000
-        assert g.records_per_batch == (1 << 20) // 50_000
-        guarded = peak_batch_bytes(df).agg(
-            F.max("batch_bytes").alias("b")
-        ).first()["b"]
-    assert guarded <= (1 << 20)
-    assert spark.conf.get(_ARROW_BATCH_CONF, None) == prev  # restored
-    # floor guard: payloads bigger than the target still make progress
-    big = spark.createDataFrame(
-        [(1, b"y" * 2_000_000)], "item_id long, payload binary"
-    )
-    g2 = media_arrow_batch_guard(spark, big, target_batch_bytes=1 << 20)
-    assert g2.records_per_batch == 8  # floor, never 0
-
-
 def test_real_feature_uses_decoded_pixels(spark):
     """decoder='real' on a full PNG must emit pixel statistics (mean/
     std/min/max), not just header fields."""

@@ -11,33 +11,54 @@ from mission_data_pipeline_spark.observability import (
     configure_logging,
 )
 from mission_data_pipeline_spark.observability.hooks import EventHook
+from mission_data_pipeline_spark.observability.jobs import HARVEST_FIELDS
 
 
 def test_metrics_counters_and_derived():
+    """Counters sum per stage; a transformer's time is plan build
+    (``build_s``) and a loader's is its action (``load_s``), neither
+    divided into rows. The run's ``rows_per_s`` is the packets over the
+    executed job time of the recorded job groups."""
     m = PipelineMetrics()
     m.record_batch(100)
     m.record_batch(50)
-    m.record_stage("decom", elapsed_s=2.0, records_in=150, records_out=300)
-    m.record_stage("decom", elapsed_s=2.0, records_in=150, records_out=300)
+    m.record_stage("decom", build_s=2.0, records_in=150, records_out=300)
+    m.record_stage("decom", build_s=2.0, records_in=150, records_out=300)
+    m.record_stage("load", load_s=1.0, records_in=300, records_out=300)
+    zero = dict.fromkeys(HARVEST_FIELDS, 0)
+    m.record_jobs("g:batch1", {**zero, "jobs": 1, "tasks": 4, "job_s": 1.0})
+    m.record_jobs("g:batch2", {**zero, "jobs": 1, "tasks": 2, "job_s": 2.0})
     snap = m.snapshot()
     assert snap["batches_processed"] == 2
     assert snap["total_packets"] == 150
     d = snap["stages"]["decom"]
     assert d["invocations"] == 2
-    assert d["avg_elapsed_s"] == 2.0
-    assert d["throughput_rps"] == 150.0  # 600 / 4s
+    assert (d["build_s"], d["load_s"]) == (4.0, 0.0)
+    assert "throughput_rps" not in d
+    assert snap["stages"]["load"]["load_s"] == 1.0
+    assert snap["executed"]["jobs"] == 2
+    assert snap["executed"]["tasks"] == 6
+    assert snap["job_groups"]["g:batch2"]["job_s"] == 2.0
+    assert snap["rows_per_s"] == 50.0  # 150 packets / 3 s of jobs
+    json.dumps(snap)  # the "pipeline complete" log record carries it
 
 
 def test_metrics_zero_division():
+    """No recorded job time: ``rows_per_s`` reads 0.0, not an error,
+    with and without packets or (zero-time) job groups."""
     m = PipelineMetrics()
-    s = m.stage("empty")
-    assert s.avg_elapsed_s == 0.0
-    assert s.throughput_rps == 0.0
+    assert m.stage("empty").build_s == 0.0
+    assert m.snapshot()["rows_per_s"] == 0.0
+    m.record_batch(10)
+    m.record_jobs("g:batch1", dict.fromkeys(HARVEST_FIELDS, 0))
+    snap = m.snapshot()
+    assert snap["rows_per_s"] == 0.0
+    assert snap["executed"] == dict.fromkeys(HARVEST_FIELDS, 0)
 
 
 def test_metrics_error_count():
     m = PipelineMetrics()
-    m.record_stage("cal", elapsed_s=0.1, error=True)
+    m.record_stage("cal", build_s=0.1, error=True)
     assert m.snapshot()["stages"]["cal"]["errors"] == 1
 
 
