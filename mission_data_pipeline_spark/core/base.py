@@ -37,6 +37,11 @@ class TelemetryBatch:
     ``packets`` and/or ``params`` may be None when a stage has not
     produced that side yet (e.g. a binary extractor yields packets only;
     decom fills params).
+
+    ``metadata["first_write"]`` is set by the Pipeline on the batch it
+    hands the loader: True for a run's first batch only. A loader
+    configured to overwrite its target truncates only then (a batch
+    loaded outside a Pipeline counts as a first write).
     """
 
     packets: DataFrame | None = None

@@ -101,8 +101,9 @@ def _row_or_none(obs: Observation) -> dict | None:
 class _Side:
     """One observed DataFrame and its row count, once known."""
 
-    def __init__(self, df: DataFrame, tag: str) -> None:
-        self.df, self.obs = observe_rows(df, tag)
+    def __init__(self, df: DataFrame, tag: str, side: str) -> None:
+        self.df, self.obs = observe_rows(df, f"{tag}:{side}")
+        self.side = side
         self.rows: int | None = None
 
     def poll(self) -> None:
@@ -139,7 +140,7 @@ class ObservationGroup:
                 return None
             s = next((u for u in shared if u.df is df), None)
             if s is None:
-                s = _Side(df, f"{self.tag}:{side}")
+                s = _Side(df, self.tag, side)
             self._sides.append(s)
             return s.df
 
@@ -162,18 +163,25 @@ class ObservationGroup:
         for s in self._sides:
             if s.rows is None:
                 s.rows = s.df.count()
-        return self.rows
+        return self.rows()
 
     @property
     def unresolved_sides(self) -> int:
         return sum(s.rows is None for s in self._sides)
 
-    @property
     def rows(self) -> int:
         """Harvested count, or -1 if (part of) the batch saw no action."""
         if self._sides and not self.unresolved_sides:
             return sum(s.rows for s in self._sides)
         return -1
+
+    def params_rows(self) -> int:
+        """Harvested count of the params side (0 without one), or -1 if
+        the action never read it."""
+        s = next((s for s in self._sides if s.side == "params"), None)
+        if s is None:
+            return 0
+        return -1 if s.rows is None else s.rows
 
 
 def harvest_groups(groups: list[ObservationGroup]) -> None:

@@ -30,20 +30,29 @@ counts only exist after the action, ``batch.extracted`` /
 metrics are backfilled post-action.
 
 A transformer call only builds a plan, so metrics record its time as
-``build_s``; the loader call that runs the action is ``load_s``.
-:class:`Pipeline` runs batch ``N`` under the job group
-``mdps:<name>:batch<N>``; after the last batch it reads what Spark
-executed for each group (:func:`harvest_job_group`) into the metrics,
-and logs the metrics snapshot in its "pipeline complete" record.
+``build_s``; the loader call that runs the action is ``load_s``. The
+loader's ``records_in`` is the params side it writes.
 
-:class:`BatchRunner` holds that per-batch body; :class:`Pipeline` feeds
-it the extractor's batches and ``StreamingPipeline`` each micro-batch.
+A run decides once which write replaces the loader's target: the batch
+it hands the loader carries ``metadata["first_write"]``, True for the
+run's first batch only, so a loader configured to overwrite truncates
+once per run and appends after (every run of one ``Pipeline`` object
+starts over).
+
+Batch ``N`` runs under the job group ``mdps:<name>:batch<N>``, and the
+whole run under one job tag of its own. After the last batch the run
+reads what Spark executed for each group (:func:`harvest_job_group`,
+which keeps only the jobs carrying the calling thread's tags, i.e. this
+run's) into the metrics, and logs the metrics snapshot in its
+"pipeline complete" record.
 """
 
 from __future__ import annotations
 
 import logging
 import time
+import uuid
+from collections.abc import Callable
 
 from pydantic import BaseModel
 from pyspark.sql import SparkSession
@@ -69,6 +78,10 @@ from mission_data_pipeline_spark.observability.metrics import PipelineMetrics
 
 log = logging.getLogger("mission_data_pipeline_spark.pipeline")
 
+#: A StageResult whose counts are read after the batch's action:
+#: (result, rows in, rows out or None, metrics time key).
+Deferred = tuple[StageResult, Callable[[], int], Callable[[], int] | None, str]
+
 
 class PipelineConfig(BaseModel):
     model_config = {"frozen": True, "extra": "forbid"}
@@ -79,28 +92,92 @@ class PipelineConfig(BaseModel):
     max_batches: int | None = None
 
 
-class BatchRunner:
-    """Runs one batch at a time through the transformers and the loader,
-    with hooks, metrics and observed record counts."""
+class Pipeline:
+    """Feeds every batch the extractor yields through the transformers
+    and the loader, with hooks, metrics and observed record counts.
+    ``metrics`` holds the latest run's: each run starts a fresh
+    :class:`PipelineMetrics`, so its counts, stage sums and job
+    harvests describe the same run."""
 
     def __init__(
         self,
         config: PipelineConfig | dict | None = None,
         *,
+        extractor: Extractor,
         transformers: list[Transformer] | None = None,
         loader: Loader | None = None,
-        hooks: HookManager | None = None,
-        metrics: PipelineMetrics | None = None,
     ) -> None:
         if config is None:
             config = PipelineConfig()
         elif isinstance(config, dict):
             config = PipelineConfig(**config)
         self.config = config
+        self.extractor = extractor
         self.transformers = list(transformers or [])
         self.loader = loader
-        self.hooks = hooks or HookManager()
-        self.metrics = metrics or PipelineMetrics()
+        self.hooks = HookManager()
+        self.metrics = PipelineMetrics()
+
+    def run(self, spark: SparkSession) -> PipelineResult:
+        cfg = self.config
+        result = PipelineResult(pipeline_name=cfg.name, status=StageStatus.SUCCESS)
+        self.metrics = PipelineMetrics()
+        t_start = time.perf_counter()
+        self.hooks.fire("pipeline.start", pipeline=cfg.name, config=cfg)
+        log.info("pipeline start", extra={"ctx_pipeline": cfg.name})
+
+        sc = spark.sparkContext
+        tag = f"mdps-run-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            self._run_batches(spark, result)
+            for n in range(1, result.batches_processed + 1):
+                group = self._group(n)
+                self.metrics.record_jobs(group, harvest_job_group(spark, group))
+        finally:
+            sc.removeJobTag(tag)
+        result.elapsed_s = time.perf_counter() - t_start
+        result.status = (
+            StageStatus.SUCCESS if not result.errors else StageStatus.FAILED
+        )  # P8
+        self.hooks.fire("pipeline.complete", result=result)
+        log.info(
+            "pipeline complete",
+            extra={
+                "ctx_status": result.status.value,
+                "ctx_elapsed": result.elapsed_s,
+                "ctx_metrics": self.metrics.snapshot(),
+            },
+        )
+        return result
+
+    def _run_batches(self, spark: SparkSession, result: PipelineResult) -> None:
+        cfg = self.config
+        sc = spark.sparkContext
+        try:
+            for batch in self.extractor.extract(spark):
+                result.batches_processed += 1
+                n = result.batches_processed
+                sc.setJobGroup(
+                    self._group(n), f"pipeline {cfg.name} batch {n}", False
+                )
+                try:
+                    stop = self._run_batch(batch, n, result)
+                finally:
+                    sc.setJobGroup(None, None)  # type: ignore[arg-type]
+                if stop or (cfg.max_batches is not None and n >= cfg.max_batches):
+                    break
+        except Exception as exc:  # noqa: BLE001 - P4 extractor failure
+            name = type(self.extractor).__name__
+            result.errors.append(f"{name}: {exc}")
+            result.stage_results.append(
+                StageResult(stage_name=name, status=StageStatus.FAILED, error=str(exc))
+            )
+            self.hooks.fire("stage.error", stage=name, error=exc)
+
+    def _group(self, n: int) -> str:
+        """Job group of batch ``n``."""
+        return f"mdps:{self.config.name}:batch{n}"
 
     # -- timed stage wrappers (P1: setup/teardown even on error) --------
 
@@ -129,7 +206,7 @@ class BatchRunner:
 
     # -- one batch -------------------------------------------------------
 
-    def run_batch(
+    def _run_batch(
         self, batch: TelemetryBatch, number: int, result: PipelineResult
     ) -> bool:
         """Runs batch ``number`` through transformers + loader, appending
@@ -141,13 +218,11 @@ class BatchRunner:
         n_errors = len(result.errors)
 
         # groups[i] = observation over the output of stage boundary i
-        # (0 = extractor output); deferred[(sr, in_idx, out_idx, time_key)]
-        # is backfilled from harvested counts after the batch's action.
-        # out_idx None keeps the rows-written count the loader returned;
-        # time_key names the stage's time in the metrics.
+        # (0 = extractor output); rows_out None in a Deferred keeps the
+        # rows-written count the loader returned.
         groups = [ObservationGroup(f"b{number}:extract")]
         current = groups[0].attach(batch)
-        deferred: list[tuple[StageResult, int, int | None, str]] = []
+        deferred: list[Deferred] = []
         self.hooks.fire("batch.extracted", batch=number, records=-1)
 
         for tr in self.transformers:
@@ -159,30 +234,28 @@ class BatchRunner:
                 # skipped either way.
                 sr = StageResult(tname, StageStatus.FAILED, elapsed, -1, -1, str(exc))
                 self._failed(result, sr, exc, "build_s")
-                deferred.append((sr, len(groups) - 1, len(groups) - 1, "build_s"))
+                deferred.append((sr, groups[-1].rows, groups[-1].rows, "build_s"))
                 break
             g = ObservationGroup(f"b{number}:{tname}")
             current = g.attach(out, upstream=groups[-1])
             groups.append(g)
             sr = StageResult(tname, StageStatus.SUCCESS, elapsed, -1, -1)
             result.stage_results.append(sr)
-            deferred.append((sr, len(groups) - 2, len(groups) - 1, "build_s"))
+            deferred.append((sr, groups[-2].rows, g.rows, "build_s"))
         self.hooks.fire("batch.transformed", batch=number, records=-1)
 
         stopping = cfg.stop_on_error and len(result.errors) > n_errors
-        if not stopping and self._load(
-            current, number, deferred, len(groups) - 1, result
-        ):
+        if not stopping and self._load(current, number, groups[-1], deferred, result):
             harvest_groups(groups)
 
         # backfill from whatever resolved (-1 where no action ran)
-        counts = [g.rows for g in groups]
-        result.total_packets += max(counts[0], 0)
-        self.metrics.record_batch(max(counts[0], 0))
-        for sr, i_in, i_out, time_key in deferred:
-            sr.records_in = counts[i_in]
-            if i_out is not None:
-                sr.records_out = counts[i_out]
+        extracted = max(groups[0].rows(), 0)
+        result.total_packets += extracted
+        self.metrics.record_batch(extracted)
+        for sr, rows_in, rows_out, time_key in deferred:
+            sr.records_in = rows_in()
+            if rows_out is not None:
+                sr.records_out = rows_out()
             if sr.status is StageStatus.SUCCESS:
                 self.metrics.record_stage(
                     sr.stage_name,
@@ -197,8 +270,8 @@ class BatchRunner:
         self,
         current: TelemetryBatch,
         number: int,
-        deferred: list[tuple[StageResult, int, int | None, str]],
-        last_group: int,
+        last: ObservationGroup,
+        deferred: list[Deferred],
         result: PipelineResult,
     ) -> bool:
         """Runs the loader (P3, P5); returns True if an action ran."""
@@ -212,9 +285,8 @@ class BatchRunner:
             result.stage_results.append(StageResult(lname, StageStatus.SKIPPED))
             return True
 
-        out, elapsed, exc = self._timed(
-            self.loader, lambda: self.loader.load(current)
-        )
+        batch = current.with_metadata(first_write=number == 1)
+        out, elapsed, exc = self._timed(self.loader, lambda: self.loader.load(batch))
         if exc is not None:
             self._failed(
                 result,
@@ -223,94 +295,13 @@ class BatchRunner:
                 "load_s",
             )
             return False
-        # records_in backfills from the last observation; the loader's
+        # records_in is the params side the loader writes; the loader's
         # integer return stays authoritative for out.
         counted = isinstance(out, int)
         written = out if counted else -1
         sr = StageResult(lname, StageStatus.SUCCESS, elapsed, -1, written)
         result.stage_results.append(sr)
-        deferred.append((sr, last_group, None if counted else last_group, "load_s"))
+        rows_out = None if counted else last.params_rows
+        deferred.append((sr, last.params_rows, rows_out, "load_s"))
         self.hooks.fire("batch.loaded", batch=number, records=written)
         return True
-
-
-class Pipeline(BatchRunner):
-    """Feeds every batch the extractor yields through :meth:`run_batch`."""
-
-    def __init__(
-        self,
-        config: PipelineConfig | dict | None = None,
-        *,
-        extractor: Extractor,
-        transformers: list[Transformer] | None = None,
-        loader: Loader | None = None,
-        hooks: HookManager | None = None,
-        metrics: PipelineMetrics | None = None,
-    ) -> None:
-        super().__init__(
-            config,
-            transformers=transformers,
-            loader=loader,
-            hooks=hooks,
-            metrics=metrics,
-        )
-        self.extractor = extractor
-
-    def run(self, spark: SparkSession) -> PipelineResult:
-        cfg = self.config
-        result = PipelineResult(pipeline_name=cfg.name, status=StageStatus.SUCCESS)
-        t_start = time.perf_counter()
-        self.hooks.fire("pipeline.start", pipeline=cfg.name, config=cfg)
-        log.info("pipeline start", extra={"ctx_pipeline": cfg.name})
-
-        sc = spark.sparkContext
-        try:
-            for batch in self.extractor.extract(spark):
-                result.batches_processed += 1
-                n = result.batches_processed
-                sc.setJobGroup(
-                    self._group(n), f"pipeline {cfg.name} batch {n}", False
-                )
-                try:
-                    stop = self.run_batch(batch, n, result)
-                finally:
-                    sc.setJobGroup(None, None)  # type: ignore[arg-type]
-                if stop or (cfg.max_batches is not None and n >= cfg.max_batches):
-                    break
-        except Exception as exc:  # noqa: BLE001 - P4 extractor failure
-            msg = f"{type(self.extractor).__name__}: {exc}"
-            result.errors.append(msg)
-            result.stage_results.append(
-                StageResult(
-                    stage_name=type(self.extractor).__name__,
-                    status=StageStatus.FAILED,
-                    error=str(exc),
-                )
-            )
-            self.hooks.fire(
-                "stage.error", stage=type(self.extractor).__name__, error=exc
-            )
-
-        for n in range(1, result.batches_processed + 1):
-            group = self._group(n)
-            self.metrics.record_jobs(group, harvest_job_group(spark, group))
-        result.elapsed_s = time.perf_counter() - t_start
-        result.status = (
-            StageStatus.SUCCESS if not result.errors else StageStatus.FAILED
-        )  # P8
-        self.hooks.fire("pipeline.complete", result=result)
-        log.info(
-            "pipeline complete",
-            extra={
-                "ctx_status": result.status.value,
-                "ctx_elapsed": result.elapsed_s,
-                "ctx_metrics": self.metrics.snapshot(),
-            },
-        )
-        return result
-
-    def _group(self, n: int) -> str:
-        """Job group of batch ``n``. The status store keeps every job
-        run under a group, so two runs of one pipeline name in one
-        session add up in its harvest: give runs distinct names."""
-        return f"mdps:{self.config.name}:batch{n}"

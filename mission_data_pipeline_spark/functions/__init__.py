@@ -24,7 +24,6 @@ from mission_data_pipeline_spark.functions.vectors import (
     cosine_similarity,
     dot_product,
     l2_norm,
-    normalize,
 )
 
 __all__ = [
@@ -50,5 +49,4 @@ __all__ = [
     "cosine_similarity",
     "dot_product",
     "l2_norm",
-    "normalize",
 ]

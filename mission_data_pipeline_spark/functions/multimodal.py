@@ -1069,22 +1069,14 @@ def sample_frames(
     meta_col: str = "meta",
     every_n: int = 10,
     max_frames: int = 8,
-    decoder: str = "fake",
 ) -> DataFrame:
     """Sample every-Nth frame of video payloads (1 row per frame).
 
-    ``decoder='fake'`` synthesizes ``max_frames`` frames whose pixel
-    buffer is a deterministic slice of the payload — exercising the
-    real fan-out shape (1 input row → many output rows through
-    mapInPandas). ``decoder='real'`` parses MJPEG-in-AVI containers
-    (:mod:`~mission_data_pipeline_spark.functions.avi`), takes every
-    ``every_n``-th frame and decodes it with the repo's baseline JPEG
-    codec: ``pixels`` is the RAW decoded uint8 buffer (h·w·c bytes),
-    ``frame_idx`` the source frame number, width/height the DECODED
-    dimensions. Non-AVI payloads or undecodable frames yield null
-    pixel sentinels; inter-frame codecs stay behind the codec stub."""
-    if decoder not in ("fake", "real"):
-        raise ValueError("decoder must be 'fake' or 'real'")
+    Synthesizes up to ``max_frames`` frames whose pixel buffer is a
+    deterministic slice of the payload — the fan-out shape of a frame
+    sampler (1 input row → many output rows through mapInPandas)
+    without decoding; :func:`video_frame_stats` decodes real
+    MJPEG-in-AVI frames."""
 
     cols = media.select(
         F.col(id_col).cast("long").alias("item_id"),
@@ -1093,7 +1085,7 @@ def sample_frames(
         F.col(f"{meta_col}.height").alias("height"),
     )
 
-    def run_fake(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
@@ -1116,50 +1108,7 @@ def sample_frames(
                 {f.name: [] for f in FRAMES_SCHEMA.fields}
             )
 
-    def run_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mission_data_pipeline_spark.functions.avi import decode_avi_frames
-        from mission_data_pipeline_spark.functions.jpeg import decode_jpeg_pixels
-
-        step = max(every_n, 1)
-        for pdf in batches:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                dec = decode_avi_frames(payload)
-                if dec is None:
-                    rows.append(
-                        {
-                            "item_id": item_id,
-                            "frame_idx": -1,
-                            "width": None,
-                            "height": None,
-                            "pixels": None,
-                        }
-                    )
-                    continue
-                _meta, frames = dec
-                for fi in range(0, len(frames), step)[:max_frames]:
-                    px = decode_jpeg_pixels(frames[fi])
-                    rows.append(
-                        {
-                            "item_id": item_id,
-                            "frame_idx": fi,
-                            "width": None if px is None else px.shape[1],
-                            "height": None if px is None else px.shape[0],
-                            "pixels": None if px is None else px.tobytes(),
-                        }
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in FRAMES_SCHEMA.fields]
-            ) if rows else pd.DataFrame(
-                {f.name: [] for f in FRAMES_SCHEMA.fields}
-            )
-            for col in ("width", "height"):
-                out[col] = pd.array(out[col], dtype="Int32")
-            yield out
-
-    return cols.mapInPandas(
-        run_real if decoder == "real" else run_fake, schema=FRAMES_SCHEMA
-    )
+    return cols.mapInPandas(run, schema=FRAMES_SCHEMA)
 
 
 #: Per-sampled-frame decoded pixel statistics (:func:`video_frame_stats`).

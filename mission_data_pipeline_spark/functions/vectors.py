@@ -27,16 +27,3 @@ def l2_norm(a: Column) -> Column:
 
 def cosine_similarity(a: Column, b: Column) -> Column:
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def normalize(a: Column) -> Column:
-    """Unit-norm copy of the vector (double elements).
-
-    The norm is bound ONCE through a one-element ``transform`` before
-    the per-element division: higher-order-function lambdas evaluate
-    interpreted, and a captured aggregate re-evaluates per element
-    (O(dim^2) folds per row — the gram-operator trap)."""
-    return F.transform(
-        F.array(l2_norm(a)),
-        lambda n: F.transform(a, lambda v: v / n),
-    )[0]

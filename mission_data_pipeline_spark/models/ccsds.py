@@ -153,15 +153,6 @@ FHP_NO_FIRST_HEADER = 0x7FF
 APID_IDLE = 0x7FF
 
 
-class FrameQuality:
-    """Decoded frame quality indicator (int-valued, Spark-friendly)."""
-
-    GOOD = 0
-    DEGRADED = 1
-    BAD = 2
-    MISSING = 3
-
-
 @dataclass(frozen=True)
 class TMFramePrimaryHeader:
     """Parsed 48-bit TM Transfer Frame primary header.

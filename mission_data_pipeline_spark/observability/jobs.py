@@ -7,7 +7,10 @@ status store (the listener-fed store behind the web UI, kept also when
 the UI is off). :func:`harvest_job_group` reads the jobs submitted
 under one ``setJobGroup`` name and sums their stages' task, time and
 shuffle figures. It reads only the group's own stage ids, launches no
-Spark job and takes no option.
+Spark job and takes no option. The store keeps every job ever run under
+a group name, so the harvest is scoped like a submission: it keeps the
+group's jobs that carry every job tag set on the calling thread
+(``sc.addJobTag``), and all of them when none is set.
 
 Run a measured action under a group, then harvest it::
 
@@ -17,8 +20,10 @@ Run a measured action under a group, then harvest it::
     # {'jobs': 1, 'stages': 1, 'tasks': 8, 'failed_tasks': 0, ...}
 
 :class:`~mission_data_pipeline_spark.core.pipeline.Pipeline` runs each
-batch under ``mdps:<name>:batch<N>`` and harvests those groups once,
-after the last batch; ``bench.py`` harvests each query's final run.
+batch under ``mdps:<name>:batch<N>`` and each run under a job tag of its
+own, and harvests those groups once, after the last batch, with the tag
+still set, so a pipeline name reused in one session counts each run
+alone; ``bench.py`` harvests each query's final run.
 """
 
 from __future__ import annotations
@@ -51,7 +56,8 @@ def harvest_job_group(spark, group: str) -> dict:
     """Jobs, stages, tasks, failures, times and shuffle bytes of the
     jobs submitted under job group ``group``.
 
-    - ``jobs``: job ids the group holds in the status store;
+    - ``jobs``: job ids the group holds in the status store, among
+      those carrying the calling thread's job tags;
     - ``stages``: distinct stage ids that ran at least one attempt;
     - ``tasks`` / ``failed_tasks``: summed over every attempt that ran;
     - ``retried_stages``: attempts after a stage's first;
@@ -71,12 +77,13 @@ def harvest_job_group(spark, group: str) -> dict:
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()  # noqa: SLF001
     tracker = sc.statusTracker()
+    tags = list(sc.getJobTags())
     deadline = time.monotonic() + HARVEST_TIMEOUT_S
     while True:
         jobs = [
             j
             for j in (_read(store.job, jid) for jid in tracker.getJobIdsForGroup(group))
-            if j is not None
+            if j is not None and all(j.jobTags().contains(t) for t in tags)
         ]
         running = any(str(j.status()) == "RUNNING" for j in jobs)
         if not running or time.monotonic() >= deadline:

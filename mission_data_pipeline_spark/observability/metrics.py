@@ -4,9 +4,9 @@ Parity: reference ``src/mdp/observability/metrics.py:15-120`` — running
 batch/packet counters (A1, ``:40-58``), per-stage sums (A2, ``:60-77``),
 a derived rate with zero-division → 0.0 (A3, ``:26-37``), nested
 rounded snapshot dict (A5, ``:101-120``). Thread-safe via a lock, as in
-the reference (``:45-47``); on Spark the driver-side orchestration loop
-is the only writer, but foreachBatch streaming callbacks may run on a
-separate thread, so the lock stays.
+the reference (``:45-47``): the run's thread is the only writer, but a
+hook or a monitoring thread may read :meth:`PipelineMetrics.snapshot`
+while a batch records, and a snapshot must not see half an update.
 
 On Spark a transformer call only builds a plan: its time is recorded
 as ``build_s``, never divided into rows. A loader call runs the batch's

@@ -1,12 +1,7 @@
 from mission_data_pipeline_spark.operators.decom import ParameterDefinition, decommutate
 from mission_data_pipeline_spark.operators.calibration import Calibration, apply_calibrations
 from mission_data_pipeline_spark.operators.filters import apid_filter
-from mission_data_pipeline_spark.operators.dataset import (
-    tidy_parameter,
-    to_wide,
-    union_datasets,
-    parameter_stats,
-)
+from mission_data_pipeline_spark.operators.dataset import to_wide
 from mission_data_pipeline_spark.operators.analytics import (
     funnel_depths,
     retention_cohorts,
@@ -30,8 +25,5 @@ __all__ = [
     "Calibration",
     "apply_calibrations",
     "apid_filter",
-    "tidy_parameter",
     "to_wide",
-    "union_datasets",
-    "parameter_stats",
 ]

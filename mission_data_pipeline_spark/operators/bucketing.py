@@ -19,7 +19,7 @@ Two shuffle-elimination strategies for the 100 TB path:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["write_bucketed", "salted_join"]
@@ -59,13 +59,12 @@ def salted_join(
     *,
     n_salts: int = 16,
     how: str = "inner",
-    spread_on: Column | None = None,
 ) -> DataFrame:
     """Equi-join robust to a skewed key distribution on ``big``.
 
     ``small`` is exploded ``n_salts``× with a salt column; ``big`` rows
-    get a deterministic salt from ``spread_on`` (default: a hash of the
-    whole row via ``xxhash64(*columns)``), so a hot key's rows land on
+    get a deterministic salt from a hash of the whole row
+    (``xxhash64(*columns)``), so a hot key's rows land on
     ``n_salts`` different reducers. Join keys become ``(on, salt)``.
     The ``n_salts``× replication of the small side is the price; use
     only when the small side is genuinely small and the big side's skew
@@ -83,9 +82,8 @@ def salted_join(
             "the small side is replicated per salt, so right/full outer "
             "joins would emit each unmatched small-side row n_salts times"
         )
-    if spread_on is None:
-        spread_on = F.xxhash64(*[F.col(c) for c in big.columns])
-    salted_big = big.withColumn("__salt", F.pmod(spread_on, F.lit(n_salts)))
+    spread = F.xxhash64(*[F.col(c) for c in big.columns])
+    salted_big = big.withColumn("__salt", F.pmod(spread, F.lit(n_salts)))
     salted_small = small.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     ).withColumn("__salt", F.col("__salt").cast("long"))

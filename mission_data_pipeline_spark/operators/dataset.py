@@ -1,10 +1,10 @@
 """Dataset-level relational ops on the tidy params_df.
 
-Parity: reference ``src/mdp/models/dataset.py`` — tidy export (D2), wide
-pivot with duplicate-timestamp last-wins (D3, ``dataset.py:84-95``),
-union/merge (D4 — implemented as a true immutable union; the reference's
-in-place-mutation merge is a documented bug, SURVEY §2.3), per-parameter
-stats (D6).
+Parity: reference ``src/mdp/models/dataset.py`` — wide pivot with
+duplicate-timestamp last-wins (D3, ``dataset.py:84-95``). Tidy export
+(D2), union (D4) and per-parameter stats (D6) are one DataFrame call
+each (``filter``/``unionByName``/``groupBy``); the declared queries run
+them as SQL.
 """
 
 from __future__ import annotations
@@ -12,34 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-TIDY_COLUMNS = [
-    "time_tai",
-    "apid",
-    "seq_count",
-    "raw_value",
-    "eng_value",
-    "unit",
-    "validity",
-    "out_of_limit",
-    "alarm_level",
-]
 
-
-def tidy_parameter(params: DataFrame, name: str) -> DataFrame:
-    """Per-parameter tidy frame, time-sorted (reference ``dataset.py:63-82``)."""
-    return (
-        params.filter(F.col("name") == name)
-        .select(*TIDY_COLUMNS)
-        .orderBy("time_tai")
-    )
-
-
-def to_wide(
-    params: DataFrame,
-    value_col: str = "eng_value",
-    *,
-    names: list[str] | None = None,
-) -> DataFrame:
+def to_wide(params: DataFrame, value_col: str = "eng_value") -> DataFrame:
     """Wide pivot: one column per parameter name, indexed by time.
 
     Duplicate (name, time) samples collapse **last-wins in sample
@@ -48,30 +22,11 @@ def to_wide(
     make it explicit and deterministic by ``seq_count`` — the packet
     sequence counter is the reference's insertion order.
 
-    One shuffle (groupBy time_tai). Pass ``names`` (the mission's
-    parameter dictionary — always known up front) to skip the pivot's
-    implicit distinct-names discovery pass: at 100 TB that pass is a
-    full extra scan + shuffle of the fact table just to learn a column
-    list the MIB already states.
+    One shuffle (groupBy time_tai), plus the pivot's distinct-names
+    discovery pass over ``params``.
     """
     ordered = F.max_by(F.col(value_col), F.col("seq_count"))
-    grouped = params.groupBy("time_tai")
-    pivoted = grouped.pivot("name", names) if names else grouped.pivot("name")
-    return pivoted.agg(ordered).orderBy("time_tai")
-
-
-def union_datasets(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Immutable union of two tidy frames (fixes reference D4 mutation bug)."""
-    return a.unionByName(b, allowMissingColumns=True)
-
-
-def parameter_stats(params: DataFrame) -> DataFrame:
-    """Per-parameter count + time range (reference ``parameter.py:68-77``)."""
-    return params.groupBy("name").agg(
-        F.count(F.lit(1)).alias("n_samples"),
-        F.min("time_tai").alias("time_min"),
-        F.max("time_tai").alias("time_max"),
-    )
+    return params.groupBy("time_tai").pivot("name").agg(ordered).orderBy("time_tai")
 
 
 def dedup_samples(params: DataFrame) -> DataFrame:

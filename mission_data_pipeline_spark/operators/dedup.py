@@ -343,7 +343,6 @@ def near_dedup_minhash(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: "int | None" = None,
-    hash_grams: bool = False,
 ) -> DataFrame:
     """End-to-end near-dup removal: keep docs minus verified duplicates.
 
@@ -357,10 +356,7 @@ def near_dedup_minhash(
     boilerplate-driven giant LSH buckets (star topology above the cap
     — see :func:`lsh_pairs_from_bands`); at production corpus sizes
     pass a cap (e.g. 1000) so one viral page can never quadratic the
-    shuffle. ``hash_grams=True`` shuffles 8-byte gram hashes instead
-    of gram strings (see :func:`shingles` — the at-scale byte cut on
-    the distinct + verify exchanges; Jaccard unchanged up to 64-bit
-    collisions).
+    shuffle.
 
     The featurized gram table is materialized once
     (:func:`operators.lineage.query_truncator`): it feeds the
@@ -373,11 +369,7 @@ def near_dedup_minhash(
     """
     from mission_data_pipeline_spark.operators.lineage import query_truncator
 
-    g = query_truncator()(
-        shingles(
-            docs, n=n, text_col=text_col, id_col=id_col, hash_grams=hash_grams
-        )
-    )
+    g = query_truncator()(shingles(docs, n=n, text_col=text_col, id_col=id_col))
     sig = minhash_signatures(g, num_hashes=num_hashes)
     cand = lsh_candidate_pairs(sig, bands=bands, max_bucket=max_bucket)
     dups = (
@@ -397,7 +389,6 @@ def connected_components(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 20,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Duplicate clusters from candidate pairs: (node, component_id).
 
@@ -419,18 +410,14 @@ def connected_components(
     checkpoint blocks instead of re-joining old vs new labels. Near-dup
     graphs are overwhelmingly tiny cliques (diameter ≤ 3), so the loop
     exits on the converged-round check almost immediately; ``max_iter``
-    bounds adversarial chains.
+    bounds adversarial chains, and a graph that has not converged within
+    it raises.
 
     Truncation goes through :func:`operators.lineage.query_truncator`:
     ``localCheckpoint`` (executor-local blocks — right for local mode,
     NOT fault-tolerant) unless ``$SPARK_GRAFT_CHECKPOINT_DIR`` names a
     reliable dir (HDFS/S3A), in which case executor loss mid-fixpoint
     recovers from the checkpoint files instead of killing the job.
-
-    ``stats``: pass a dict to receive ``{"rounds": k}`` — the number of
-    propagation rounds actually run (including the final zero-change
-    verification round). The giant-component probe uses this to pin
-    that a power-law crawl graph converges in O(log diameter) rounds.
     """
     from mission_data_pipeline_spark.operators.lineage import query_truncator
 
@@ -453,9 +440,7 @@ def connected_components(
     # so a graph that converges exactly at max_iter hops can verify that
     # the fixpoint was reached (that round observes zero changes).
     changed = 0
-    rounds = 0
     for _ in range(max_iter + 1):
-        rounds += 1
         neigh = (
             edges.join(
                 labels.select(
@@ -523,8 +508,6 @@ def connected_components(
         labels = new_labels.drop("__ch")
         if changed == 0:
             break
-    if stats is not None:
-        stats["rounds"] = rounds
     if changed != 0:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
@@ -789,7 +772,6 @@ def exact_substring_dedup(
 
 def exact_substring_dedup_bpe(
     docs: DataFrame,
-    merges=None,
     *,
     k: int = 20,
     text_col: str = "text",
@@ -813,16 +795,9 @@ def exact_substring_dedup_bpe(
     bounded Python encode plus one word-keyed join; everything
     corpus-sized stays in the same JVM gram/interval plan.
     """
-    from mission_data_pipeline_spark.operators.bpe import (
-        DEFAULT_MERGES,
-        bpe_token_sequences,
-    )
+    from mission_data_pipeline_spark.operators.bpe import bpe_token_sequences
 
-    if merges is None:
-        merges = DEFAULT_MERGES
-    seqs = bpe_token_sequences(
-        docs, merges, text_col=text_col, id_col=id_col
-    )
+    seqs = bpe_token_sequences(docs, text_col=text_col, id_col=id_col)
     return exact_substring_dedup_tokens(
         seqs, k=k, tokens_col="toks", id_col="doc_id"
     )

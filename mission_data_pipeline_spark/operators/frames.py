@@ -31,7 +31,6 @@ from mission_data_pipeline_spark.models.ccsds import (
     PRIMARY_HEADER_LEN,
     TM_FRAME_HEADER_LEN,
     CCSDSPrimaryHeader,
-    FrameQuality,
 )
 
 #: Output of :func:`frames_to_packets`: PACKET_SCHEMA's header fields
@@ -99,42 +98,36 @@ def frames_to_packets(
     *,
     frame_col: str = "frame",
     order_col: str | None = None,
-    quality_col: str | None = None,
-    partition_cols: tuple[str, ...] = (),
     trailer_len: int = 0,
-    include_idle: bool = False,
 ) -> DataFrame:
     """Reassemble space packets from TM frames (first-header-pointer walk).
 
-    Within each (spacecraft_id, virtual_channel_id, *partition_cols)
-    group, frames are ordered by ``order_col`` (default: the 8-bit
-    virtual channel frame count — pass an unwrapped column such as
-    receipt time or file offset for runs longer than 256 frames) and
-    their data fields concatenated under CCSDS 132.0-B-3 semantics:
+    Within each (spacecraft_id, virtual_channel_id) group, frames are
+    ordered by ``order_col`` (default: the 8-bit virtual channel frame
+    count — pass an unwrapped column such as receipt time or file offset
+    for runs longer than 256 frames) and their data fields concatenated
+    under CCSDS 132.0-B-3 semantics:
 
     - ``first_header_pointer`` locates the first NEW packet header in a
       frame; bytes before it complete the packet carried from the
       previous frame;
     - ``0x7FF`` (no first header) frames are pure continuations;
-    - ``0x7FE`` (idle-only) frames, frames with ``quality_col`` != GOOD,
-      and VC frame-count gaps all break continuity — the carried partial
-      packet is dropped and the walk resyncs at the next frame's pointer
-      (lost-frame semantics: you lose the spanning packet, nothing else);
-    - idle packets (APID 0x7FF) are dropped unless ``include_idle``.
+    - ``0x7FE`` (idle-only) frames and VC frame-count gaps break
+      continuity — the carried partial packet is dropped and the walk
+      resyncs at the next frame's pointer (lost-frame semantics: you
+      lose the spanning packet, nothing else);
+    - idle packets (APID 0x7FF) are dropped.
 
     ``trailer_len`` trims OCF/FECF trailer bytes from each data field.
     """
     parsed = parse_frame_headers(frames, frame_col=frame_col)
-    keys = ["spacecraft_id", "virtual_channel_id", *partition_cols]
+    keys = ["spacecraft_id", "virtual_channel_id"]
     sort_key = order_col or "virtual_channel_frame_count"
     cols = parsed.select(
         *keys,
         F.col(sort_key).alias("__ord"),
         F.col("virtual_channel_frame_count").alias("__vcfc"),
         F.col("first_header_pointer").alias("__fhp"),
-        (F.col(quality_col) if quality_col else F.lit(FrameQuality.GOOD))
-        .cast("int")
-        .alias("__quality"),
         F.col(frame_col).alias("__frame"),
     )
 
@@ -149,7 +142,7 @@ def frames_to_packets(
         prev_vcfc: int | None = None
 
         def emit(hdr: CCSDSPrimaryHeader, data_field: bytes, vcfc: int) -> None:
-            if hdr.apid == APID_IDLE and not include_idle:
+            if hdr.apid == APID_IDLE:
                 return
             rows.append(
                 (
@@ -167,17 +160,12 @@ def frames_to_packets(
                 )
             )
 
-        for frame, vcfc, fhp, quality in zip(
-            pdf["__frame"], pdf["__vcfc"], pdf["__fhp"], pdf["__quality"]
-        ):
+        for frame, vcfc, fhp in zip(pdf["__frame"], pdf["__vcfc"], pdf["__fhp"]):
             frame, vcfc, fhp = bytes(frame), int(vcfc), int(fhp)
             gap = prev_vcfc is not None and (prev_vcfc + 1) % 256 != vcfc
             prev_vcfc = vcfc
             end = len(frame) - trailer_len
             data = frame[TM_FRAME_HEADER_LEN:end]
-            if int(quality) != FrameQuality.GOOD:
-                carry, carry_active = b"", False  # lost frame breaks the span
-                continue
             if gap:
                 carry, carry_active = b"", False
             if fhp == FHP_IDLE_ONLY:

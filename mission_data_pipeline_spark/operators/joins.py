@@ -35,20 +35,15 @@ def asof_join(
     *,
     on: str,
     by: list[str] | None = None,
-    direction: str = "backward",
-    tolerance: float | int | None = None,
     right_prefix: str = "right_",
 ) -> DataFrame:
-    """For each left row, attach the nearest right row at-or-before it.
+    """For each left row, attach the nearest right row at-or-before it
+    (``right.on <= left.on``; pandas ``merge_asof`` backward semantics).
 
-    ``direction='backward'`` (default): nearest right row with
-    ``right.on <= left.on``; ``'forward'``: nearest with ``>=``.
     ``by``: equality keys (e.g. the parameter name / spacecraft id).
     With ``by`` empty/None the join is GLOBAL and runs as a
     range-partitioned segmented scan (see :func:`_keyless_carry`) —
     never a single-partition window.
-    ``tolerance``: maximum |left.on - right.on|; matches farther than
-    this come back null (pandas ``merge_asof`` semantics).
 
     Output: every left row + the matched right row's non-key columns,
     renamed ``{right_prefix}{col}`` (including ``{right_prefix}{on}``).
@@ -56,8 +51,6 @@ def asof_join(
     payload column ordering; make right unique per (by, on) for fully
     deterministic output.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
     by = list(by or [])
     payload = [c for c in right.columns if c not in by and c != on]
 
@@ -91,13 +84,9 @@ def asof_join(
 
     if by:
         # right rows sort before left rows at equal time → inclusive match
-        asc = direction == "backward"
         w = (
             Window.partitionBy(*by)
-            .orderBy(
-                F.col("__t").asc() if asc else F.col("__t").desc(),
-                F.col("__side").asc(),
-            )
+            .orderBy(F.col("__t").asc(), F.col("__side").asc())
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         matched = u.withColumn(
@@ -107,13 +96,7 @@ def asof_join(
         # Keyless as-of: Window.partitionBy() would plan a
         # SinglePartition exchange — the whole input through one task.
         # Use a distributed segmented scan instead (see _keyless_carry).
-        matched = _keyless_carry(u, direction).filter(F.col("__side") == 1)
-
-    if tolerance is not None:
-        dt = F.abs(F.col("__t") - F.col("__m")[on])
-        matched = matched.withColumn(
-            "__m", F.when(dt <= F.lit(tolerance), F.col("__m"))
-        )
+        matched = _keyless_carry(u).filter(F.col("__side") == 1)
 
     out_cols: list[Column] = [F.col(c) for c in left.columns]
     out_cols.append(F.col("__m")[on].alias(f"{right_prefix}{on}"))
@@ -121,7 +104,7 @@ def asof_join(
     return matched.select(*out_cols)
 
 
-def _keyless_carry(u: DataFrame, direction: str) -> DataFrame:
+def _keyless_carry(u: DataFrame) -> DataFrame:
     """Carry the most recent right-side struct onto every row of the
     tagged union ``u`` WITHOUT equality keys — the distributed
     segmented-scan shape (no single-partition window):
@@ -139,11 +122,7 @@ def _keyless_carry(u: DataFrame, direction: str) -> DataFrame:
     Equal sort keys land in one range partition, and at a boundary a
     right row (side 0) sorts into the earlier slice than the same-time
     left row, so the inclusive same-time match survives the split."""
-    asc = direction == "backward"
-    sort_cols = [
-        F.col("__t").asc() if asc else F.col("__t").desc(),
-        F.col("__side").asc(),
-    ]
+    sort_cols = [F.col("__t").asc(), F.col("__side").asc()]
     n = int(u.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     rp = u.repartitionByRange(n, *sort_cols).withColumn(
         "__pid", F.spark_partition_id()
@@ -153,13 +132,11 @@ def _keyless_carry(u: DataFrame, direction: str) -> DataFrame:
         .orderBy(*sort_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # Per-slice last-in-traversal right struct: traversal runs ascending
-    # __t for backward (→ max_by), descending for forward (→ min_by).
-    pick = F.max_by if asc else F.min_by
+    # Per-slice last-in-traversal (latest __t) right struct.
     sums = (
         rp.filter(F.col("__side") == 0)
         .groupBy(F.col("__pid").alias("__spid"))
-        .agg(pick("__r", F.col("__t")).alias("__pr"))
+        .agg(F.max_by("__r", F.col("__t")).alias("__pr"))
     )
     dom = u.sparkSession.range(n).select(F.col("id").cast("int").alias("__pid"))
     carry_in = (

@@ -76,7 +76,6 @@ def mixture_sample(
     *,
     group_col: str,
     key_cols: list[str],
-    weight_col: str | None = None,
     seed: int = 0,
 ) -> DataFrame:
     """Downsample groups to a target mixture (domain/language balancing).
@@ -85,9 +84,8 @@ def mixture_sample(
     the ratios matter; they need not sum to 1). The operator finds the
     largest output size that honors the mixture without oversampling
     any group — ``T = min_g(m_g / w_g)`` where ``m_g`` is the group's
-    current mass (row count, or ``sum(weight_col)`` e.g. token counts)
-    — then keeps each group at rate ``w_g * T / m_g`` with the same
-    seeded-hash gate as :func:`hash_sample`. The binding (scarcest
+    current row count — then keeps each group at rate ``w_g * T / m_g``
+    with the same seeded-hash gate as :func:`hash_sample`. The binding (scarcest
     relative to its target) group is kept whole. Groups absent from
     ``targets`` are dropped.
 
@@ -102,12 +100,9 @@ def mixture_sample(
     mapping = F.create_map(
         *[F.lit(x) for kv in targets.items() for x in kv]
     )
-    mass = (
-        F.count("*") if weight_col is None else F.sum(weight_col)
-    ).cast("double")
     masses = (
         df.groupBy(group_col)
-        .agg(mass.alias("__m"))
+        .agg(F.count("*").cast("double").alias("__m"))
         .withColumn("__w", mapping[F.col(group_col)].cast("double"))
         .filter(F.col("__w").isNotNull())
     )
@@ -129,7 +124,6 @@ def temperature_sample(
     *,
     group_col: str,
     key_cols: list[str],
-    weight_col: str | None = None,
     seed: int = 0,
     round_digits: int = 9,
 ) -> DataFrame:
@@ -150,10 +144,7 @@ def temperature_sample(
     """
     if not 0.0 <= alpha <= 1.0:
         raise ValueError(f"alpha must be in [0, 1], got {alpha}")
-    mass = (
-        F.count("*") if weight_col is None else F.sum(weight_col)
-    ).cast("double")
-    masses = df.groupBy(group_col).agg(mass.alias("__m"))
+    masses = df.groupBy(group_col).agg(F.count("*").cast("double").alias("__m"))
     mmin = masses.agg(F.min("__m").alias("__mmin"))
     rates = masses.crossJoin(F.broadcast(mmin)).select(
         group_col,
@@ -309,13 +300,11 @@ def _hashed_gram_buckets(
     buckets: int,
     text_col: str,
     id_col: str,
-    hash_fn: str,
 ) -> DataFrame:
     """(doc_id, bucket) per unigram+bigram occurrence — DSIR's hashed
-    bag-of-ngrams featurization. ``hash_fn='md5'`` (default) is exactly
-    replayable in the DuckDB oracle; ``'xxhash64'`` is the cheap
-    JVM-side path for real deployments (same distributional semantics —
-    any uniform hash works for DSIR — but not SQL-twinnable)."""
+    bag-of-ngrams featurization. The bucket hash is md5's first 32 bits,
+    exactly replayable in the DuckDB oracle (any uniform hash gives DSIR
+    the same distributional semantics)."""
     toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     staged = docs.select(F.col(id_col).alias("doc_id"), toks.alias("__t"))
     # Stage the token array before HOF lambdas reference it (interpreted
@@ -333,12 +322,7 @@ def _hashed_gram_buckets(
     grams = staged.select(
         "doc_id", F.explode(F.concat(unis, bis)).alias("gram")
     )
-    if hash_fn == "md5":
-        h = F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10).cast("long")
-    elif hash_fn == "xxhash64":
-        h = F.xxhash64("gram")
-    else:
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
+    h = F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10).cast("long")
     return grams.select("doc_id", F.pmod(h, F.lit(buckets)).alias("bucket"))
 
 
@@ -352,7 +336,6 @@ def dsir_select(
     text_col: str = "text",
     id_col: str = "doc_id",
     seed: int = 0,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR, Xie et al. 2023):
     pick the ``n`` raw-corpus documents whose hashed-ngram distribution
@@ -393,9 +376,7 @@ def dsir_select(
         raise ValueError(f"n must be >= 1, got {n}")
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
-    kw = dict(
-        buckets=buckets, text_col=text_col, id_col=id_col, hash_fn=hash_fn
-    )
+    kw = dict(buckets=buckets, text_col=text_col, id_col=id_col)
     trunc = query_truncator()
     # raw_grams feeds BOTH the q̂_raw bucket counts and the per-doc
     # scoring join through different subtrees (one has a partial agg

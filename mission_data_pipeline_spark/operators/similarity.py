@@ -347,7 +347,6 @@ def kmeans_centroids(
     n_centroids: int = 32,
     vec_col: str = "embedding",
     seed: int = 0,
-    sample_fraction: float | None = None,
     max_iter: int = 20,
 ) -> DataFrame:
     """Learned coarse centroids via Spark ML KMeans — the IVF quality
@@ -355,8 +354,8 @@ def kmeans_centroids(
     fallback; k-means centroids give tighter partitions and better
     recall at the same n_probe).
 
-    At 100 TB, fit on a sample (``sample_fraction`` — k-means cluster
-    shapes converge long before the full corpus is seen) and reuse the
+    At 100 TB, fit on a sample of ``corpus`` (k-means cluster shapes
+    converge long before the full corpus is seen) and reuse the
     centroids across query batches: the model's centers are k·dim
     doubles, driver-sized by construction, re-emitted as a tiny
     DataFrame for the same broadcast joins ``ivf_topk`` already does.
@@ -369,8 +368,6 @@ def kmeans_centroids(
             F.transform(F.col(vec_col), lambda x: x.cast("double"))
         ).alias("features")
     )
-    if sample_fraction is not None:
-        data = data.sample(fraction=sample_fraction, seed=seed)
     model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(data)
     spark = corpus.sparkSession
     rows = [
@@ -546,7 +543,6 @@ def quantize_embeddings(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Symmetric per-vector int8 scalar quantization: (id, scale, qvec).
 
@@ -568,7 +564,6 @@ def quantize_embeddings(
     )
     return emb.select(
         F.col(id_col),
-        *keep_cols,
         F.col("__scale").alias("scale"),
         q.alias("qvec"),
     )
@@ -1131,8 +1126,6 @@ def pq_topk_rerank(
     codes_col: str = "pq_codes",
     vec_col: str = "embedding",
     round_digits: int = 6,
-    tie_extend: bool = True,
-    max_shortlist: "int | None" = None,
 ) -> DataFrame:
     """Production PQ shape: ADC over the compressed codes SHORTLISTS
     ``shortlist`` candidates per query, then the original vectors of
@@ -1156,17 +1149,15 @@ def pq_topk_rerank(
     shortlist smaller than it drops true neighbors arbitrarily —
     recall@10 read 0.505 at shortlist=50 on a corpus with ~100-clone
     clusters and 1.000 at shortlist=150, at the SAME wall (the re-rank
-    is broadcast-sized either way). With ``tie_extend=True`` (default)
-    the shortlist is cut with RANK() over the ADC distance, so a tie
-    group straddling the cutoff is kept whole and the clone-cluster
-    case AUTO-RECOVERS with no knob turn. The extension is bounded by
-    ``max_shortlist`` (default ``8 * shortlist``): if ADC ties would
-    grow any query's shortlist past it, the plan FAILS LOUDLY
+    is broadcast-sized either way). The shortlist is therefore cut with
+    RANK() over the ADC distance, so a tie group straddling the cutoff
+    is kept whole and the clone-cluster case AUTO-RECOVERS with no knob
+    turn. The extension is bounded by ``8 * shortlist``: if ADC ties
+    would grow any query's shortlist past it, the plan FAILS LOUDLY
     (``assert_true`` inside the candidate filter — Catalyst cannot
     prune it) instead of silently truncating — that corpus has a clone
     cluster larger than the bound, and the right fix is near-dedup
-    first or an explicitly larger ``shortlist``/``max_shortlist``.
-    ``tie_extend=False`` restores the bare row-number cut."""
+    first or a larger ``shortlist``."""
     cand = pq_topk(
         encoded,
         queries,
@@ -1176,33 +1167,31 @@ def pq_topk_rerank(
         codes_col=codes_col,
         query_vec_col=vec_col,
         round_digits=round_digits,
-        include_ties=tie_extend,
+        include_ties=True,
     ).select("query_id", "neighbor_id")
-    if tie_extend:
-        if max_shortlist is None:
-            max_shortlist = 8 * shortlist
-        wq = Window.partitionBy("query_id")
-        overflow_msg = F.concat(
-            F.lit("pq_topk_rerank: ADC ties extended query "),
-            F.col("query_id").cast("string"),
-            F.lit("'s shortlist to "),
-            F.col("__n_cand").cast("string"),
-            F.lit(
-                f" candidates (> max_shortlist={max_shortlist}): the "
-                "corpus has a near-duplicate cluster larger than the "
-                "bound — near-dedup it first, or raise shortlist/"
-                "max_shortlist (see the knob rule in pq_topk_rerank)"
-            ),
+    max_shortlist = 8 * shortlist
+    wq = Window.partitionBy("query_id")
+    overflow_msg = F.concat(
+        F.lit("pq_topk_rerank: ADC ties extended query "),
+        F.col("query_id").cast("string"),
+        F.lit("'s shortlist to "),
+        F.col("__n_cand").cast("string"),
+        F.lit(
+            f" candidates (> 8 * shortlist = {max_shortlist}): the "
+            "corpus has a near-duplicate cluster larger than the "
+            "bound — near-dedup it first, or raise shortlist "
+            "(see the knob rule in pq_topk_rerank)"
+        ),
+    )
+    cand = (
+        cand.withColumn("__n_cand", F.count("*").over(wq))
+        .filter(
+            F.assert_true(
+                F.col("__n_cand") <= F.lit(max_shortlist), overflow_msg
+            ).isNull()
         )
-        cand = (
-            cand.withColumn("__n_cand", F.count("*").over(wq))
-            .filter(
-                F.assert_true(
-                    F.col("__n_cand") <= F.lit(max_shortlist), overflow_msg
-                ).isNull()
-            )
-            .drop("__n_cand")
-        )
+        .drop("__n_cand")
+    )
     fetched = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv")
     ).join(broadcast(cand), "neighbor_id")
@@ -1234,7 +1223,6 @@ def hard_negative_mining(
     anchors: DataFrame,
     *,
     k: int = 5,
-    margin: "float | None" = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
@@ -1245,27 +1233,18 @@ def hard_negative_mining(
     near-the-decision-boundary negatives that make triplet/contrastive
     batches informative. Returns ``(query_id, neighbor_id,
     neighbor_label, cosine, rank, pos_cosine)`` where ``pos_cosine`` is
-    the anchor's nearest SAME-label cosine (its hardest positive).
-
-    With ``margin`` set, negatives are restricted to the SEMI-HARD band
-    of Schroff et al. 2015 (FaceNet §3.2), translated to cosine:
-    ``pos_cosine > cosine >= pos_cosine - margin`` — harder than "easy"
-    negatives but not harder than the positive (those invert the
-    gradient). Anchors without any same-label neighbor pass ``margin``
-    unfiltered (pos_cosine NULL).
+    the anchor's nearest SAME-label cosine (its hardest positive; NULL
+    for an anchor without a same-label neighbor).
 
     Scale shape: the anchor batch is bounded by contract (same as
     cosine_topk / knn); the corpus is scanned once against the
     broadcast anchors, all-JVM expression cosines (no Python), and only
-    per-anchor windows rank the scored rows. Ranking happens AFTER the
-    semi-hard filter so ``rank <= k`` selects the k hardest negatives
-    WITHIN the band. Cosines round before ranking (``round_digits``)
+    per-anchor windows rank the scored rows. Cosines round before
+    ranking (``round_digits``)
     with id tie-break, so the selection is reproducible cross-engine.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if margin is not None and margin <= 0:
-        raise ValueError(f"margin must be > 0 when set, got {margin}")
     a = anchors.select(
         F.col(id_col).alias("query_id"),
         F.col(label_col).alias("query_label"),
@@ -1302,14 +1281,6 @@ def hard_negative_mining(
     neg = scored.filter(
         F.col("neighbor_label") != F.col("query_label")
     ).join(pos, "query_id", "left")
-    if margin is not None:
-        neg = neg.filter(
-            F.col("pos_cosine").isNull()
-            | (
-                (F.col("cosine") < F.col("pos_cosine"))
-                & (F.col("cosine") >= F.col("pos_cosine") - margin)
-            )
-        )
     wneg = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )

@@ -41,7 +41,6 @@ def scrub_text(
     *,
     text_col: str = "text",
     patterns: tuple[tuple[str, str], ...] = SCRUB_PATTERNS,
-    out_col: str | None = None,
 ) -> DataFrame:
     """Redact PII-shaped spans (emails, URLs, phone/card numbers) with
     typed placeholder tokens — the standard scrub pass before a corpus
@@ -56,7 +55,7 @@ def scrub_text(
     col = F.col(text_col)
     for pat, token in patterns:
         col = F.regexp_replace(col, pat, token)
-    return docs.withColumn(out_col or text_col, col)
+    return docs.withColumn(text_col, col)
 
 
 def bm25_scores(
@@ -507,7 +506,6 @@ def embed_text_hashed(
     id_col: str = "doc_id",
     seed: int = 0,
     out_col: str = "v",
-    normalize: bool = True,
 ) -> DataFrame:
     """Dense document vectors derived IN-ENGINE from text — the
     text→vector bridge that lets semantic_dedup / cosine_topk /
@@ -552,60 +550,30 @@ def embed_text_hashed(
             ),
         )
     )
-    if normalize:
-        # stage the norm as its OWN column: a captured aggregate inside
-        # the transform lambda would re-evaluate per element (the
-        # interpreted-HOF pitfall — see BASELINE.md round 4)
-        dense = (
-            dense.withColumn(
-                "__norm",
-                F.sqrt(
-                    F.aggregate(
-                        F.col(out_col), F.lit(0.0), lambda a, x: a + x * x
-                    )
+    # stage the norm as its OWN column: a captured aggregate inside
+    # the transform lambda would re-evaluate per element (the
+    # interpreted-HOF pitfall — see BASELINE.md round 4)
+    dense = (
+        dense.withColumn(
+            "__norm",
+            F.sqrt(
+                F.aggregate(
+                    F.col(out_col), F.lit(0.0), lambda a, x: a + x * x
+                )
+            ),
+        )
+        .withColumn(
+            out_col,
+            F.when(
+                F.col("__norm") > 0,
+                F.transform(
+                    F.col(out_col),
+                    lambda x: F.round(x / F.col("__norm"), 9),
                 ),
-            )
-            .withColumn(
-                out_col,
-                F.when(
-                    F.col("__norm") > 0,
-                    F.transform(
-                        F.col(out_col),
-                        lambda x: F.round(x / F.col("__norm"), 9),
-                    ),
-                ).otherwise(F.col(out_col)),
-            )
+            ).otherwise(F.col(out_col)),
         )
+    )
     return dense.select(F.col("doc_id").alias(id_col), out_col)
-
-
-def _heavy_tail_join(
-    left: DataFrame, freq: DataFrame, key: str, heavy_k: int
-) -> DataFrame:
-    """Inner-join ``left`` with a key-unique frequency table, Zipf-aware:
-    the top-``heavy_k`` rows of ``freq`` by count are BROADCAST (Zipf
-    means ~1k terms carry most of the token mass, and exactly those hot
-    keys skew a sort-merge join's term sort), so the overwhelming
-    majority of left rows match map-side with no shuffle; only the
-    rare-term tail — many distinct keys, few rows each, hence skew-free
-    — takes the shuffle join. Result is row-identical to
-    ``left.join(freq, key)``; ``heavy_k=0`` disables the split."""
-    if heavy_k <= 0:
-        return left.join(freq, key)
-    if len(freq.columns) != 2:
-        # cnt below picks "the" non-key column, and the tail branch drops
-        # only that one column before re-joining freq — a 3+-column freq
-        # would surface duplicate/ambiguous columns downstream.
-        raise ValueError(
-            "_heavy_tail_join needs freq = exactly [key, count] columns; "
-            f"got {freq.columns} — select it down before the split"
-        )
-    cnt = [c for c in freq.columns if c != key][0]
-    heavy = freq.orderBy(F.col(cnt).desc(), F.col(key)).limit(heavy_k)
-    tagged = left.join(broadcast(heavy), key, "left")
-    matched = tagged.filter(F.col(cnt).isNotNull())
-    tail = tagged.filter(F.col(cnt).isNull()).drop(cnt).join(freq, key)
-    return matched.unionByName(tail)
 
 
 def unigram_logprob(
@@ -613,7 +581,6 @@ def unigram_logprob(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    heavy_k: int = 0,
 ) -> DataFrame:
     """Corpus-unigram language-model score per document: mean
     ``-ln p(token)`` under the corpus's own unigram distribution — the
@@ -624,12 +591,11 @@ def unigram_logprob(
 
     Scale shape: one explode → (doc, term) tf groupBy (map-side partial
     agg), a term-keyed join against the
-    vocabulary-sized frequency table. ``heavy_k>0`` switches the join
-    hybrid (:func:`_heavy_tail_join`) for corpora whose hot keys skew
-    the shuffle; default flat — A/B at sf1 measured the hybrid 2x
-    SLOWER here (its matched/tail union recomputes the tf subtree),
-    while AQE skew handling covers the flat join's hot keys. The
-    corpus total rides a broadcast one-row frame.
+    vocabulary-sized frequency table. The join is flat: a hybrid that
+    broadcast the hot terms and shuffled the tail measured 2x SLOWER at
+    sf1 (its matched/tail union recomputes the tf subtree), while AQE
+    skew handling covers the flat join's hot keys. The corpus total
+    rides a broadcast one-row frame.
     Per-term contributions are rounded to 9 decimals and summed as
     DECIMAL(20,9) (the BM25 determinism pattern) so the SQL oracle
     matches exactly.
@@ -643,7 +609,7 @@ def unigram_logprob(
     total = freq.agg(F.sum("cf").alias("ctot"))
     contrib = -F.log(F.col("cf") / F.col("ctot")) * F.col("tf").cast("double")
     return (
-        _heavy_tail_join(tf, freq, "term", heavy_k)
+        tf.join(freq, "term")
         .crossJoin(broadcast(total))
         .withColumn("__c", F.round(contrib, 9).cast("decimal(20,9)"))
         .groupBy("doc_id")
@@ -666,7 +632,6 @@ def filter_badwords(
     words: list[str],
     *,
     text_col: str = "text",
-    keep_flag: bool = False,
 ) -> DataFrame:
     """C4's blocklist gate: drop documents containing any listed word
     (Raffel et al. 2020 apply the "List of Dirty, Naughty, Obscene..."
@@ -675,25 +640,20 @@ def filter_badwords(
     One compiled regex alternation with word boundaries, kept in the
     Java∩RE2 common subset so the operator and its SQL oracle run the
     same pattern. Zero shuffle — a map-side gate riding the scan, like
-    :func:`c4_signals`. ``keep_flag=True`` returns all rows with a
-    ``has_badword`` column instead of filtering (for audit counts).
+    :func:`c4_signals`.
     """
     import re as _re
 
     if not words:
         raise ValueError("filter_badwords needs at least one word")
     pat = r"\b(" + "|".join(_re.escape(w.lower()) for w in sorted(words)) + r")\b"
-    hit = F.lower(F.col(text_col)).rlike(pat)
-    if keep_flag:
-        return docs.withColumn("has_badword", hit)
-    return docs.filter(~hit)
+    return docs.filter(~F.lower(F.col(text_col)).rlike(pat))
 
 
 def normalize_text(
     docs: DataFrame,
     *,
     text_col: str = "text",
-    out_col: str | None = None,
 ) -> DataFrame:
     """Whitespace/control normalization — the cleanup pass before
     tokenization and hashing (dedup keys and token counts are only
@@ -716,7 +676,7 @@ def normalize_text(
     c = F.regexp_replace(c, "[ \\t]+", " ")
     c = F.regexp_replace(c, " ?\\n ?", "\n")
     c = F.trim(c)
-    return docs.withColumn(out_col or text_col, c)
+    return docs.withColumn(text_col, c)
 
 
 #: Tracking query parameters stripped by canonicalize_url — the
@@ -816,7 +776,6 @@ def bigram_logprob(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    heavy_k: int = 0,
 ) -> DataFrame:
     """Corpus-bigram conditional LM score per document: mean
     ``-ln P(w2 | w1)`` with ``P = count(w1 w2) / count(w1 ·)`` — one
@@ -827,12 +786,9 @@ def bigram_logprob(
     with fewer than two tokens have no bigrams and are omitted.
 
     Scale shape: one bigram explode → (doc, gram) tf groupBy (map-side
-    partial), gram- and head-keyed joins
-    against corpus count tables. ``heavy_k>0`` runs BOTH joins hybrid
-    (:func:`_heavy_tail_join`) — broadcast hot bigrams/head words, and
-    head counts are doubly Zipf-concentrated — but the measured sf1
-    default is flat (hybrid 2x slower here: union-branch subtree
-    recomputation outweighs the skew it removes; see unigram note).
+    partial), gram- and head-keyed flat joins against corpus count
+    tables (a hot-key broadcast hybrid measured 2x slower at sf1; see
+    the unigram note).
     DECIMAL-sum determinism as in BM25/unigram.
     """
     from mission_data_pipeline_spark.operators.dedup import word_ngrams
@@ -857,12 +813,8 @@ def bigram_logprob(
     headc = tf.groupBy("hh").agg(F.sum("tf").cast("double").alias("ch"))
     contrib = -F.log(F.col("cb") / F.col("ch")) * F.col("tf").cast("double")
     return (
-        _heavy_tail_join(
-            _heavy_tail_join(tf, bigc, "gh", heavy_k),
-            headc,
-            "hh",
-            heavy_k,
-        )
+        tf.join(bigc, "gh")
+        .join(headc, "hh")
         .withColumn("__c", F.round(contrib, 9).cast("decimal(20,9)"))
         .groupBy("doc_id")
         .agg(

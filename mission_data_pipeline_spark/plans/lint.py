@@ -125,20 +125,18 @@ def _is_keyless_aggregate(node: str) -> bool:
     return "Aggregate(" in node and ("keys=[]" in node or "key=[]" in node)
 
 
-def lint_plan(plan: str, *, allow: frozenset[str] | set[str] = frozenset()) -> list[str]:
+def lint_plan(plan: str) -> list[str]:
     """Lint one executed-plan string; returns violation descriptions.
 
-    ``allow`` suppresses whole rule ids for this plan (the caller's
-    per-query allowlist). AQE plans are trimmed to the final plan — the
-    ``== Initial Plan ==`` section double-counts nodes pre-reoptimization.
+    AQE plans are trimmed to the final plan — the ``== Initial Plan ==``
+    section double-counts nodes pre-reoptimization.
     """
     final = plan.split("== Initial Plan ==")[0]
     lines = final.splitlines()
     out: list[str] = []
 
     def hit(rule: str, detail: str) -> None:
-        if rule not in allow:
-            out.append(f"{rule}: {detail[:160]}")
+        out.append(f"{rule}: {detail[:160]}")
 
     for i, raw in enumerate(lines):
         node = _node(raw)

@@ -756,8 +756,7 @@ def _hard_negative_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIFFERENT-label vectors plus the anchor's hardest positive cosine.
     The query mines plain hard negatives (non-vacuous at every sf —
     the scaled corpora plant near-clone positives at cosine≈1.0, which
-    would empty a FaceNet semi-hard band); the margin/band semantics
-    are pinned by the unit test's hand-built fixture."""
+    would empty a FaceNet semi-hard band)."""
     from pyspark.sql import functions as F
 
     from mission_data_pipeline_spark.operators.similarity import (
@@ -820,7 +819,6 @@ _q(
         "X3+",
         "contrastive hard-negative mining: per anchor the 5 hardest "
         "different-label neighbors plus the hardest-positive cosine "
-        "(operator also offers the FaceNet semi-hard band, unit-pinned) "
         "— bounded anchor broadcast, one corpus scan, all-JVM cosines, "
         "rank-after-filter windows; the triplet-batch miner for "
         "embedding fine-tuning on curated corpora",

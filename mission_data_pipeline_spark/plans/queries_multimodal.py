@@ -403,8 +403,8 @@ def _pq_tie_guard_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     failure geometry of the r13 sfx10 probe: each query vector gets 12
     exact clones planted in the corpus, and the ADC shortlist (8) is
     SMALLER than the clone cluster (13 code-identical members). A
-    row-number shortlist cuts inside the tie group; the default
-    RANK()-cut (tie_extend=True) keeps it whole, so:
+    row-number shortlist cuts inside the tie group; pq_topk_rerank's
+    RANK()-cut keeps it whole, so:
 
     - ``tie_extended_ok``: the tie-aware ADC candidate list must
       exceed the nominal shortlist (>= 13 > 8) — deterministic

@@ -204,8 +204,7 @@ _q(
 
 # Hopping (sliding) window: size 1h, slide 30m — every event belongs to
 # exactly two windows; expressed as window-index arithmetic so the same
-# declarative shape runs on both engines (and as a Structured Streaming
-# groupBy(window(...)) in streaming/windows.py).
+# declarative shape runs on both engines.
 _SLIDE_US = 1_800_000_000
 _SIZE_US = 3_600_000_000
 _sql_w_slide = f"""

@@ -153,8 +153,7 @@ def _streaming_tumbling_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed through readStream (availableNow trigger), watermarked
     tumbling 1-hour counts into a memory sink, run to completion. In
     complete output mode the final table equals the batch aggregate, so
-    the same SQL oracles the streaming engine's stateful path
-    (streaming/windows.py windowed_stats shape)."""
+    the same SQL oracles the streaming engine's stateful path."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -221,8 +220,7 @@ def _streaming_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming bounded-state dedup, driver-checked: the events table is
     streamed TWICE (two file sources unioned — every row a duplicate)
     through dropDuplicatesWithinWatermark on event_id; the surviving
-    stream must be exactly the distinct batch table
-    (streaming/windows.py dedup_stream_content shape)."""
+    stream must be exactly the distinct batch table."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -557,7 +555,7 @@ _q(
 def _foreachbatch_upsert_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once ingest from an at-least-once stream, composed from
     two primitives the engine already proves separately: foreachBatch
-    micro-batch delivery (streaming/pipeline.py shape) + the idempotent
+    micro-batch delivery + the idempotent
     last-wins MERGE sink (sinks/merge.py). Events are re-laid-out as
     four files and streamed one file per micro-batch; every batch
     merge-upserts into the same parquet base keyed on event_id. After

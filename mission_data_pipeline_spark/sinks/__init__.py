@@ -23,7 +23,6 @@ from mission_data_pipeline_spark.sinks.merge import last_wins, merge_upsert
 from mission_data_pipeline_spark.sinks.parquet import (
     write_parquet_per_parameter,
     write_parquet_wide,
-    write_sorted_parquet,
 )
 
 __all__ = [
@@ -37,5 +36,4 @@ __all__ = [
     "write_jsonl",
     "write_parquet_per_parameter",
     "write_parquet_wide",
-    "write_sorted_parquet",
 ]

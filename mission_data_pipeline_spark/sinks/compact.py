@@ -50,15 +50,13 @@ def compact_dataset(
     *,
     fmt: str = "parquet",
     target_file_bytes: int = 128 * 1024 * 1024,
-    partition_by: list[str] | None = None,
     min_files: int = 1,
 ) -> int:
     """Rewrite the dataset at ``src`` into ``dst`` with files of roughly
     ``target_file_bytes`` (estimated from the *source's* on-disk size —
     compression carries over closely enough for sizing). Returns the
-    output file count. ``partition_by`` re-partitions the directory
-    layout (files are sized per dataset, not per directory key).
-    ``min_files`` floors the count — raise it to guarantee scan
+    output file count. ``min_files`` floors the count — raise it to
+    guarantee scan
     parallelism for small-but-expensive datasets (text corpora) whose
     per-row work, not byte count, is the bottleneck.
     """
@@ -68,10 +66,7 @@ def compact_dataset(
         raise ValueError("min_files must be >= 1")
     df: DataFrame = spark.read.format(fmt).load(src)
     n = max(min_files, math.ceil(dataset_bytes(src) / target_file_bytes))
-    writer = df.repartition(n).write.mode("overwrite").format(fmt)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(dst)
+    df.repartition(n).write.mode("overwrite").format(fmt).save(dst)
     return sum(
         1
         for _root, _dirs, files in os.walk(dst)

@@ -93,9 +93,9 @@ def _msg(mtype: int, body: bytes, flags: int = 0) -> bytes:
     return struct.pack("<HHB3x", mtype, len(body), flags) + body
 
 
-def _dt_fixed(size: int, signed: bool = True) -> bytes:
-    bitfield = 0x08 if signed else 0x00
-    return struct.pack("<B3BI", 0x10, bitfield, 0, 0, size) + struct.pack(
+def _dt_fixed(size: int) -> bytes:
+    """Signed little-endian fixed-point datatype of ``size`` bytes."""
+    return struct.pack("<B3BI", 0x10, 0x08, 0, 0, size) + struct.pack(
         "<HH", 0, 8 * size
     )
 

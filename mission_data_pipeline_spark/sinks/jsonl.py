@@ -18,23 +18,14 @@ def write_jsonl(
     df: DataFrame,
     out_dir: str,
     *,
-    partition_by: list[str] | None = None,
     n_shards: int | None = None,
-    compression: str | None = None,
-    overwrite: bool = True,
 ) -> None:
-    """Write ``df`` as JSONL shards under ``out_dir``.
+    """Write ``df`` as uncompressed JSONL shards under ``out_dir``,
+    replacing what is there.
 
     ``n_shards`` repartitions before the write — uniform shard sizes
-    for downstream consumers; ``partition_by`` routes rows into
-    subdirectories (e.g. ``lang=en/``); ``compression`` is passed to
-    the writer (``gzip``/``zstd``/``snappy``).
+    for downstream consumers.
     """
     if n_shards is not None:
         df = df.repartition(n_shards)
-    writer = df.write.mode("overwrite" if overwrite else "append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(out_dir)
+    df.write.mode("overwrite").json(out_dir)

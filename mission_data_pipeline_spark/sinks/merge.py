@@ -11,10 +11,10 @@ Spark-first shape: one union + one key-partitioned ``row_number`` —
 the same cost as any key-grouped dedup, no driver-side state. The
 rewrite is staged through a temp directory and atomically swapped via
 rename, so a failed merge never corrupts the base (readers see the old
-or the new index, nothing in between). At 100 TB you would scope the
-rewrite to the partitions the update batch touches (partition the base
-by a key prefix or date and prune the read); the operator accepts a
-``partition_filter`` for exactly that.
+or the new index, nothing in between). The whole base is rewritten;
+at 100 TB a scoped rewrite would touch only the partitions the update
+batch reaches (partition the base by a key prefix or date and prune the
+read).
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -49,55 +49,22 @@ def merge_upsert(
     *,
     key_cols: list[str],
     version_col: str,
-    partition_filter: Column | None = None,
 ) -> None:
     """MERGE INTO for plain parquet: last-wins upsert of ``updates``
     into the dataset at ``base_dir`` (created if absent). Same-version
     re-delivery of an already-applied batch is a no-op on the final
     state — the merge is idempotent, which is what makes at-least-once
     ingestion pipelines safe.
-
-    ``partition_filter`` scopes the rewrite: rows of the base matching
-    it are merged with the updates; the rest are carried over
-    unchanged. (With a partitioned base this is where partition
-    pruning bounds the rewrite to touched partitions.)
     """
     if not key_cols:
         raise ValueError("merge_upsert needs at least one key column")
-    if partition_filter is not None:
-        # An update row OUTSIDE the filtered region would merge against
-        # nothing while its key's base row is carried over untouched —
-        # the sink would then hold both rows, breaking the last-wins
-        # key invariant. Refuse, like Delta's replaceWhere does.
-        pf_out = ~F.coalesce(partition_filter, F.lit(False))
-        stray = updates.filter(pf_out).limit(1).count()
-        if stray:
-            raise ValueError(
-                "merge_upsert: updates contain rows outside "
-                "partition_filter; widen the filter or pre-filter the "
-                "update batch (out-of-scope updates would duplicate "
-                "their keys in the sink)"
-            )
     if os.path.isdir(base_dir):
         base = spark.read.parquet(base_dir)
-        if partition_filter is not None:
-            # coalesce(pf, False): a row where the predicate evaluates
-            # to NULL belongs to exactly one side (untouched) — a bare
-            # ~pf would exclude it from BOTH and silently drop it.
-            pf = F.coalesce(partition_filter, F.lit(False))
-            untouched = base.filter(~pf)
-            base = base.filter(pf)
-            merged = last_wins(
-                base.unionByName(updates),
-                key_cols=key_cols,
-                version_col=version_col,
-            ).unionByName(untouched)
-        else:
-            merged = last_wins(
-                base.unionByName(updates),
-                key_cols=key_cols,
-                version_col=version_col,
-            )
+        merged = last_wins(
+            base.unionByName(updates),
+            key_cols=key_cols,
+            version_col=version_col,
+        )
     else:
         merged = last_wins(
             updates, key_cols=key_cols, version_col=version_col

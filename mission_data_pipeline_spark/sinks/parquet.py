@@ -60,45 +60,6 @@ def write_parquet_wide(
     )
 
 
-def write_sorted_parquet(
-    df: DataFrame,
-    out_path: str,
-    *,
-    sort_cols: list[str],
-    n_files: int | None = None,
-    compression: str = "snappy",
-    overwrite: bool = True,
-) -> None:
-    """Zone-map-friendly export: range-partition by ``sort_cols`` and
-    sort within each file.
-
-    Parquet readers (Spark, DuckDB, every lakehouse engine) prune row
-    groups with column min/max statistics; those statistics only prune
-    when values are CLUSTERED. ``repartitionByRange`` gives each output
-    file a near-disjoint key range and ``sortWithinPartitions`` orders
-    rows inside it, so a range predicate at 100 TB touches a handful of
-    files instead of all of them. This is the write-side complement of
-    predicate pushdown — pushdown decides WHAT to skip, layout decides
-    whether skipping is POSSIBLE.
-
-    ``repartitionByRange`` samples the key distribution, so skewed keys
-    still yield balanced files (contrast hash-partitioning, where a hot
-    key range concentrates).
-    """
-    cols = [df[c] for c in sort_cols]
-    out = (
-        df.repartitionByRange(n_files, *cols)
-        if n_files is not None
-        else df.repartitionByRange(*cols)
-    )
-    (
-        out.sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite" if overwrite else "append")
-        .option("compression", compression)
-        .parquet(out_path)
-    )
-
-
 def write_zordered(
     df: DataFrame,
     out_path: str,
@@ -106,7 +67,6 @@ def write_zordered(
     zorder_cols: list[str],
     n_files: int,
     compression: str = "snappy",
-    overwrite: bool = True,
 ) -> None:
     """OPTIMIZE ZORDER analog: cluster files along MULTIPLE dimensions
     at once via Morton (Z-curve) interleaving, so min/max data skipping
@@ -168,7 +128,7 @@ def write_zordered(
         .drop("__z")
     )
     (
-        out.write.mode("overwrite" if overwrite else "append")
+        out.write.mode("overwrite")
         .option("compression", compression)
         .parquet(out_path)
     )

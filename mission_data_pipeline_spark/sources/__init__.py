@@ -9,7 +9,7 @@ from mission_data_pipeline_spark.sources.jsonl import (
     jsonl_corrupt_stats,
     read_jsonl,
 )
-from mission_data_pipeline_spark.sources.tables import load_table, load_tables
+from mission_data_pipeline_spark.sources.tables import load_table
 from mission_data_pipeline_spark.sources.warc import (
     read_warc,
     read_warc_stream,
@@ -25,7 +25,6 @@ __all__ = [
     "read_jsonl",
     "jsonl_corrupt_stats",
     "load_table",
-    "load_tables",
     "read_warc",
     "read_warc_stream",
     "warc_to_documents",

@@ -13,7 +13,7 @@ modes:
   (0x1ACFFC1D) — exact, O(range).
 - ``frame_sync=False``: validated-header-chain heuristic: accept an
   offset iff a plausible primary header parses there AND the *next*
-  ``resync_chain`` packets chain-parse with plausible headers. This is
+  ``RESYNC_CHAIN`` packets chain-parse with plausible headers. This is
   the standard recovery strategy of CCSDS ground processors; the
   probability of a false lock on random bytes falls geometrically with
   chain length.
@@ -56,9 +56,16 @@ from mission_data_pipeline_spark.models.schemas import PACKET_SCHEMA
 _RANGE_SCHEMA = (
     "path string, range_start long, range_end long, file_size long, "
     "sec_hdr_length int, frame_sync boolean, source_id string, "
-    "ground_receipt_time double, max_packet_len int, resync_chain int, "
-    "apid_filter array<int>"
+    "ground_receipt_time double, apid_filter array<int>"
 )
+
+#: Largest packet the walk accepts: a 6-byte primary header plus the
+#: 16-bit data length field's maximum of 65536 bytes.
+MAX_PACKET_LEN = 65542
+
+#: Same-APID sequence-counter confirmations a header chain needs before
+#: the resync locks on it (:func:`_chain_locks`).
+RESYNC_CHAIN = 2
 
 #: The Arrow form of PACKET_SCHEMA, nullability included. Every packet
 #: batch is built against it: the streaming source runner rejects a
@@ -74,17 +81,11 @@ def _find_sync(buf: bytes, start: int) -> int:
     return -1 if i < 0 else i + len(CCSDS_SYNC_MARKER)
 
 
-def _chain_locks(
-    buf: bytes,
-    pos: int,
-    max_packet_len: int,
-    chain: int,
-    eof_in_buf: bool,
-) -> bool:
+def _chain_locks(buf: bytes, pos: int, eof_in_buf: bool) -> bool:
     """Does a validated header chain lock at ``pos``?
 
     Acceptance demands *positive* evidence, not mere absence of a
-    violation: the walk must observe at least ``chain`` same-APID
+    violation: the walk must observe at least ``RESYNC_CHAIN`` same-APID
     sequence-counter increments of exactly 1 (mod 16384) — CCSDS
     133.0-B-2 §4.1.3.4 mandates per-APID continuous counting, so a true
     boundary accumulates confirmations as fast as APIDs repeat, while a
@@ -106,16 +107,14 @@ def _chain_locks(
     that never repeats in-range locks onto the *next* boundary instead
     (that one packet is skipped) — strictly better than phantoms.
 
-    Two accepted terminations that cannot reach ``chain`` confirmations:
-    - the chain lands **exactly on true EOF** with either zero
-      confirmations (isolated tail run) or a confirmed first header —
-      the precise landing is itself strong evidence (a random length
-      jumps *past* EOF with probability ~1, lands on it with
-      probability ~1/packet_len), and it is the only way to recover a
-      short trailing run;
-    - ``chain == 0`` — explicit weak mode (first plausible header wins),
-      the escape hatch for streams whose APIDs never repeat within a
-      range (then run with a single range or frame_sync instead).
+    One accepted termination cannot reach ``RESYNC_CHAIN``
+    confirmations: the chain lands **exactly on true EOF** with either
+    zero confirmations (isolated tail run) or a confirmed first header —
+    the precise landing is itself strong evidence (a random length jumps
+    *past* EOF with probability ~1, lands on it with probability
+    ~1/packet_len), and it is the only way to recover a short trailing
+    run. A stream whose APIDs never repeat within a range does not lock:
+    scan it with a single range or frame_sync.
     """
     n = len(buf)
     p = pos
@@ -128,10 +127,8 @@ def _chain_locks(
         if buf[p] >> 5:  # version != 0
             return False
         plen = ((buf[p + 4] << 8) | buf[p + 5]) + PRIMARY_HEADER_LEN + 1
-        if plen > max_packet_len:
+        if plen > MAX_PACKET_LEN:
             return False
-        if chain == 0:
-            return True
         apid = ((buf[p] << 8) | buf[p + 1]) & 0x7FF
         seq = ((buf[p + 2] << 8) | buf[p + 3]) & 0x3FFF
         if first_apid < 0:
@@ -143,7 +140,7 @@ def _chain_locks(
             confirm += 1
             if apid == first_apid:
                 first_confirmed = True
-            if first_confirmed and confirm >= chain:
+            if first_confirmed and confirm >= RESYNC_CHAIN:
                 return True
         last_seq[apid] = seq
         if p + plen > n:
@@ -158,19 +155,12 @@ def _chain_locks(
     return at_eof and complete >= 1 and (confirm == 0 or first_confirmed)
 
 
-def _resync_heuristic(
-    buf: bytes,
-    start: int,
-    limit: int,
-    max_packet_len: int,
-    chain: int,
-    eof_in_buf: bool = False,
-) -> int:
+def _resync_heuristic(buf: bytes, start: int, limit: int, eof_in_buf: bool) -> int:
     """First offset in [start, limit) where a validated header chain locks
     (see ``_chain_locks`` for the acceptance rule)."""
     pos = start
     while pos < limit:
-        if _chain_locks(buf, pos, max_packet_len, chain, eof_in_buf):
+        if _chain_locks(buf, pos, eof_in_buf):
             return pos
         pos += 1
     return -1
@@ -186,8 +176,6 @@ def _walk_offsets(buf: bytes, row: dict, *, eof_in_buf: bool) -> list[int]:
     range_start = int(row["range_start"])
     range_end = int(row["range_end"])
     frame_sync = bool(row["frame_sync"])
-    max_packet_len = int(row["max_packet_len"])
-    chain = int(row["resync_chain"])
     local_end = range_end - range_start  # packets must *start* before this
     n = len(buf)
     offs: list[int] = []
@@ -205,9 +193,7 @@ def _walk_offsets(buf: bytes, row: dict, *, eof_in_buf: bool) -> list[int]:
             # looser rule would emit phantom rows from bytes the previous
             # range already consumed. A range that locks nowhere is
             # logged so silent-loss streams are at least diagnosable.
-            pos = _resync_heuristic(
-                buf, 0, local_end, max_packet_len, chain, eof_in_buf
-            )
+            pos = _resync_heuristic(buf, 0, local_end, eof_in_buf)
             if pos < 0 and local_end > 0:
                 logger.warning(
                     "binary scan: no validated header chain locked anywhere "
@@ -223,15 +209,13 @@ def _walk_offsets(buf: bytes, row: dict, *, eof_in_buf: bool) -> list[int]:
 
     while pos < local_end and pos + PRIMARY_HEADER_LEN <= n:
         plen = ((buf[pos + 4] << 8) | buf[pos + 5]) + PRIMARY_HEADER_LEN + 1
-        if (buf[pos] >> 5) or plen > max_packet_len:
+        if (buf[pos] >> 5) or plen > MAX_PACKET_LEN:
             # Malformed header: skip forward to next lock point
             # (reference skips a single byte and rescans for sync).
             if frame_sync:
                 nxt = _find_sync(buf, pos + 1)
             else:
-                nxt = _resync_heuristic(
-                    buf, pos + 1, local_end, max_packet_len, chain, eof_in_buf
-                )
+                nxt = _resync_heuristic(buf, pos + 1, local_end, eof_in_buf)
             if nxt < 0:
                 return offs
             pos = nxt
@@ -257,10 +241,8 @@ def _read_range_buffer(row: dict) -> tuple[bytes, bool]:
     range_start = int(row["range_start"])
     range_end = int(row["range_end"])
     file_size = int(row["file_size"])
-    max_packet_len = int(row["max_packet_len"])
-    chain = int(row["resync_chain"])
 
-    tail = max_packet_len * (chain + 2) + len(CCSDS_SYNC_MARKER)
+    tail = MAX_PACKET_LEN * (RESYNC_CHAIN + 2) + len(CCSDS_SYNC_MARKER)
     read_end = min(file_size, range_end + tail)
     with open(path, "rb") as f:
         f.seek(range_start)
@@ -396,8 +378,6 @@ def plan_ranges(
     source_id: str | None = None,
     ground_receipt_time: float | None = None,
     split_size: int = 128 * 1024 * 1024,
-    max_packet_len: int = 65542,
-    resync_chain: int = 2,
 ) -> list[dict]:
     """Resolve paths/globs and carve them into scan-range descriptors
     (one per future task) — shared by :func:`read_packets` and the
@@ -427,8 +407,6 @@ def plan_ranges(
                     "frame_sync": frame_sync,
                     "source_id": source_id,
                     "ground_receipt_time": ground_receipt_time,
-                    "max_packet_len": max_packet_len,
-                    "resync_chain": resync_chain,
                     "apid_filter": apid_filter,
                 }
             )
@@ -446,8 +424,6 @@ def read_packets(
     source_id: str | None = None,
     ground_receipt_time: float | None = None,
     split_size: int = 128 * 1024 * 1024,
-    max_packet_len: int = 65542,
-    resync_chain: int = 2,
 ) -> DataFrame:
     """Scan CCSDS binary file(s) into a ``packets_df`` (PACKET_SCHEMA).
 
@@ -474,8 +450,6 @@ def read_packets(
         source_id=source_id,
         ground_receipt_time=ground_receipt_time,
         split_size=split_size,
-        max_packet_len=max_packet_len,
-        resync_chain=resync_chain,
     )
     if not ranges:  # all files empty
         return spark.createDataFrame([], schema=PACKET_SCHEMA)

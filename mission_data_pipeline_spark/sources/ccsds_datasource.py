@@ -72,8 +72,6 @@ def _scan_options(options: dict) -> dict:
         "frame_sync": str(options.get("frame_sync", "false")).lower() in _TRUE,
         "source_id": options.get("source_id"),
         "ground_receipt_time": float(grt) if grt is not None else None,
-        "max_packet_len": int(options.get("max_packet_len", 65542)),
-        "resync_chain": int(options.get("resync_chain", 2)),
     }
 
 

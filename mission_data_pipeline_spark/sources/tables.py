@@ -57,10 +57,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def parquet_row_count(path: str) -> int:
     """Exact row count from parquet FOOTER metadata — no Spark job.
 

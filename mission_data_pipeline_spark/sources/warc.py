@@ -16,9 +16,10 @@ record-level parse over Spark's ``binaryFile`` source:
 The parser handles the WARC/1.0 and WARC/1.1 framing actually found in
 Common Crawl: ``WARC/1.x\\r\\n``, colon-separated headers terminated by
 a blank line, exactly ``Content-Length`` payload bytes, then the
-``\\r\\n\\r\\n`` record separator. Gzip-per-record archives (.warc.gz)
-decompress transparently when ``gzip_per_file=True`` (whole-file gzip;
-per-record members concatenate and the parser walks the joined stream).
+``\\r\\n\\r\\n`` record separator. A gzip archive (.warc.gz, recognized
+by the gzip magic bytes, since a WARC file starts ``WARC/``) decompresses
+transparently (whole-file gzip; per-record members concatenate and the
+parser walks the joined stream).
 
 No counterpart in the reference (its sources are CCSDS binary + CSV:
 ``src/mdp/plugins/extractors/binary.py``, ``csv.py``); this extends the
@@ -136,12 +137,12 @@ def parse_warc_buffer(buf: bytes) -> tuple[list[dict], int]:
     return records, errors
 
 
+_GZIP_MAGIC = b"\x1f\x8b"
+
+
 def read_warc(
     spark: SparkSession,
     path: str,
-    *,
-    gzip_per_file: bool = False,
-    path_glob: str | None = None,
 ) -> DataFrame:
     """One row per WARC record across every archive under ``path``.
 
@@ -151,20 +152,14 @@ def read_warc(
     Arrow-batched ``mapInPandas``, and payloads stay opaque bytes for
     the downstream multimodal/text operators.
     """
-    reader = spark.read.format("binaryFile")
-    if path_glob:
-        reader = reader.option("pathGlobFilter", path_glob)
-    return _fan_out_records(
-        reader.load(path).select("path", "content"), gzip_per_file
-    )
+    files = spark.read.format("binaryFile").load(path)
+    return _fan_out_records(files.select("path", "content"))
 
 
 def read_warc_stream(
     spark: SparkSession,
     path: str,
     *,
-    gzip_per_file: bool = False,
-    path_glob: str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming twin of :func:`read_warc`: archives arriving under
@@ -180,22 +175,18 @@ def read_warc_stream(
         "path string, modificationTime timestamp, length long, "
         "content binary"
     )
-    if path_glob:
-        reader = reader.option("pathGlobFilter", path_glob)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return _fan_out_records(
-        reader.load(path).select("path", "content"), gzip_per_file
-    )
+    return _fan_out_records(reader.load(path).select("path", "content"))
 
 
-def _fan_out_records(files: DataFrame, gzip_per_file: bool) -> DataFrame:
+def _fan_out_records(files: DataFrame) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for path_, content in zip(pdf["path"], pdf["content"]):
                 buf = bytes(content)
-                if gzip_per_file:
+                if buf[:2] == _GZIP_MAGIC:
                     buf = gzip.GzipFile(fileobj=io.BytesIO(buf)).read()
                 recs, errors = parse_warc_buffer(buf)
                 for i, r in enumerate(recs):

@@ -184,9 +184,6 @@ class CalibrationEntryModel(BaseModel):
 
 class CalibrationConfig(StageConfig):
     calibrations: list[CalibrationEntryModel]
-    # accepted for reference parity but intentionally inert — the
-    # reference declares it and never reads it (``calibration.py:72``)
-    mark_uncalibrated_invalid: bool = False
 
 
 @registry.transformer("calibration")
@@ -258,10 +255,6 @@ class ParquetLoader(Loader):
 
     config_model = ParquetLoaderConfig
 
-    def __init__(self, config=None) -> None:
-        super().__init__(config)
-        self._batches_seen = 0
-
     def load(self, batch: TelemetryBatch) -> int:
         from mission_data_pipeline_spark.sinks import (
             write_parquet_per_parameter,
@@ -271,9 +264,7 @@ class ParquetLoader(Loader):
         cfg: ParquetLoaderConfig = self.config  # type: ignore[assignment]
         if batch.params is None:
             raise ValueError("parquet loader requires a params DataFrame")
-        # Across batches of one run, only the first write may truncate.
-        overwrite = cfg.overwrite and self._batches_seen == 0
-        self._batches_seen += 1
+        overwrite = cfg.overwrite and batch.metadata.get("first_write", True)
         params, obs = observe_rows(batch.params, "parquet-loader")
         if cfg.layout == "wide":
             write_parquet_wide(
@@ -306,10 +297,6 @@ class CsvLoader(Loader):
 
     config_model = CsvLoaderConfig
 
-    def __init__(self, config=None) -> None:
-        super().__init__(config)
-        self._batches_seen = 0
-
     def load(self, batch: TelemetryBatch) -> int:
         from mission_data_pipeline_spark.sinks import (
             write_csv_per_parameter,
@@ -319,8 +306,7 @@ class CsvLoader(Loader):
         cfg: CsvLoaderConfig = self.config  # type: ignore[assignment]
         if batch.params is None:
             raise ValueError("csv loader requires a params DataFrame")
-        overwrite = cfg.overwrite and self._batches_seen == 0
-        self._batches_seen += 1
+        overwrite = cfg.overwrite and batch.metadata.get("first_write", True)
         params, obs = observe_rows(batch.params, "csv-loader")
         writer = write_csv_wide if cfg.layout == "wide" else write_csv_per_parameter
         writer(
@@ -343,16 +329,12 @@ class Hdf5Loader(Loader):
 
     config_model = Hdf5LoaderConfig
 
-    def __init__(self, config=None) -> None:
-        super().__init__(config)
-        self._batches_seen = 0
-
     def load(self, batch: TelemetryBatch) -> int:
         from mission_data_pipeline_spark.sinks import write_hdf5
 
         cfg: Hdf5LoaderConfig = self.config  # type: ignore[assignment]
         if batch.params is None:
             raise ValueError("hdf5 loader requires a params DataFrame")
-        mode = "w" if (cfg.overwrite and self._batches_seen == 0) else "a"
-        self._batches_seen += 1
+        first = batch.metadata.get("first_write", True)
+        mode = "w" if (cfg.overwrite and first) else "a"
         return write_hdf5(batch.params, cfg.output_path, mode=mode)

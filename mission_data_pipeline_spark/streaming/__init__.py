@@ -1,11 +1,14 @@
 """Structured Streaming — SURVEY §2.6 W1–W4.
 
 The reference's "stream" is a Python generator of micro-batches
-(``src/mdp/core/base.py:94-96``); the Spark restatement is Structured
-Streaming: file sources discovered incrementally, the same Transformer
-chain applied per micro-batch via ``foreachBatch``, watermarks for the
-late/duplicate-data semantics the reference only has implicitly
-(wide-pivot last-wins, ``dataset.py:88-91``).
+(``src/mdp/core/base.py:94-96``). Its batch restatement is
+:class:`~mission_data_pipeline_spark.core.pipeline.Pipeline` with
+``files_per_batch``/``max_batches``; a live packet stream is
+``spark.readStream.format("ccsds")`` (``sources/ccsds_datasource.py``).
+This package holds what needs Structured Streaming's state: the
+near-dedup ingest gate (``foreachBatch`` + a stored band index) and the
+stateful operators (``applyInPandasWithState``), plus the batch
+sequence-gap check they pair with.
 """
 
 from mission_data_pipeline_spark.streaming.ingest import (
@@ -14,30 +17,12 @@ from mission_data_pipeline_spark.streaming.ingest import (
     last_committed_epoch,
     near_dedup_ingest_stream,
 )
-from mission_data_pipeline_spark.streaming.pipeline import StreamingPipeline
-from mission_data_pipeline_spark.streaming.sources import stream_csv_telemetry
-from mission_data_pipeline_spark.streaming.stateful import (
-    seq_gaps,
-    seq_gaps_batch,
-    seq_gaps_stream,
-)
-from mission_data_pipeline_spark.streaming.windows import (
-    dedup_late_samples,
-    dedup_stream_content,
-    windowed_stats,
-)
+from mission_data_pipeline_spark.streaming.stateful import seq_gaps_batch
 
 __all__ = [
-    "StreamingPipeline",
     "compact_near_dedup_index",
-    "dedup_late_samples",
-    "dedup_stream_content",
     "gc_near_dedup_index",
     "last_committed_epoch",
     "near_dedup_ingest_stream",
-    "seq_gaps",
     "seq_gaps_batch",
-    "seq_gaps_stream",
-    "stream_csv_telemetry",
-    "windowed_stats",
 ]

@@ -10,10 +10,10 @@ after a restart coalesces pending files, and the index only knows docs
 from EARLIER epochs), then gated against the corpus's MATERIALIZED
 band index: only the batch featurizes
 (``incremental_near_dedup(corpus_bands=..., corpus_grams=...)``),
-survivors land in the output table, and — with ``update_index=True`` —
-the survivors' own band signatures and gram sets are appended as index
-DELTAS so a near-duplicate of a doc accepted three batches ago is
-caught too, without ever re-featurizing the corpus.
+survivors land in the output table, and the survivors' own band
+signatures and gram sets are appended as index DELTAS so a
+near-duplicate of a doc accepted three batches ago is caught too,
+without ever re-featurizing the corpus.
 
 Exactly-once across crashes WITHOUT a transactional table format:
 ``foreachBatch`` may replay an epoch whose sink writes half-landed
@@ -126,7 +126,7 @@ def gc_near_dedup_index(index_path: str) -> dict:
 
 
 def compact_near_dedup_index(
-    spark, index_path: str, *, checkpoint: str | None = None, gc: bool = True
+    spark, index_path: str, *, checkpoint: str | None = None
 ) -> dict:
     """Fold committed streaming delta epochs into the base index — the
     nightly OPTIMIZE for the ingest gate. Transactional against
@@ -143,10 +143,9 @@ def compact_near_dedup_index(
        pointing at V — rerun overwrites);
     4. atomically publish the new manifest (version V+1, unfolded
        epochs carried over) — the commit point;
-    5. garbage-collect the old version and folded deltas LAST
-       (``gc=False`` skips this, modelling a crash between publish and
-       GC: the index stays fully readable, :func:`gc_near_dedup_index`
-       cleans up later).
+    5. garbage-collect the old version and folded deltas LAST (after a
+       crash between publish and GC the index stays fully readable, and
+       :func:`gc_near_dedup_index` cleans up later).
 
     Returns ``{"epochs_folded": n, "epochs_skipped_uncommitted": [...],
     "version": v}``.
@@ -154,8 +153,7 @@ def compact_near_dedup_index(
     m = read_index_manifest(index_path)
     epochs = sorted(m.get("delta_epochs", []))
     if not epochs:
-        if gc:
-            gc_near_dedup_index(index_path)
+        gc_near_dedup_index(index_path)
         return {
             "epochs_folded": 0,
             "epochs_skipped_uncommitted": [],
@@ -173,8 +171,7 @@ def compact_near_dedup_index(
     fold = [e for e in epochs if e <= committed]
     skipped = [e for e in epochs if e > committed]
     if not fold:
-        if gc:
-            gc_near_dedup_index(index_path)
+        gc_near_dedup_index(index_path)
         return {
             "epochs_folded": 0,
             "epochs_skipped_uncommitted": skipped,
@@ -219,8 +216,7 @@ def compact_near_dedup_index(
             m.get("format_version", 1), v, bands_new, grams_new, skipped
         ),
     )
-    if gc:
-        gc_near_dedup_index(index_path)
+    gc_near_dedup_index(index_path)
     return {
         "epochs_folded": len(fold),
         "epochs_skipped_uncommitted": skipped,
@@ -240,10 +236,7 @@ def near_dedup_ingest_stream(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    update_index: bool = True,
-    available_now: bool = True,
     max_bucket: "int | None" = None,
-    hash_grams: bool = True,
 ) -> StreamingQuery:
     """Start the ingest gate on a streaming DataFrame of documents.
 
@@ -259,14 +252,17 @@ def near_dedup_ingest_stream(
     docstrings for the (bounded, measured) recall trade-off near the
     threshold.
 
-    ``index_path`` must hold a :func:`write_near_dedup_index` layout;
-    the probe parameters — including ``hash_grams``, the featurization
-    mode (ADVICE r12) — are validated against its ``params.json`` at
-    stream START (mismatched shingle width, or string grams probed
-    against an 8-byte hashed-gram index, would silently wave every
-    near-dup through). Every per-epoch featurization (gate probe AND
-    the landed-survivor delta) runs in the index's recorded mode. Survivor rows (original schema) land under
-    ``{out_path}/epoch=N/``; read the result with
+    ``index_path`` must hold a :func:`write_near_dedup_index` layout
+    built with 8-byte hashed grams (``hash_grams=True``, the default);
+    the probe parameters and that featurization mode (ADVICE r12) are
+    validated against its ``params.json`` at stream START (mismatched
+    shingle width, or hashed grams probed against a string-gram index,
+    would silently wave every near-dup through). Every per-epoch
+    featurization (gate probe AND the landed-survivor delta) uses
+    hashed grams. The stream runs with an availableNow trigger: it
+    drains what has arrived and stops. Survivor rows (original schema)
+    land under ``{out_path}/epoch=N/``, and each epoch's survivors are
+    appended to the index as a delta; read the result with
     ``spark.read.parquet(out_path)`` (``epoch`` becomes a partition
     column). Returns the started :class:`StreamingQuery`.
     """
@@ -286,7 +282,7 @@ def near_dedup_ingest_stream(
     # grams would silently match nothing (ADVICE r12)
     read_near_dedup_index(
         spark, index_path, n=n, num_hashes=num_hashes, bands=bands,
-        hash_grams=hash_grams,
+        hash_grams=True,
     )
 
     def gate(batch: DataFrame, epoch_id: int) -> None:
@@ -298,8 +294,7 @@ def near_dedup_ingest_stream(
         # roughly double the dominant per-batch cost for identical
         # results (ADVICE r10).
         g = shingles(
-            batch, n=n, text_col=text_col, id_col=id_col,
-            hash_grams=hash_grams,
+            batch, n=n, text_col=text_col, id_col=id_col, hash_grams=True
         )
         bnd = band_signatures(
             minhash_signatures(g, num_hashes=num_hashes), bands=bands
@@ -349,7 +344,6 @@ def near_dedup_ingest_stream(
                 batch_grams=g_kept,
                 batch_bands=bnd_kept,
                 max_bucket=max_bucket,
-                hash_grams=hash_grams,
             )
             _land(survivors, epoch_id)
         finally:
@@ -359,14 +353,11 @@ def near_dedup_ingest_stream(
     def _land(survivors: DataFrame, epoch_id: int) -> None:
         epoch_dir = os.path.join(out_path, f"epoch={epoch_id}")
         survivors.write.mode("overwrite").parquet(epoch_dir)
-        if not update_index:
-            return
         # derive the delta from the WRITTEN files, so the index update
         # is consistent with what the sink actually committed
         landed = spark.read.parquet(epoch_dir)
         g = shingles(
-            landed, n=n, text_col=text_col, id_col=id_col,
-            hash_grams=hash_grams,
+            landed, n=n, text_col=text_col, id_col=id_col, hash_grams=True
         )
         sig = minhash_signatures(g, num_hashes=num_hashes)
         ddir = os.path.join(index_path, "delta", f"epoch={epoch_id}")
@@ -384,9 +375,9 @@ def near_dedup_ingest_stream(
             m["delta_epochs"] = sorted(m["delta_epochs"] + [epoch_id])
             write_index_manifest(index_path, m)
 
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint
+    return (
+        stream.writeStream.foreachBatch(gate)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

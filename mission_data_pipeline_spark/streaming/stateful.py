@@ -1,20 +1,16 @@
-"""Custom stateful streaming operator: per-APID sequence-gap detection.
+"""Per-APID sequence-gap detection and a custom stateful streaming
+operator.
 
 CCSDS packets carry a per-APID 14-bit sequence counter that increments
 by 1 mod 16384 (CCSDS 133.0-B-2 §4.1.3.4; reference models the wrap at
 ``src/mdp/models/packet.py:54`` but never checks continuity — SURVEY
 §2.6 W3 lists gap/wrap detection as the natural extension). A gap means
-lost packets; ground processors must flag it as soon as it is seen.
+lost packets; :func:`seq_gaps_batch` finds them in an at-rest capture
+with one ``LAG(seq_count) OVER (PARTITION BY apid ORDER BY ...)``
+window: one shuffle, whole-stage codegen.
 
-Two execution shapes, one semantic:
-
-- **batch** — ``LAG(seq_count) OVER (PARTITION BY apid ORDER BY ...)``:
-  one shuffle, whole-stage codegen.
-- **streaming** — ``applyInPandasWithState``: the state store keeps one
-  tiny record per APID (last seq_count seen), carried across
-  micro-batches, so a gap that *straddles* two micro-batches is still
-  caught — exactly what the stateless window cannot do. State size is
-  O(#APIDs) (≤2048), independent of throughput: safe at any scale.
+:func:`cumulative_group_stats` is the ``applyInPandasWithState`` shape:
+a running aggregate whose state survives micro-batch boundaries.
 """
 
 from __future__ import annotations
@@ -29,18 +25,6 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 SEQ_MOD = 16384
-
-GAP_SCHEMA = T.StructType(
-    [
-        T.StructField("apid", T.IntegerType()),
-        T.StructField("prev_seq", T.IntegerType()),
-        T.StructField("seq_count", T.IntegerType()),
-        T.StructField("missing", T.IntegerType()),  # packets lost in between
-        T.StructField("file_offset", T.LongType()),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType([T.StructField("last_seq", T.IntegerType())])
 
 
 def seq_gaps_batch(packets: DataFrame) -> DataFrame:
@@ -59,60 +43,6 @@ def seq_gaps_batch(packets: DataFrame) -> DataFrame:
         .filter(F.col("prev_seq").isNotNull() & (F.col("missing") > 0))
         .select("apid", "prev_seq", "seq_count", "missing", "file_offset")
     )
-
-
-def _gap_fn(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    (apid,) = key
-    last = state.get[0] if state.exists else None
-    out: list[dict] = []
-    for pdf in pdfs:
-        pdf = pdf.sort_values(["file_path", "file_offset"])
-        for seq, off in zip(pdf["seq_count"].tolist(), pdf["file_offset"].tolist()):
-            if last is not None:
-                missing = (seq - last - 1) % SEQ_MOD
-                if missing:
-                    out.append(
-                        {
-                            "apid": apid,
-                            "prev_seq": last,
-                            "seq_count": seq,
-                            "missing": missing,
-                            "file_offset": off,
-                        }
-                    )
-            last = seq
-    if last is not None:
-        state.update((int(last),))
-    yield pd.DataFrame(out, columns=[f.name for f in GAP_SCHEMA.fields])
-
-
-def seq_gaps_stream(packets: DataFrame) -> DataFrame:
-    """Gap records from a streaming packets_df (stateful form).
-
-    ``applyInPandasWithState`` keeps the last seq_count per APID in the
-    state store across micro-batches. Output mode is append: each gap is
-    emitted exactly once, in the micro-batch where its closing packet
-    arrives. No timeout — APID state is a single int and telemetry APIDs
-    recur for the mission's lifetime.
-    """
-    return (
-        packets.select("apid", "seq_count", "file_path", "file_offset")
-        .groupBy("apid")
-        .applyInPandasWithState(
-            _gap_fn,
-            outputStructType=GAP_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-    )
-
-
-def seq_gaps(packets: DataFrame) -> DataFrame:
-    """Dispatch on execution mode (same semantics either way)."""
-    return seq_gaps_stream(packets) if packets.isStreaming else seq_gaps_batch(packets)
 
 
 # -- cumulative per-key running stats ----------------------------------

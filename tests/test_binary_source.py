@@ -114,7 +114,7 @@ def test_resync_no_false_lock_on_periodic_payload(tmp_root):
         re_ = min(len(data), rs + split)
         read_end = min(len(data), re_ + tail)
         buf = data[rs:read_end]
-        lock = _resync_heuristic(buf, 0, re_ - rs, 65542, 2, read_end >= len(data))
+        lock = _resync_heuristic(buf, 0, re_ - rs, read_end >= len(data))
         assert lock == (22 - rs % 22) % 22, f"false lock at range_start={rs}"
 
 

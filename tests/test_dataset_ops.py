@@ -2,12 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from mission_data_pipeline_spark.operators import (
-    parameter_stats,
-    tidy_parameter,
-    to_wide,
-    union_datasets,
-)
+from mission_data_pipeline_spark.operators import to_wide
 from mission_data_pipeline_spark.operators.dataset import dedup_samples
 
 ROWS = [
@@ -31,12 +26,6 @@ def _params(spark):
     )
 
 
-def test_tidy_sorted(spark):
-    out = tidy_parameter(_params(spark), "temperature").collect()
-    assert [r["time_tai"] for r in out] == [0.0, 10.0, 20.0]
-    assert "name" not in out[0].asDict()
-
-
 def test_wide_pivot_shape_and_nulls(spark):
     wide = to_wide(_params(spark)).collect()
     assert [r["time_tai"] for r in wide] == [0.0, 10.0, 20.0]
@@ -53,34 +42,6 @@ def test_wide_pivot_duplicate_time_last_wins(spark):
     df = spark.createDataFrame(rows, SCHEMA)
     wide = to_wide(df).collect()
     assert len(wide) == 1 and wide[0]["x"] == 2.0
-
-
-def test_wide_pivot_explicit_names_skips_discovery(spark):
-    """Passing the parameter dictionary avoids the distinct-names scan
-    and gives identical results (plus stable columns for absent names)."""
-    df = _params(spark)
-    implicit = {r["time_tai"]: r.asDict() for r in to_wide(df).collect()}
-    explicit = to_wide(df, names=["temperature", "pressure", "unseen"]).collect()
-    for r in explicit:
-        d = r.asDict()
-        assert d["unseen"] is None  # declared but never sampled
-        for k in ("temperature", "pressure"):
-            assert d[k] == implicit[d["time_tai"]][k]
-
-
-def test_union_immutable(spark):
-    a, b = _params(spark), _params(spark)
-    u = union_datasets(a, b)
-    assert u.count() == 10
-    assert a.count() == 5  # no mutation (reference merge bug fixed)
-
-
-def test_parameter_stats(spark):
-    stats = {r["name"]: r for r in parameter_stats(_params(spark)).collect()}
-    assert stats["temperature"]["n_samples"] == 3
-    assert stats["temperature"]["time_min"] == 0.0
-    assert stats["temperature"]["time_max"] == 20.0
-    assert stats["pressure"]["n_samples"] == 2
 
 
 def test_dedup_samples_keeps_highest_seq(spark):

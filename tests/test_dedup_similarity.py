@@ -102,9 +102,9 @@ def test_bucket_cap_star_topology_on_giant_bucket(spark):
 
 def test_hashed_grams_match_string_grams(spark, docs):
     """hash_grams=True must produce the same shingle SETS up to the
-    hash bijection (no collisions at fixture scale) and the same
-    end-to-end survivors: Jaccard is a set statistic, so hashing gram
-    identities changes nothing but the shuffle width."""
+    hash bijection (no collisions at fixture scale): Jaccard is a set
+    statistic, so hashing gram identities changes nothing but the
+    shuffle width."""
     g_str = shingles(docs, n=2)
     g_hash = shingles(docs, n=2, hash_grams=True)
     # per-doc set sizes identical (injective at this scale)
@@ -113,19 +113,6 @@ def test_hashed_grams_match_string_grams(spark, docs):
     b = {r["doc_id"]: r["n"] for r in
          g_hash.groupBy("doc_id").count().withColumnRenamed("count", "n").collect()}
     assert a == b
-    kept_str = sorted(
-        r["doc_id"]
-        for r in near_dedup_minhash(
-            docs, n=2, num_hashes=16, bands=8, threshold=0.5
-        ).collect()
-    )
-    kept_hash = sorted(
-        r["doc_id"]
-        for r in near_dedup_minhash(
-            docs, n=2, num_hashes=16, bands=8, threshold=0.5, hash_grams=True
-        ).collect()
-    )
-    assert kept_str == kept_hash
 
 
 def test_bucket_cap_rejects_degenerate_cap(docs):
@@ -759,11 +746,11 @@ def test_pq_rerank_tie_guard_auto_recovers_clone_cluster(spark):
     """VERDICT r13 item 1: the shortlist knob rule as an in-plan guard.
     A clone cluster LARGER than the shortlist collapses to identical PQ
     codes, so every member is ADC-tied at the cutoff; the r13 sfx10
-    probe read recall 0.505 from exactly this. With tie_extend=True
-    (default) the RANK()-cut shortlist keeps the boundary tie group
-    whole and recall auto-recovers to 1.0 at shortlist=8 against a
-    30-clone cluster; with a max_shortlist smaller than the tie group
-    the plan fails LOUDLY instead of silently truncating."""
+    probe read recall 0.505 from exactly this. The RANK()-cut
+    shortlist keeps the boundary tie group whole and recall
+    auto-recovers to 1.0 at shortlist=8 against a 30-clone cluster;
+    when the tie group exceeds the 8 * shortlist bound the plan fails
+    LOUDLY instead of silently truncating."""
     import numpy as np
     import pytest as _pytest
     from pyspark.errors.exceptions.captured import SparkRuntimeException
@@ -802,20 +789,10 @@ def test_pq_rerank_tie_guard_auto_recovers_clone_cluster(spark):
     )
     r = ann_recall(rer, tied, k=5, tie_aware=True).first()
     assert r["recall"] == 1.0  # auto-recovered, no knob turn
-    # legacy row-number cut at the same shortlist: the guard is what
-    # makes the difference (cut lands inside the 30-way tie group)
-    legacy = pq_topk_rerank(
-        enc, emb, q, books, k=5, shortlist=8, vec_col="v",
-        tie_extend=False,
-    )
-    rl = ann_recall(legacy, tied, k=5, tie_aware=True).first()
-    assert rl["recall"] <= 1.0  # may luck into admissible picks
-    # a bound smaller than the tie group fails LOUDLY, never truncates
+    # a bound (8 * 2 = 16) smaller than the 31-way tie group fails
+    # LOUDLY, never truncates
     with _pytest.raises(SparkRuntimeException, match="near-duplicate cluster"):
-        pq_topk_rerank(
-            enc, emb, q, books, k=5, shortlist=8, vec_col="v",
-            max_shortlist=10,
-        ).collect()
+        pq_topk_rerank(enc, emb, q, books, k=2, shortlist=2, vec_col="v").collect()
 
 
 def test_connected_components_reliable_checkpoint_dir(
@@ -1100,12 +1077,10 @@ def test_incremental_near_dedup_gates_batch_against_corpus(spark):
     assert kept == [11, 12, 13]
 
 
-def test_hard_negative_mining_semi_hard_band(spark):
+def test_hard_negative_mining_hardest_first(spark):
     """Hand-built 2-D fixture: anchor (label 0) at [1,0]; positive at
-    cos=0.8; negatives at cos≈0.9 (too hard — inverts the triplet),
-    0.7 (semi-hard), 0.3 (too easy for margin 0.5). With margin=0.5
-    only the 0.7 negative is in the band; without margin the top-k is
-    plain hardest-first including the 0.9 one."""
+    cos=0.8; negatives at cos≈0.9, 0.7 and 0.3. The top-k is plain
+    hardest-first, each row carrying the hardest positive's cosine."""
     import math
 
     from mission_data_pipeline_spark.operators.similarity import (
@@ -1129,22 +1104,16 @@ def test_hard_negative_mining_semi_hard_band(spark):
     plain = hard_negative_mining(df, anchors, k=3).collect()
     assert [r["neighbor_id"] for r in plain] == [2, 3, 4]
     assert all(abs(r["pos_cosine"] - 0.8) < 1e-9 for r in plain)
-    semi = hard_negative_mining(df, anchors, k=3, margin=0.5).collect()
-    assert [r["neighbor_id"] for r in semi] == [3]
-    assert semi[0]["rank"] == 1  # rank assigned AFTER the band filter
-    # anchor with no same-label neighbor: margin passes unfiltered
+    assert [r["rank"] for r in plain] == [1, 2, 3]
+    # anchor with no same-label neighbor: pos_cosine NULL
     lonely = df.filter("vec_id != 1")
-    out = hard_negative_mining(
-        lonely, lonely.filter("vec_id = 0"), k=3, margin=0.5
-    ).collect()
+    out = hard_negative_mining(lonely, lonely.filter("vec_id = 0"), k=3).collect()
     assert [r["neighbor_id"] for r in out] == [2, 3, 4]
     assert all(r["pos_cosine"] is None for r in out)
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
         hard_negative_mining(df, anchors, k=0)
-    with _pytest.raises(ValueError):
-        hard_negative_mining(df, anchors, k=1, margin=-0.1)
 
 
 def test_matryoshka_recall_prefix_agreement_and_loss(spark):
@@ -1255,10 +1224,12 @@ def test_exact_substring_dedup_bpe_token_vs_word_granularity(spark):
     'abcd' and 'ab cd' tokenize to the SAME run [ab, cd], so two docs
     that share no word-level k-gram share a token-level one — the
     token-granularity pass excises the later doc, the word pass
-    touches nothing."""
+    touches nothing. ``exact_substring_dedup_bpe`` is this composition
+    over the default merge table."""
+    from mission_data_pipeline_spark.operators.bpe import bpe_token_sequences
     from mission_data_pipeline_spark.operators.dedup import (
         exact_substring_dedup,
-        exact_substring_dedup_bpe,
+        exact_substring_dedup_tokens,
     )
 
     merges = [("a", "b"), ("c", "d")]
@@ -1271,9 +1242,12 @@ def test_exact_substring_dedup_bpe_token_vs_word_granularity(spark):
     # BPE token granularity: both docs -> [ab, cd, e, f, g, h]; the
     # 6-token run duplicates, doc 1 (first occurrence) keeps it, doc 2
     # empties out
+    seqs = bpe_token_sequences(df, merges)
     bpe = {
         r["doc_id"]: r
-        for r in exact_substring_dedup_bpe(df, merges, k=6).collect()
+        for r in exact_substring_dedup_tokens(
+            seqs, k=6, tokens_col="toks", id_col="doc_id"
+        ).collect()
     }
     assert bpe[1]["n_tokens"] == 6 and bpe[1]["n_removed"] == 0
     assert bpe[1]["kept_text"] == "ab cd e f g h"
@@ -1752,11 +1726,10 @@ def test_giant_component_power_law_graph(spark):
 
     n_giant, n_small = 60_000, 10_000
     pairs, docs = build_graph(spark, n_giant, n_small)
-    stats: dict = {}
-    comp = connected_components(pairs, stats=stats)
     # uniform-random-earlier attachment gives tree depth O(log n);
-    # pointer jumping then converges in O(log depth) + verification
-    assert stats["rounds"] <= 9, stats
+    # pointer jumping then converges in O(log depth) + verification:
+    # at most 9 rounds, or max_iter=8 raises
+    comp = connected_components(pairs, max_iter=8)
     giant = comp.filter(F.col("node") < n_giant)
     assert giant.select("component_id").distinct().collect() == [
         __import__("pyspark.sql", fromlist=["Row"]).Row(component_id=0)

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from mission_data_pipeline_spark.models.ccsds import (
     FHP_NO_FIRST_HEADER,
-    FrameQuality,
     TMFramePrimaryHeader,
     build_frame,
     build_packet,
@@ -113,32 +112,6 @@ def test_lost_frame_drops_only_spanning_packet(spark):
             expected.discard(i)
     assert got == sorted(expected)
     assert len(got) < 12  # the cut actually removed something
-
-
-def test_bad_quality_frame_breaks_continuity(spark):
-    stream = b"".join(_packets(12))
-    frames = frame_packet_stream(stream, frame_data_len=64)
-    rows = [
-        (i, f, FrameQuality.BAD if i == 2 else FrameQuality.GOOD)
-        for i, f in enumerate(frames)
-    ]
-    df = spark.createDataFrame(rows, "recv_order long, frame binary, quality int")
-    got = sorted(
-        r["seq_count"]
-        for r in frames_to_packets(
-            df, order_col="recv_order", quality_col="quality"
-        ).collect()
-    )
-    all_rows = sorted(
-        r["seq_count"]
-        for r in frames_to_packets(df, order_col="recv_order").collect()
-    )
-    assert all_rows == list(range(12))  # without quality gating: everything
-    assert set(got) < set(all_rows)  # with gating: frame-2 packets gone
-    lo, hi = 64 * 2, 64 * 3
-    for i in got:
-        span = (i * 46, (i + 1) * 46)
-        assert not (span[0] < hi and span[1] > lo)
 
 
 def test_multi_vc_groups_stay_separate(spark):

@@ -70,6 +70,52 @@ def test_pipeline_harvests_each_batch_group(spark, tmp_path):
     assert snap["stages"]["ParquetLoader"]["load_s"] > 0
 
 
+def _decom_to_parquet(name, path, out):
+    return Pipeline(
+        PipelineConfig(name=name),
+        extractor=BinaryPacketExtractor({"path": path, "sec_hdr_length": 4}),
+        transformers=[
+            DecomTransformer(
+                {"parameters": [
+                    {"name": "obc_temp", "apid": 0x100, "byte_offset": 0,
+                     "bit_length": 16}
+                ]}
+            )
+        ],
+        loader=ParquetLoader({"output_dir": out}),
+    )
+
+
+def test_rerun_overwrites_and_counts_each_run_alone(spark, tmp_path):
+    """Each run of one Pipeline replaces the loader's target (the first
+    write of a RUN truncates), reads its own job once, the loader's
+    records_in is the params side it writes, and the metrics snapshot
+    describes that run alone."""
+    path = tmp_path / "hk.bin"
+    path.write_bytes(generate_housekeeping_stream(1000))
+    out = str(tmp_path / "out")
+    pipe = _decom_to_parquet("rerun", str(path), out)
+    for _ in range(3):
+        r = pipe.run(spark)
+        assert r.ok, r.errors
+        assert spark.read.parquet(out).count() == 1000
+        (load,) = [s for s in r.stage_results if s.stage_name == "ParquetLoader"]
+        assert (load.records_in, load.records_out) == (1000, 1000)
+        snap = pipe.metrics.snapshot()
+        assert snap["executed"]["jobs"] == 1
+        assert (snap["batches_processed"], snap["total_packets"]) == (1, 1000)
+
+
+def test_fresh_pipelines_sharing_a_name_harvest_their_own_jobs(spark, tmp_path):
+    path = tmp_path / "hk.bin"
+    path.write_bytes(generate_housekeeping_stream(100))
+    for i in range(3):
+        pipe = _decom_to_parquet("same", str(path), str(tmp_path / f"out{i}"))
+        assert pipe.run(spark).ok
+        assert pipe.metrics.snapshot()["executed"]["jobs"] == 1
+    assert not spark.sparkContext.getJobTags()
+
+
 def test_repartition_group_reads_what_it_wrote(spark):
     group = "harvest:repartition"
     _run_in_group(

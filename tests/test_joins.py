@@ -1,7 +1,7 @@
 """as-of join and banded range join (operators/joins.py).
 
 Golden values hand-computed; semantics modeled on pandas ``merge_asof``
-(backward/forward, tolerance) and interval self-joins.
+(backward) and interval self-joins.
 """
 
 import pytest
@@ -36,29 +36,6 @@ def test_asof_backward(spark, quotes_trades):
     ]
 
 
-def test_asof_forward(spark, quotes_trades):
-    quotes, trades = quotes_trades
-    out = asof_join(trades, quotes, on="t", by=["sym"], direction="forward")
-    got = {(r["sym"], r["t"]): r["right_t"] for r in out.collect()}
-    assert got == {
-        ("A", 5): 10,
-        ("A", 10): 10,
-        ("A", 25): 40,
-        ("A", 50): None,
-        ("B", 14): 15,
-        ("C", 7): None,
-    }
-
-
-def test_asof_tolerance(spark, quotes_trades):
-    quotes, trades = quotes_trades
-    out = asof_join(trades, quotes, on="t", by=["sym"], tolerance=5)
-    got = {(r["sym"], r["t"]): r["right_t"] for r in out.collect()}
-    assert got[("A", 25)] == 20  # within 5
-    assert got[("A", 50)] is None  # 10 away — nulled
-    assert got[("A", 10)] == 10
-
-
 def test_asof_preserves_left_rowcount(spark, quotes_trades):
     quotes, trades = quotes_trades
     assert asof_join(trades, quotes, on="t", by=["sym"]).count() == trades.count()
@@ -91,12 +68,6 @@ def test_range_join_rejects_empty_interval(spark):
     ev = spark.createDataFrame([("x", 1, 0)], "k string, id long, t long")
     with pytest.raises(ValueError):
         range_join(ev, ev, on="t", by=["k"], lower=5, upper=5)
-
-
-def test_asof_rejects_bad_direction(spark, quotes_trades):
-    quotes, trades = quotes_trades
-    with pytest.raises(ValueError):
-        asof_join(trades, quotes, on="t", by=["sym"], direction="nearest")
 
 
 def _final_plan(df) -> str:
@@ -151,23 +122,17 @@ def test_asof_keyless_matches_keyed_and_avoids_single_partition(spark):
     right = spark.createDataFrame(
         [(float(t), f"r{i}") for i, t in enumerate(rt)], "t double, rv string"
     )
-    for direction in ("backward", "forward"):
-        for tol in (None, 500.0):
-            keyless = asof_join(
-                left, right, on="t", by=[], direction=direction, tolerance=tol
-            )
-            keyed = asof_join(
-                left.withColumn("k", F.lit(1)),
-                right.withColumn("k", F.lit(1)),
-                on="t",
-                by=["k"],
-                direction=direction,
-                tolerance=tol,
-            ).drop("k")
-            a = sorted(map(tuple, keyless.collect()))
-            b = sorted(map(tuple, keyed.collect()))
-            assert a == b, (direction, tol)
-            assert len(a) == 400  # left row count preserved
+    keyless = asof_join(left, right, on="t", by=[])
+    keyed = asof_join(
+        left.withColumn("k", F.lit(1)),
+        right.withColumn("k", F.lit(1)),
+        on="t",
+        by=["k"],
+    ).drop("k")
+    a = sorted(map(tuple, keyless.collect()))
+    b = sorted(map(tuple, keyed.collect()))
+    assert a == b
+    assert len(a) == 400  # left row count preserved
     plan = _final_plan(asof_join(left, right, on="t", by=[]))
     assert "Exchange SinglePartition" not in plan
     assert "rangepartitioning" in plan

@@ -188,8 +188,6 @@ def test_real_decoder_perceptual_codecs_still_stub(media):
         extract_features(media.filter("item_id = 3"), decoder="real").collect()
     with pytest.raises(ValueError):
         extract_features(media, decoder="nope")
-    with pytest.raises(ValueError):
-        sample_frames(media, decoder="nope")
 
 
 def test_sample_frames_fanout(media):
@@ -586,7 +584,7 @@ def test_video_frame_stats_real_decode(spark):
     assert sentinel["px_sum"] is None and sentinel["width"] is None
 
 
-def test_sample_frames_real_and_video_features(spark):
+def test_video_features_real_decode(spark):
     import numpy as np
 
     from mission_data_pipeline_spark.functions.avi import encode_avi_mjpeg
@@ -607,18 +605,6 @@ def test_sample_frames_real_and_video_features(spark):
         "meta struct<media_type:string,format:string,width:int,height:int,"
         "n_channels:int,sample_rate:int,duration_s:double>",
     )
-    out = sample_frames(media, every_n=3, max_frames=8, decoder="real").collect()
-    rows0 = sorted(
-        (r for r in out if r["item_id"] == 0), key=lambda r: r["frame_idx"]
-    )
-    assert [r["frame_idx"] for r in rows0] == [0, 3]
-    for r in rows0:
-        px = decode_jpeg_pixels(frames[r["frame_idx"]])
-        assert (r["width"], r["height"]) == (6, 4)
-        assert bytes(r["pixels"]) == px.tobytes()
-    bad = [r for r in out if r["item_id"] == 1]
-    assert len(bad) == 1 and bad[0]["pixels"] is None
-
     feats = {
         r["item_id"]: r
         for r in extract_features(

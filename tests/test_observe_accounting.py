@@ -143,7 +143,7 @@ def test_observe_dead_branch_default_backfills_count(spark):
     assert r.ok
     assert r.total_packets == 10  # packets(7) + params(3), exact
     load = next(s for s in r.stage_results if s.stage_name == "NoopLoader")
-    assert load.records_in == 10
+    assert load.records_in == 3  # the params side it writes
 
 
 def test_observe_dead_branch_unknown_reads_minus_one(spark):
@@ -166,7 +166,7 @@ def test_observe_dead_branch_unknown_reads_minus_one(spark):
     assert r.ok
     assert r.total_packets == 10
     load = next(s for s in r.stage_results if s.stage_name == "NoopLoader")
-    assert load.records_in == 10
+    assert load.records_in == 3  # the params side it writes
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("mdps:dead:batch1")
     assert len(jobs) > 1  # the write plus the backfill count
 
@@ -234,10 +234,11 @@ def test_observe_pass_through_sides_one_job_no_backfill(spark, monkeypatch):
     r = p.run(spark)
     assert r.ok
     decom, halv, load = r.stage_results
-    # counts sum both sides: packets 10, params 12 → 6
+    # transformer counts sum both sides: packets 10, params 12 → 6; the
+    # loader's are the params side it writes
     assert (decom.records_in, decom.records_out) == (10, 22)
     assert (halv.records_in, halv.records_out) == (22, 16)
-    assert (load.records_in, load.records_out) == (16, 16)
+    assert (load.records_in, load.records_out) == (6, 6)
     assert r.total_packets == 10
     assert backfills == []
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("mdps:passthru:batch1")
@@ -290,7 +291,8 @@ def _shipped_pipeline(name, paths, loader):
 
 def test_shipped_stages_one_job_per_batch(spark, tmp_path):
     """Extract → decom → calibrate → parquet / CSV: one Spark job per
-    batch, and the loader's records_out is the rows it wrote."""
+    batch, and the loader's records_in and records_out are the params
+    rows it read and wrote (the packets side is not its input)."""
     from mission_data_pipeline_spark.stages import CsvLoader, ParquetLoader
 
     paths = _write_packet_files(tmp_path, 2)
@@ -305,7 +307,7 @@ def test_shipped_stages_one_job_per_batch(spark, tmp_path):
         loads = [s for s in r.stage_results if s.stage_name == loader_cls.__name__]
         # 30 packets of APID 0x100 per file, two parameters each
         assert [s.records_out for s in loads] == [60, 60]
-        assert [s.records_in for s in loads] == [100, 100]  # + 40 packets
+        assert [s.records_in for s in loads] == [60, 60]
         assert sum(s.records_out for s in loads) == read(out).count()
         tracker = spark.sparkContext.statusTracker()
         for b in (1, 2):

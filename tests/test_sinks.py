@@ -281,39 +281,6 @@ def test_hdf5_export_logic_without_h5py(spark, params_df, tmp_path):
     assert g["eng_value"].shape == (3,)  # numeric datasets untouched
 
 
-def test_write_sorted_parquet_clusters_ranges(spark, tmp_path):
-    """Zone-map layout guard: files written by write_sorted_parquet must
-    carry near-disjoint min/max ranges on the sort key (that's what lets
-    parquet readers prune row groups), unlike an unsorted write."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from mission_data_pipeline_spark.sinks.parquet import write_sorted_parquet
-
-    df = spark.range(0, 20000).selectExpr(
-        "cast(id * 2654435761 % 20000 as long) as k",  # scrambled order
-        "id as v",
-    )
-    out = str(tmp_path / "sorted")
-    write_sorted_parquet(df, out, sort_cols=["k"], n_files=4)
-
-    ranges = []
-    for f in glob.glob(out + "/part-*.parquet"):
-        md = pq.read_metadata(f)
-        col_idx = md.schema.names.index("k")
-        lo = min(md.row_group(i).column(col_idx).statistics.min for i in range(md.num_row_groups))
-        hi = max(md.row_group(i).column(col_idx).statistics.max for i in range(md.num_row_groups))
-        ranges.append((lo, hi))
-    assert len(ranges) == 4
-    ranges.sort()
-    # near-disjoint: each file's min must be above the previous file's max
-    for (lo_a, hi_a), (lo_b, hi_b) in zip(ranges, ranges[1:]):
-        assert hi_a <= lo_b
-    # and the read-back content must be intact
-    assert spark.read.parquet(out).count() == 20000
-
-
 def test_merge_upsert_last_wins_and_idempotent(spark, tmp_path):
     from mission_data_pipeline_spark.sinks.merge import merge_upsert
 
@@ -335,29 +302,6 @@ def test_merge_upsert_last_wins_and_idempotent(spark, tmp_path):
     assert {tuple(r) for r in spark.read.parquet(base_dir).collect()} == expect
 
 
-def test_merge_upsert_partition_filter_scopes_rewrite(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from mission_data_pipeline_spark.sinks.merge import merge_upsert
-
-    base_dir = str(tmp_path / "scoped")
-    v1 = spark.createDataFrame(
-        [(1, "x", 1, "a"), (2, "x", 1, "b"), (3, "y", 1, "c")],
-        "k long, part string, v long, val string",
-    )
-    merge_upsert(spark, base_dir, v1, key_cols=["k"], version_col="v")
-    upd = spark.createDataFrame(
-        [(2, "x", 2, "b2")], "k long, part string, v long, val string"
-    )
-    merge_upsert(
-        spark, base_dir, upd,
-        key_cols=["k"], version_col="v",
-        partition_filter=F.col("part") == "x",
-    )
-    got = {tuple(r) for r in spark.read.parquet(base_dir).collect()}
-    assert got == {(1, "x", 1, "a"), (2, "x", 2, "b2"), (3, "y", 1, "c")}
-
-
 def test_merge_upsert_validates_keys(spark, tmp_path):
     import pytest as _pytest
 
@@ -366,62 +310,6 @@ def test_merge_upsert_validates_keys(spark, tmp_path):
     df = spark.createDataFrame([(1, 1)], "k long, v long")
     with _pytest.raises(ValueError):
         merge_upsert(spark, str(tmp_path / "x"), df, key_cols=[], version_col="v")
-
-
-def test_merge_upsert_null_partition_predicate_rows_survive(spark, tmp_path):
-    """A base row where the partition predicate evaluates to NULL must
-    be carried over untouched — not silently dropped."""
-    from pyspark.sql import functions as F
-
-    from mission_data_pipeline_spark.sinks.merge import merge_upsert
-
-    base_dir = str(tmp_path / "nullpart")
-    v1 = spark.createDataFrame(
-        [(1, "x", 1, "a"), (2, None, 1, "n")],
-        "k long, part string, v long, val string",
-    )
-    merge_upsert(spark, base_dir, v1, key_cols=["k"], version_col="v")
-    upd = spark.createDataFrame(
-        [(1, "x", 2, "a2")], "k long, part string, v long, val string"
-    )
-    merge_upsert(
-        spark, base_dir, upd,
-        key_cols=["k"], version_col="v",
-        partition_filter=F.col("part") == "x",
-    )
-    got = {tuple(r) for r in spark.read.parquet(base_dir).collect()}
-    assert got == {(1, "x", 2, "a2"), (2, None, 1, "n")}
-
-
-def test_merge_upsert_rejects_out_of_scope_updates(spark, tmp_path):
-    """An update row OUTSIDE partition_filter would merge against
-    nothing while its key's base row is carried over untouched — both
-    rows would survive, silently breaking the last-wins key invariant.
-    The sink must refuse (Delta's replaceWhere does the same)."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from mission_data_pipeline_spark.sinks.merge import merge_upsert
-
-    base_dir = str(tmp_path / "oos")
-    v1 = spark.createDataFrame(
-        [(1, "x", 1, "a"), (3, "y", 1, "c")],
-        "k long, part string, v long, val string",
-    )
-    merge_upsert(spark, base_dir, v1, key_cols=["k"], version_col="v")
-    # update targets key 3 which lives in part='y', outside the filter
-    upd = spark.createDataFrame(
-        [(3, "y", 2, "c2")], "k long, part string, v long, val string"
-    )
-    with _pytest.raises(ValueError, match="outside partition_filter"):
-        merge_upsert(
-            spark, base_dir, upd,
-            key_cols=["k"], version_col="v",
-            partition_filter=F.col("part") == "x",
-        )
-    # base untouched by the refused merge
-    got = {tuple(r) for r in spark.read.parquet(base_dir).collect()}
-    assert got == {(1, "x", 1, "a"), (3, "y", 1, "c")}
 
 
 def test_compact_dataset_splittable_output(spark, tmp_path):
@@ -458,13 +346,6 @@ def test_compact_dataset_splittable_output(spark, tmp_path):
     a = spark.read.parquet(src).agg({"id": "sum"}).first()[0]
     assert back.agg({"id": "sum"}).first()[0] == a
 
-    # partitioned layout variant
-    dst2 = str(tmp_path / "dst2")
-    spark.range(100).selectExpr("id", "id % 3 AS k").write.parquet(
-        str(tmp_path / "src2")
-    )
-    compact_dataset(spark, str(tmp_path / "src2"), dst2, partition_by=["k"])
-    assert spark.read.parquet(dst2).count() == 100
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
@@ -504,10 +385,7 @@ def test_write_zordered_clusters_both_dimensions(spark, tmp_path):
     that makes multi-dimension data skipping work. Content intact."""
     import pytest as _pt
 
-    from mission_data_pipeline_spark.sinks.parquet import (
-        write_sorted_parquet,
-        write_zordered,
-    )
+    from mission_data_pipeline_spark.sinks.parquet import write_zordered
 
     df = spark.range(0, 40000).selectExpr(
         "cast(id * 2654435761 % 200 as long) as a",   # 200 devices
@@ -515,7 +393,7 @@ def test_write_zordered_clusters_both_dimensions(spark, tmp_path):
         "cast(id % 7 as long) as payload",
     )
     lin, zo = str(tmp_path / "lin"), str(tmp_path / "zo")
-    write_sorted_parquet(df, lin, sort_cols=["a"], n_files=16)
+    df.repartitionByRange(16, "a").sortWithinPartitions("a").write.parquet(lin)
     write_zordered(df, zo, zorder_cols=["a", "t"], n_files=16)
 
     assert _file_span_coverage(lin, "a") < 0.2      # leading dim clusters

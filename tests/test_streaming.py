@@ -1,59 +1,11 @@
-"""Structured Streaming tests (W1–W4): file sources, foreachBatch
-pipeline, watermarked windows. All use availableNow (drain-and-stop)."""
-
-import math
+"""Structured Streaming tests (W1–W4): the ``ccsds`` stream source,
+foreachBatch sinks, stateful operators, the near-dedup ingest gate. All
+use availableNow (drain-and-stop)."""
 
 import pytest
 
-from mission_data_pipeline_spark.core.base import StageConfig, Loader
 from mission_data_pipeline_spark.models.ccsds import generate_housekeeping_stream
-from mission_data_pipeline_spark.stages import DecomTransformer
-from mission_data_pipeline_spark.streaming import (
-    StreamingPipeline,
-    dedup_late_samples,
-    stream_csv_telemetry,
-    windowed_stats,
-)
-
-
-class MemLoader(Loader):
-    def __init__(self):
-        super().__init__(StageConfig())
-        self.rows = []
-
-    def load(self, batch) -> int:
-        got = (batch.params if batch.params is not None else batch.packets).collect()
-        self.rows.extend(got)
-        return len(got)
-
-
-def _write_csvs(root, n_files=3, rows_per=10):
-    root.mkdir()
-    for f in range(n_files):
-        lines = ["time,apid,seq_count,temp"]
-        for i in range(rows_per):
-            t = f * rows_per + i
-            lines.append(f"{float(t)},768,{t},{20.0 + math.sin(t):.4f}")
-        (root / f"batch{f}.csv").write_text("\n".join(lines) + "\n")
-
-
-def test_stream_csv_telemetry(spark, tmp_path):
-    src = tmp_path / "csvs"
-    _write_csvs(src)
-    stream = stream_csv_telemetry(
-        spark,
-        str(src),
-        "time double, apid int, seq_count int, temp double",
-        max_files_per_trigger=1,
-    )
-    assert stream.isStreaming
-    loader = MemLoader()
-    q = StreamingPipeline(loader=loader).start(
-        stream, checkpoint_dir=str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination(120)
-    assert len(loader.rows) == 30
-    assert all(r["name"] == "temp" for r in loader.rows)
+from mission_data_pipeline_spark.operators import ParameterDefinition, decommutate
 
 
 def test_stream_packets_with_decom(spark, tmp_path):
@@ -69,102 +21,20 @@ def test_stream_packets_with_decom(spark, tmp_path):
         .option("sec_hdr_length", 4)
         .load(str(src))
     )
-    loader = MemLoader()
-    decom = DecomTransformer(
-        {
-            "parameters": [
-                {"name": "obc_temp_dn", "apid": 256, "byte_offset": 0,
-                 "bit_length": 16}
-            ]
-        }
-    )
-    pipe = StreamingPipeline(transformers=[decom], loader=loader)
-    q = pipe.start(
-        stream, checkpoint_dir=str(tmp_path / "ckpt2"), available_now=True
-    )
-    q.awaitTermination(180)
-    assert len(loader.rows) == 100
-    assert {r["name"] for r in loader.rows} == {"obc_temp_dn"}
-    snap = pipe.metrics.snapshot()
-    assert snap["total_packets"] == 100
-    # per-stage counts as in a batch Pipeline: decom passes the 100
-    # packets through and adds 100 params; the loader writes the params
-    decom_m, load_m = snap["stages"]["DecomTransformer"], snap["stages"]["MemLoader"]
-    assert (decom_m["records_in"], decom_m["records_out"]) == (100, 200)
-    assert (load_m["records_in"], load_m["records_out"]) == (200, 100)
-
-
-def test_stream_stage_error_fails_epoch(spark, tmp_path):
-    """A transformer that raises in an epoch fires ``stage.error`` once,
-    skips the loader and fails the query with the stage's error, so the
-    epoch never commits."""
-    from pyspark.errors import StreamingQueryException
-
-    from mission_data_pipeline_spark.core.base import Transformer
-
-    class Exploding(Transformer):
-        def transform(self, batch):
-            raise ValueError("calibration table missing")
-
-    src = tmp_path / "csvs"
-    _write_csvs(src, n_files=1)
-    stream = stream_csv_telemetry(
-        spark, str(src), "time double, apid int, seq_count int, temp double"
-    )
-    loader = MemLoader()
-    pipe = StreamingPipeline(transformers=[Exploding()], loader=loader)
-    errors = []
-    pipe.hooks.on("stage.error")(lambda **kw: errors.append(kw["stage"]))
-    q = pipe.start(
-        stream, checkpoint_dir=str(tmp_path / "ckpt"), available_now=True
-    )
-    with pytest.raises(StreamingQueryException, match="calibration table missing"):
-        q.awaitTermination(120)
-    assert errors == ["Exploding"]
-    assert loader.rows == []
-
-
-def test_windowed_stats_streaming(spark, tmp_path):
-    src = tmp_path / "csvs_w"
-    _write_csvs(src, n_files=1, rows_per=20)
-    stream = stream_csv_telemetry(
-        spark, str(src), "time double, apid int, seq_count int, temp double"
-    )
-    agg = windowed_stats(stream, window="10 seconds", watermark="5 seconds")
-    collected = []
+    defs = [ParameterDefinition("obc_temp_dn", 256, 0, 16)]
+    rows = []
     q = (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(lambda df, eid: collected.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
+        stream.writeStream.foreachBatch(
+            lambda df, eid: rows.extend(decommutate(df, defs).collect())
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt2"))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    # 20 samples at 1 Hz → two complete 10 s windows (the final one may be
-    # held back by the watermark in append mode)
-    assert len(collected) >= 1
-    assert all(r["n"] == 10 for r in collected)
-
-
-def test_dedup_late_samples_batch_parity(spark):
-    df = spark.createDataFrame(
-        [("p", 1.0, 10.0), ("p", 1.0, 11.0), ("p", 2.0, 12.0)],
-        "name string, time_tai double, eng_value double",
-    )
-    out = dedup_late_samples(df)
-    assert out.count() == 2
-
-
-def test_windowed_stats_batch_oracle(spark):
-    rows = [("p", float(t), float(t)) for t in range(25)]
-    df = spark.createDataFrame(rows, "name string, time_tai double, eng_value double")
-    out = windowed_stats(df, window="10 seconds")
-    got = {
-        (r["window_start"].second + r["window_start"].minute * 60): r["n"]
-        for r in out.collect()
-    }
-    assert sum(got.values()) == 25
-    assert sorted(got.values(), reverse=True)[:2] == [10, 10]
+    q.awaitTermination(180)
+    assert len(rows) == 100
+    assert {r["name"] for r in rows} == {"obc_temp_dn"}
+    assert sorted(r["seq_count"] for r in rows) == sorted(list(range(50)) * 2)
 
 
 def _gapped_stream(seqs, apid=0x100):
@@ -181,93 +51,17 @@ def _gapped_stream(seqs, apid=0x100):
 
 def test_seq_gaps_batch(spark, tmp_path):
     from mission_data_pipeline_spark.sources import read_packets
-    from mission_data_pipeline_spark.streaming import seq_gaps
+    from mission_data_pipeline_spark.streaming import seq_gaps_batch
 
     p = tmp_path / "gap.bin"
     # 0,1,2, [3,4 lost], 5,6, [wrap gap: 16382 -> 1 loses 16383,0]
     p.write_bytes(_gapped_stream([0, 1, 2, 5, 6, 16382, 1]))
     pk = read_packets(spark, str(p))
-    rows = {r["seq_count"]: r for r in seq_gaps(pk).collect()}
+    rows = {r["seq_count"]: r for r in seq_gaps_batch(pk).collect()}
     assert rows[5]["prev_seq"] == 2 and rows[5]["missing"] == 2
     assert rows[16382]["prev_seq"] == 6 and rows[16382]["missing"] == 16375
     assert rows[1]["prev_seq"] == 16382 and rows[1]["missing"] == 2  # wrap
     assert len(rows) == 3
-
-
-def test_seq_gaps_stream_state_across_batches(spark, tmp_path):
-    """A gap straddling two micro-batches is caught only because the
-    state store carries last_seq across them. Two availableNow runs share
-    one checkpoint, and b.bin arrives between them, so each file is its
-    own micro-batch."""
-    from mission_data_pipeline_spark.sources import register_ccsds_source
-    from mission_data_pipeline_spark.streaming import seq_gaps
-
-    d = tmp_path / "in"
-    d.mkdir()
-    got = []
-    register_ccsds_source(spark)
-
-    def run_once():
-        pk = spark.readStream.format("ccsds").load(str(d))
-        q = (
-            seq_gaps(pk)
-            .writeStream.outputMode("append")
-            .foreachBatch(lambda df, eid: got.extend(df.collect()))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # file 1 ends at seq 4; file 2 starts at seq 9 → gap of 4 across batches
-    (d / "a.bin").write_bytes(_gapped_stream([0, 1, 2, 3, 4]))
-    run_once()
-    (d / "b.bin").write_bytes(_gapped_stream([9, 10, 11]))
-    run_once()
-    assert len(got) == 1
-    r = got[0]
-    assert (r["prev_seq"], r["seq_count"], r["missing"]) == (4, 9, 4)
-
-
-def test_dedup_stream_content_bounded_state(spark, tmp_path):
-    """Streaming exact content dedup via dropDuplicatesWithinWatermark:
-    duplicates across micro-batches (within the watermark) collapse to
-    one row, and the batch path gives first-wins hash-dedup parity."""
-    import json
-
-    from mission_data_pipeline_spark.streaming import dedup_stream_content
-
-    root = tmp_path / "docs"
-    root.mkdir()
-    texts = ["alpha doc", "beta doc", "alpha doc", "gamma doc", "beta doc"]
-    for i, t in enumerate(texts):
-        (root / f"f{i}.json").write_text(
-            json.dumps({"doc_id": i, "ts": f"2026-01-01 00:00:{i:02d}", "text": t})
-            + "\n"
-        )
-    schema = "doc_id long, ts string, text string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)  # force multiple micro-batches
-        .json(str(root))
-        .withColumn("event_time", __import__("pyspark.sql.functions", fromlist=["col"]).col("ts").cast("timestamp"))
-    )
-    out = dedup_stream_content(stream, watermark="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_content_sink")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT text FROM dedup_content_sink").collect()
-    assert sorted(r["text"] for r in rows) == ["alpha doc", "beta doc", "gamma doc"]
-    # batch parity: same call on a static frame
-    static = spark.read.schema(schema).json(str(root)).withColumn(
-        "event_time", __import__("pyspark.sql.functions", fromlist=["col"]).col("ts").cast("timestamp")
-    )
-    got = sorted(r["text"] for r in dedup_stream_content(static).collect())
-    assert got == ["alpha doc", "beta doc", "gamma doc"]
 
 
 def test_cumulative_group_stats_state_across_batches(spark, tmp_path):
@@ -750,11 +544,12 @@ def test_compact_near_dedup_index_folds_deltas(spark, tmp_path):
 
 
 def test_index_manifest_transactional_compaction_and_crash_gc(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """The manifest-pointer commit protocol (VERDICT r09 item 1):
     interleave probe / compact / probe with a simulated crash between
-    the manifest publish and the garbage collection (``gc=False``) and
+    the manifest publish and the garbage collection (GC patched out
+    for the compaction call) and
     prove a reader NEVER sees a torn base/delta set — a probe that
     resolved the manifest before compaction keeps its fully-intact old
     version (nothing it references is deleted until GC), a probe after
@@ -830,7 +625,11 @@ def test_index_manifest_transactional_compaction_and_crash_gc(
     # reader resolves the OLD manifest (base v0 + delta epoch 0) ...
     pre_bands, pre_grams = read_near_dedup_index(spark, idx)
     # ... then compaction publishes v1 but "crashes" before GC
-    res = compact_near_dedup_index(spark, idx, checkpoint=ckpt, gc=False)
+    from mission_data_pipeline_spark.streaming import ingest
+
+    with monkeypatch.context() as m:
+        m.setattr(ingest, "gc_near_dedup_index", lambda path: None)
+        res = compact_near_dedup_index(spark, idx, checkpoint=ckpt)
     assert res == {
         "epochs_folded": 1,
         "epochs_skipped_uncommitted": [],
@@ -997,8 +796,8 @@ def test_near_dedup_ingest_stream_start_validation_and_hashed_mode(
     """ADVICE r12: the ingest gate validates max_bucket AND the
     featurization mode at stream START — a bad value must raise from
     near_dedup_ingest_stream() itself, never inside the first epoch's
-    foreachBatch (which fails the stream mid-run). A matched
-    hash_grams=True gate then runs end-to-end against a hashed index."""
+    foreachBatch (which fails the stream mid-run). The (hashed-gram)
+    gate then runs end-to-end against a hashed index."""
     import json
     import os
     import pytest as _pytest
@@ -1043,19 +842,13 @@ def test_near_dedup_ingest_stream_start_validation_and_hashed_mode(
     with _pytest.raises(ValueError, match="max_bucket"):
         near_dedup_ingest_stream(
             stream, idx, out, checkpoint=str(tmp_path / "c1"),
-            n=2, num_hashes=8, bands=4, max_bucket=1, hash_grams=True,
+            n=2, num_hashes=8, bands=4, max_bucket=1,
         )
-    # string-gram probe against a hashed index: fail at start
-    with _pytest.raises(ValueError, match="hash_grams"):
-        near_dedup_ingest_stream(
-            stream, idx, out, checkpoint=str(tmp_path / "c2"),
-            n=2, num_hashes=8, bands=4, hash_grams=False,
-        )
-    # matched mode: near-copy of corpus doc gated, fresh doc survives,
-    # and the landed delta is hashed-gram (bigint) like the base index
+    # near-copy of corpus doc gated, fresh doc survives, and the landed
+    # delta is hashed-gram (bigint) like the base index
     q = near_dedup_ingest_stream(
         stream, idx, out, checkpoint=str(tmp_path / "c3"),
-        n=2, num_hashes=8, bands=4, threshold=0.6, hash_grams=True,
+        n=2, num_hashes=8, bands=4, threshold=0.6,
     )
     q.awaitTermination(120)
     assert sorted(
@@ -1073,9 +866,10 @@ def test_near_dedup_ingest_stream_pre_r13_index_migration(
 ):
     """Migration path: an index written BEFORE the mode was recorded
     (params.json without the hash_grams key — always a string-gram
-    build) must reject the post-r13 hashed default at stream START
-    with the mode named, and gate correctly once the caller passes
-    hash_grams=False."""
+    build) is rejected at stream START with the mode named: the gate
+    featurizes hashed grams only, and a string-gram index would match
+    nothing (rebuild it, or gate it in batch with
+    ``incremental_near_dedup(hash_grams=False)``)."""
     import json
     import os
     import pytest as _pytest
@@ -1121,18 +915,10 @@ def test_near_dedup_ingest_stream_pre_r13_index_migration(
     )
     stream = spark.readStream.schema("doc_id long, text string").json(str(src))
     out = str(tmp_path / "out")
-    # post-r13 hashed default vs the legacy string index: loud at start
+    # hashed gate vs the legacy string index: loud at start
     with _pytest.raises(ValueError, match="hash_grams"):
         near_dedup_ingest_stream(
             stream, idx, out, checkpoint=str(tmp_path / "c1"),
             n=2, num_hashes=8, bands=4,
         )
-    # explicit string mode: the gate runs and near-dups are caught
-    q = near_dedup_ingest_stream(
-        stream, idx, out, checkpoint=str(tmp_path / "c2"),
-        n=2, num_hashes=8, bands=4, threshold=0.6, hash_grams=False,
-    )
-    q.awaitTermination(120)
-    assert sorted(
-        r["doc_id"] for r in spark.read.parquet(out).collect()
-    ) == [11]
+    assert not os.path.exists(out)

@@ -259,9 +259,6 @@ def test_filter_badwords_whole_word_case_insensitive(spark):
     )
     kept = filter_badwords(docs, ["badword"])
     assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3]
-    flagged = filter_badwords(docs, ["badword"], keep_flag=True)
-    got = {r["doc_id"]: r["has_badword"] for r in flagged.collect()}
-    assert got == {1: False, 2: True, 3: False, 4: True}
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
@@ -553,26 +550,6 @@ def test_word_ngrams_regex_edge_semantics(spark):
     }
     assert got3[1] == ["the quick brown", "quick brown fox"]
     assert got3[2] == ["one two"]  # whole-run fallback
-
-
-def test_heavy_tail_join_equivalence(spark):
-    """heavy_k>0 (broadcast hot keys + shuffled tail) must be
-    row-identical to the flat vocabulary join, for any heavy_k."""
-    from mission_data_pipeline_spark.operators.text import (
-        bigram_logprob,
-        unigram_logprob,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, ("alpha beta " * (i % 5 + 1)) + f"rare{i} tail{i%7}")
-         for i in range(40)],
-        "doc_id long, text string",
-    )
-    for op in (unigram_logprob, bigram_logprob):
-        flat = sorted(map(tuple, op(docs, heavy_k=0).collect()))
-        for k in (1, 3, 10_000):
-            hyb = sorted(map(tuple, op(docs, heavy_k=k).collect()))
-            assert hyb == flat, (op.__name__, k)
 
 
 def test_heldout_backoff_branches(spark):

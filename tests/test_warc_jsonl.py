@@ -89,7 +89,7 @@ def test_read_warc_gzip(spark, tmp_path):
     buf = b"".join(build_warc_record(f"r{i}".encode()) for i in range(3))
     p = tmp_path / "sample.warc.gz"
     p.write_bytes(gzip.compress(buf))
-    out = read_warc(spark, str(p), gzip_per_file=True)
+    out = read_warc(spark, str(p))
     assert out.count() == 3
 
 
@@ -127,7 +127,7 @@ def test_read_warc_multimember_gzip(spark, tmp_path):
     )
     p = tmp_path / "cc.warc.gz"
     p.write_bytes(buf)
-    out = read_warc(spark, str(p), gzip_per_file=True).orderBy("record_idx")
+    out = read_warc(spark, str(p)).orderBy("record_idx")
     rows = out.collect()
     assert [r["payload"] for r in rows] == [f"member {i}".encode() for i in range(4)]
     assert all(r["n_parse_errors"] == 0 for r in rows)
